@@ -5,7 +5,7 @@
 Runs one workload (serve, pipeline or corpus; see workloads.py) in this
 process from the root of a source checkout: it generates the workload's
 tables from ``--seed``, starts a ``local[N]`` session with N the usable
-cores, runs the warm pass, then repeats the workload's operation until
+cores, sets the workload up, then repeats the workload's operation until
 ``--seconds`` of operation time have passed, checks every output against
 DuckDB, and prints one JSON line last:
 
@@ -49,10 +49,10 @@ def parse_args(argv):
     return ap.parse_args(argv)
 
 
-def _p90(values: list[float]) -> float:
+def _percentile(values: list[float], pct: int) -> float:
     if len(values) < 2:
         return values[0]
-    return statistics.quantiles(values, n=10, method="inclusive")[8]
+    return statistics.quantiles(values, n=100, method="inclusive")[pct - 1]
 
 
 def _cpu_ticks() -> tuple[int, int]:
@@ -60,6 +60,15 @@ def _cpu_ticks() -> tuple[int, int]:
     with open("/proc/stat") as f:
         fields = [int(x) for x in f.readline().split()[1:]]
     return fields[7], sum(fields[:8])
+
+
+def _peak_rss_mb(pids: list[int]) -> float:
+    """Sum of the processes' high-water resident set sizes."""
+    kb = 0
+    for pid in pids:
+        with open(f"/proc/{pid}/status") as f:
+            kb += next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
+    return kb / 1024
 
 
 def _descendants(pid: int) -> list[int]:
@@ -156,17 +165,16 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
     tempfile.tempdir = None
 
     from a3_fp_bigdata_spark.session import local_session
+    from pyspark import SparkContext
     from spans import Tracer
     from workloads import WORKLOADS
 
     cores = len(os.sched_getaffinity(0))
     spark = local_session(cores=cores, extra_conf=_session_conf(scratch, log_dir))
     try:
-        tracer = Tracer(spark, enabled=False)
+        tracer = Tracer(spark, enabled=trace)
         wl = WORKLOADS[workload](spark, tracer, scratch, seed, size)
-        wl.warm()
-        tracer.enabled = trace
-        wl.ready()
+        wl.setup()
         setup_s = time.perf_counter() - _T0
 
         walls: list[float] = []
@@ -174,11 +182,14 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
         while not walls or sum(walls) < seconds:
             walls.append(wl.op())
         steal1, total1 = _cpu_ticks()
+        # this Python process and its JVM, read before the DuckDB checks
+        # run in this process
+        peak_rss_mb = _peak_rss_mb([os.getpid(), SparkContext._gateway.proc.pid])
         failed = wl.verify()
         metrics = {
             "setup_s": setup_s,
             "p50_ms": statistics.median(walls) * 1000,
-            "p90_ms": _p90(walls) * 1000,
+            "p90_ms": _percentile(walls, 90) * 1000,
             "ops_per_s": len(walls) / sum(walls),
         }
         attempted = len(walls)
@@ -214,9 +225,16 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
     # CPU time the hypervisor gave to other guests during the timed
     # operations: a noisy host shows here, not in the program
     steal_share = (steal1 - steal0) / max(1, total1 - total0)
-    facts = {"workload": workload, "seed": seed, "cores": cores,
-             "samples": len(walls), "host_steal_share": round(steal_share, 4),
-             **wl.info()}
+    # end-to-end figures BENCHMARK.json leaves out (see README.md)
+    facts = {
+        "workload": workload, "seed": seed, "cores": cores,
+        "samples": len(walls), "host_steal_share": round(steal_share, 4),
+        **wl.info(),
+        "run_s": {"value": sum(walls), "unit": "s"},
+        "p95_ms": {"value": _percentile(walls, 95) * 1000, "unit": "ms"},
+        "peak_rss_mb": {"value": peak_rss_mb, "unit": "MB"},
+        "failed_ratio": {"value": failed / attempted, "unit": "1"},
+    }
     return result, facts
 
 
