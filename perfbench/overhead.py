@@ -2,7 +2,7 @@
 fresh process with the same seed, and print the traced minus the
 untraced value of every end-to-end metric.
 
-    python3 perfbench/overhead.py --workload serve --seed 1 --seconds 15
+    python3 perfbench/overhead.py --workload serve --seed 1 --seconds 20
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--seconds", type=float, default=20)
     args = ap.parse_args(argv)
     plain = _run(args.workload, args.seed, args.seconds, 0)
     traced = _run(args.workload, args.seed, args.seconds, 1)

@@ -1,13 +1,14 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 20 --trace 0
 
 Runs one workload (serve, pipeline or corpus; see workloads.py) in this
 process from the root of a source checkout: it generates the workload's
-tables from ``--seed``, starts a ``local[N]`` session with N the usable
-cores, sets the workload up, then repeats the workload's operation until
-``--seconds`` of operation time have passed, checks every output against
-DuckDB, and prints one JSON line last:
+tables from ``--seed``, then starts a ``local[N]`` session with N the
+usable cores and sets the workload up (``setup_s`` is process start to
+ready, less the table generation). It repeats the workload's operation
+until ``--seconds`` of operation time have passed, checks every output
+against DuckDB, and prints one JSON line last:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -69,6 +70,21 @@ def _peak_rss_mb(pids: list[int]) -> float:
         with open(f"/proc/{pid}/status") as f:
             kb += next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
     return kb / 1024
+
+
+def _tree_cpu_s(jvm: int) -> float:
+    """User plus system CPU time so far of this process, the JVM and the
+    JVM's children (the Python workers). Time the hypervisor gave to
+    other guests is not in it."""
+    ticks = 0
+    for pid in (os.getpid(), jvm, *_descendants(jvm)):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # a worker that has exited
+            continue
+        ticks += int(fields[11]) + int(fields[12])
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def _descendants(pid: int) -> list[int]:
@@ -169,28 +185,36 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
     from spans import Tracer
     from workloads import WORKLOADS
 
+    # the benchmark's own preparation (seeded tables, request
+    # parameters) is left out of setup_s
+    t0 = time.perf_counter()
+    wl = WORKLOADS[workload](scratch, seed, size)
+    harness_s = time.perf_counter() - t0
+
     cores = len(os.sched_getaffinity(0))
     spark = local_session(cores=cores, extra_conf=_session_conf(scratch, log_dir))
     try:
-        tracer = Tracer(spark, enabled=trace)
-        wl = WORKLOADS[workload](spark, tracer, scratch, seed, size)
-        wl.setup()
-        setup_s = time.perf_counter() - _T0
+        wl.setup(spark, Tracer(spark, enabled=trace))
+        setup_s = time.perf_counter() - _T0 - harness_s
 
+        jvm = SparkContext._gateway.proc.pid
         walls: list[float] = []
         steal0, total0 = _cpu_ticks()
+        cpu0 = _tree_cpu_s(jvm)
         while not walls or sum(walls) < seconds:
             walls.append(wl.op())
+        cpu1 = _tree_cpu_s(jvm)
         steal1, total1 = _cpu_ticks()
         # this Python process and its JVM, read before the DuckDB checks
         # run in this process
-        peak_rss_mb = _peak_rss_mb([os.getpid(), SparkContext._gateway.proc.pid])
+        peak_rss_mb = _peak_rss_mb([os.getpid(), jvm])
         failed = wl.verify()
         metrics = {
             "setup_s": setup_s,
             "p50_ms": statistics.median(walls) * 1000,
             "p90_ms": _percentile(walls, 90) * 1000,
             "ops_per_s": len(walls) / sum(walls),
+            "cpu_ms_per_op": (cpu1 - cpu0) / len(walls) * 1000,
         }
         attempted = len(walls)
         if trace:
@@ -198,7 +222,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
             attempted += extra_attempted
             failed += extra_failed
             spark.stop()  # completes the event log
-            layers = wl.layers(tracer.fold_event_log(log_dir))
+            layers = wl.layers(wl.tracer.fold_event_log(log_dir))
             metrics = {**layers, **{f"traced.{k}": v for k, v in metrics.items()}}
     finally:
         _stop_jvm(spark)
@@ -226,10 +250,13 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
     # operations: a noisy host shows here, not in the program
     steal_share = (steal1 - steal0) / max(1, total1 - total0)
     # end-to-end figures BENCHMARK.json leaves out (see README.md)
+    p90 = _percentile(walls, 90)
     facts = {
         "workload": workload, "seed": seed, "cores": cores,
-        "samples": len(walls), "host_steal_share": round(steal_share, 4),
+        "samples": len(walls), "samples_above_p90": sum(w > p90 for w in walls),
+        "host_steal_share": round(steal_share, 4),
         **wl.info(),
+        "harness_s": {"value": harness_s, "unit": "s"},
         "run_s": {"value": sum(walls), "unit": "s"},
         "p95_ms": {"value": _percentile(walls, 95) * 1000, "unit": "ms"},
         "peak_rss_mb": {"value": peak_rss_mb, "unit": "MB"},

@@ -4,9 +4,9 @@ functions and keeps what its output checks need.
 Warm policy. Every run is a fresh process with a fresh ``local[N]``
 session. ``serve``'s ``setup`` runs ``build_app`` in the cold session,
 as a server that has just started does, then warms with
-``WARM_BLOCKS`` blocks of untimed requests, so the timed requests see
-warm JIT, codegen and Python workers, as a long-running server's
-requests do. ``pipeline`` and ``corpus`` are batch jobs: their timed
+``WARM_BLOCKS`` blocks of untimed requests from concurrent clients, so
+the timed requests see warm JIT, codegen and Python workers, as a
+long-running server's requests do. ``pipeline`` and ``corpus`` are batch jobs: their timed
 operation is the first pass in the fresh session, with cold JIT and
 cold in-session stage memos, as a job submitted for a new batch of
 input or a new corpus snapshot pays them. Operations after the first
@@ -23,7 +23,9 @@ import importlib
 import os
 import shutil
 import statistics
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from urllib.parse import quote, urlencode
 
 import numpy as np
@@ -45,9 +47,10 @@ SIZES = {
 class Workload:
     tables: tuple[str, ...] = ()
 
-    def __init__(self, spark, tracer, scratch: str, seed: int, size: str):
-        self.spark = spark
-        self.tracer = tracer
+    def __init__(self, scratch: str, seed: int, size: str):
+        """The benchmark's own preparation, before the session starts:
+        the seeded input tables (and, for ``serve``, the request
+        parameters). It is not part of ``setup_s``."""
         self.scratch = os.path.join(scratch, self.name)
         self.seed = seed
         self.size = size
@@ -59,8 +62,10 @@ class Workload:
     def info(self) -> dict:
         return {"sf": self.sf}
 
-    def setup(self) -> None:
-        pass
+    def setup(self, spark, tracer) -> None:
+        """The program's set-up, timed as ``setup_s``."""
+        self.spark = spark
+        self.tracer = tracer
 
     def breakdown(self) -> tuple[int, int]:
         """Traced runs only: extra untimed work whose layers the traced
@@ -72,23 +77,21 @@ class Workload:
 # serve
 # ---------------------------------------------------------------------------
 
-#: Request mix: requests per route in each block of 20. Blocks are
-#: shuffled by the seed, so every run sends the same mix in its own
-#: order and the latency quantiles do not move with the draw. The
-#: slowest route (recommend_similar_app_by_name, 3 jobs) is 15% of the
-#: mix, so p90 falls inside its latencies rather than on the edge
-#: between it and the next slowest route, where it jumped run to run.
+#: Request mix: requests per route in each block of 16. No recorded
+#: traffic for the served app exists, so every route gets the same
+#: share; this is an assumption, not a measurement. Blocks are shuffled
+#: by the seed, so every run sends the same mix in its own order.
 ROUTE_WEIGHTS = {
-    "check_data": 1,
+    "check_data": 2,
     "categories": 2,
-    "search_app_suggestions": 3,
-    "app_details_by_id": 3,
-    "recommend_apps_by_category": 3,
-    "top_apps": 3,
-    "recommend_similar_app_by_name": 3,
+    "search_app_suggestions": 2,
+    "app_details_by_id": 2,
+    "recommend_apps_by_category": 2,
+    "top_apps": 2,
+    "recommend_similar_app_by_name": 2,
     "apps_in_cluster": 2,
 }
-#: One request per block (5%) is built to fail: a 1-char search, an
+#: One request per block (1 in 16) is built to fail: a 1-char search, an
 #: unknown order id, a bad sort_by or an unknown vector id. It counts as
 #: correct when it comes back with its error status.
 _ERROR_ROUTES = (
@@ -97,13 +100,13 @@ _ERROR_ROUTES = (
     "top_apps",
     "recommend_similar_app_by_name",
 )
-#: Untimed request blocks sent after one request of each kind (92
-#: requests in all): request latency keeps falling over a session's
-#: first ~110 requests. Longer warm-ups cost ~4 s of setup per block and
-#: did not make runs repeat more closely. The warm-up uses the timed app:
-#: one over sf0.01 tables left the first half of the timed requests up to
-#: 25% slower than the second.
-WARM_BLOCKS = 4
+#: Untimed request blocks sent after one request of each kind (172
+#: requests in all), by one client thread per core: request latency
+#: keeps falling over a session's first ~200 requests, and concurrent
+#: clients get there in about half the time one client takes. The
+#: warm-up uses the timed app: one over sf0.01 tables left the first
+#: half of the timed requests up to 25% slower than the second.
+WARM_BLOCKS = 10
 _TOP_SORT_COLS = ("o_totalprice", "o_orderdate", "o_orderkey", "o_custkey")
 
 
@@ -184,9 +187,8 @@ class Serve(Workload):
 
     def __init__(self, *a, **k):
         super().__init__(*a, **k)
-        from a3_fp_bigdata_spark import serving_http
-
-        self.serving_http = serving_http
+        self.warm = Requests(self.data_dir, self.seed + 1)
+        self.requests = Requests(self.data_dir, self.seed)
         self.log: list[tuple] = []
 
     def info(self) -> dict:
@@ -199,18 +201,28 @@ class Serve(Workload):
             body = resp.get_json(silent=True)
         return resp.status_code, body
 
-    def setup(self) -> None:
-        with self.tracer.span("serving_http.build_app"):
-            app = self.serving_http.build_app(self.spark, self.data_dir)
+    def setup(self, spark, tracer) -> None:
+        from a3_fp_bigdata_spark import serving_http
+
+        super().setup(spark, tracer)
+        with tracer.span("serving_http.build_app"):
+            app = serving_http.build_app(spark, self.data_dir)
         self.client = app.test_client()
         # the warm-up requests open no span, so the route layers count
         # only the timed requests
-        warm = Requests(self.data_dir, self.seed + 1)
-        for req in warm.one_of_each():
-            self.client.get(req[1])
-        for _ in range(WARM_BLOCKS * sum(ROUTE_WEIGHTS.values())):
-            self.client.get(warm.next()[1])
-        self.requests = Requests(self.data_dir, self.seed)
+        urls = [req[1] for req in self.warm.one_of_each()] + [
+            self.warm.next()[1]
+            for _ in range(WARM_BLOCKS * sum(ROUTE_WEIGHTS.values()))
+        ]
+        clients = threading.local()
+
+        def send(url: str) -> None:
+            if not hasattr(clients, "c"):
+                clients.c = app.test_client()
+            clients.c.get(url)
+
+        with ThreadPoolExecutor(len(os.sched_getaffinity(0))) as pool:
+            list(pool.map(send, urls))
 
     def op(self) -> float:
         req = self.requests.next()
@@ -234,8 +246,8 @@ class Serve(Workload):
         """The reference dataflow that feeds a served table, run once
         after the timed requests so its calls' layers are measured on
         this workload too (JIT warm from serving, memos cold)."""
-        self.pipeline = Pipeline(self.spark, self.tracer, self.scratch, self.seed,
-                                 self.size)
+        self.pipeline = Pipeline(self.scratch, self.seed, self.size)
+        self.pipeline.setup(self.spark, self.tracer)
         self.pipeline.op()
         return 1, self.pipeline.verify()
 
