@@ -6,8 +6,8 @@ Runs one workload (serve, pipeline or corpus; see workloads.py) in this
 process from the root of a source checkout: it generates the workload's
 tables from ``--seed``, then starts a ``local[N]`` session with N the
 usable cores and sets the workload up (``setup_s`` is process start to
-ready, less the table generation). It repeats the workload's operation
-until ``--seconds`` of operation time have passed, checks every output
+ready, less the table generation). It runs the workload's operations
+for ``--seconds`` (see ``Workload.measure``), checks every output
 against DuckDB, and prints one JSON line last:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
@@ -198,11 +198,9 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
         setup_s = time.perf_counter() - _T0 - harness_s
 
         jvm = SparkContext._gateway.proc.pid
-        walls: list[float] = []
         steal0, total0 = _cpu_ticks()
         cpu0 = _tree_cpu_s(jvm)
-        while not walls or sum(walls) < seconds:
-            walls.append(wl.op())
+        walls, elapsed = wl.measure(seconds)
         cpu1 = _tree_cpu_s(jvm)
         steal1, total1 = _cpu_ticks()
         # this Python process and its JVM, read before the DuckDB checks
@@ -213,7 +211,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
             "setup_s": setup_s,
             "p50_ms": statistics.median(walls) * 1000,
             "p90_ms": _percentile(walls, 90) * 1000,
-            "ops_per_s": len(walls) / sum(walls),
+            "ops_per_s": len(walls) / elapsed,
             "cpu_ms_per_op": (cpu1 - cpu0) / len(walls) * 1000,
         }
         attempted = len(walls)
@@ -257,7 +255,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "benc
         "host_steal_share": round(steal_share, 4),
         **wl.info(),
         "harness_s": {"value": harness_s, "unit": "s"},
-        "run_s": {"value": sum(walls), "unit": "s"},
+        "run_s": {"value": elapsed, "unit": "s"},
         "p95_ms": {"value": _percentile(walls, 95) * 1000, "unit": "ms"},
         "peak_rss_mb": {"value": peak_rss_mb, "unit": "MB"},
         "failed_ratio": {"value": failed / attempted, "unit": "1"},

@@ -4,7 +4,7 @@ functions and keeps what its output checks need.
 Warm policy. Every run is a fresh process with a fresh ``local[N]``
 session. ``serve``'s ``setup`` runs ``build_app`` in the cold session,
 as a server that has just started does, then warms with
-``WARM_BLOCKS`` blocks of untimed requests from concurrent clients, so
+``WARM_BLOCKS`` blocks of untimed requests from ``CLIENTS`` clients, so
 the timed requests see warm JIT, codegen and Python workers, as a
 long-running server's requests do. ``pipeline`` and ``corpus`` are batch jobs: their timed
 operation is the first pass in the fresh session, with cold JIT and
@@ -12,7 +12,8 @@ cold in-session stage memos, as a job submitted for a new batch of
 input or a new corpus snapshot pays them. Operations after the first
 run with warm JIT; at the benchmark's run length there is one.
 
-``op`` is one timed operation; ``verify`` returns how many operations
+``measure`` runs the timed operations (``op``) for the run's seconds;
+``verify`` returns how many operations
 gave a wrong output or status. With a tracer on, ``layers`` returns the
 per-layer metrics.
 """
@@ -67,6 +68,14 @@ class Workload:
         self.spark = spark
         self.tracer = tracer
 
+    def measure(self, seconds: float) -> tuple[list[float], float]:
+        """Timed operations, one after another, until ``seconds`` of
+        operation time have passed; returns (operation walls, elapsed)."""
+        walls: list[float] = []
+        while not walls or sum(walls) < seconds:
+            walls.append(self.op())
+        return walls, sum(walls)
+
     def breakdown(self) -> tuple[int, int]:
         """Traced runs only: extra untimed work whose layers the traced
         run reports; returns (operations checked, operations wrong)."""
@@ -100,12 +109,17 @@ _ERROR_ROUTES = (
     "top_apps",
     "recommend_similar_app_by_name",
 )
+#: Closed-loop clients, one per usable core, for the warm-up and the
+#: timed window. Together they keep every core busy; one client left
+#: the cores mostly idle, and its latency then followed how long a
+#: shared host took to reschedule an idle vCPU (see README.md, Cost and
+#: spread).
+CLIENTS = len(os.sched_getaffinity(0))
 #: Untimed request blocks sent after one request of each kind (172
-#: requests in all), by one client thread per core: request latency
-#: keeps falling over a session's first ~200 requests, and concurrent
-#: clients get there in about half the time one client takes. The
-#: warm-up uses the timed app: one over sf0.01 tables left the first
-#: half of the timed requests up to 25% slower than the second.
+#: requests in all): request latency keeps falling over a session's
+#: first ~200 requests. The warm-up uses the timed app: one over sf0.01
+#: tables left the first half of the timed requests up to 25% slower
+#: than the second.
 WARM_BLOCKS = 10
 _TOP_SORT_COLS = ("o_totalprice", "o_orderdate", "o_orderkey", "o_custkey")
 
@@ -189,10 +203,11 @@ class Serve(Workload):
         super().__init__(*a, **k)
         self.warm = Requests(self.data_dir, self.seed + 1)
         self.requests = Requests(self.data_dir, self.seed)
+        self.lock = threading.Lock()
         self.log: list[tuple] = []
 
     def info(self) -> dict:
-        return {**super().info(), "route_weights": ROUTE_WEIGHTS}
+        return {**super().info(), "clients": CLIENTS, "route_weights": ROUTE_WEIGHTS}
 
     def _request(self, client, req) -> tuple[int, object]:
         route, url, _p, _s = req
@@ -206,8 +221,7 @@ class Serve(Workload):
 
         super().setup(spark, tracer)
         with tracer.span("serving_http.build_app"):
-            app = serving_http.build_app(spark, self.data_dir)
-        self.client = app.test_client()
+            self.app = serving_http.build_app(spark, self.data_dir)
         # the warm-up requests open no span, so the route layers count
         # only the timed requests
         urls = [req[1] for req in self.warm.one_of_each()] + [
@@ -218,19 +232,38 @@ class Serve(Workload):
 
         def send(url: str) -> None:
             if not hasattr(clients, "c"):
-                clients.c = app.test_client()
+                clients.c = self.app.test_client()
             clients.c.get(url)
 
-        with ThreadPoolExecutor(len(os.sched_getaffinity(0))) as pool:
+        with ThreadPoolExecutor(CLIENTS) as pool:
             list(pool.map(send, urls))
 
-    def op(self) -> float:
-        req = self.requests.next()
+    def op(self, client) -> float:
+        with self.lock:
+            req = self.requests.next()
         t0 = time.perf_counter()
-        status, body = self._request(self.client, req)
+        status, body = self._request(client, req)
         wall = time.perf_counter() - t0
         self.log.append((*req, status, body))
         return wall
+
+    def measure(self, seconds: float) -> tuple[list[float], float]:
+        """``CLIENTS`` closed-loop clients, each sending its next request
+        as soon as its last one returns, until ``seconds`` have passed."""
+        walls: list[float] = []
+        deadline = time.perf_counter() + seconds
+
+        def client() -> None:
+            c = self.app.test_client()
+            walls.append(self.op(c))
+            while time.perf_counter() < deadline:
+                walls.append(self.op(c))
+
+        t0 = time.perf_counter()
+        with ThreadPoolExecutor(CLIENTS) as pool:
+            for f in [pool.submit(client) for _ in range(CLIENTS)]:
+                f.result()
+        return walls, time.perf_counter() - t0
 
     def verify(self) -> int:
         con = oracle.connect(self.data_dir, self.tables)
