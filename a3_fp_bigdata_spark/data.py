@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from a3_fp_bigdata_spark import stages
+
 TABLES = (
     "region",
     "nation",
@@ -65,6 +67,11 @@ def widen_legacy_long_ts(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
 
 #: one warning per process when table() overrides a non-UTC timezone
 _TZ_WARNED = False
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    """Where ``table`` reads ``name`` from (also what stages snapshot)."""
+    return f"{sf_dir}/{name}.parquet"
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -117,7 +124,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 )
     except Exception:
         pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(table_path(sf_dir, name))
     return widen_legacy_long_ts(df, _TS_COLS.get(name, ()))
 
 
@@ -213,6 +220,15 @@ def read_stamped_scratch(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def fresh_scratch(prefix: str) -> str:
+    """A new empty dir per call (``mkdtemp``), removed at interpreter
+    exit with the run_scratch dirs — for runs that need their own
+    staging, output or checkpoint dir each time (streaming sinks)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _RUN_SCRATCH_DIRS.append(path)
+    return path
+
+
 def _cleanup_run_scratch() -> None:
     while _RUN_SCRATCH_DIRS:
         _shutil.rmtree(_RUN_SCRATCH_DIRS.pop(), ignore_errors=True)
@@ -246,12 +262,6 @@ def src_fingerprint(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-#: table_fingerprint's memo — the collected (n_src, src_ck) pair per
-#: (session, sf_dir, table, key, plan-semantic-hash). Two ints per
-#: entry; dead-session entries are harmless (the token never recurs).
-_FP_CACHE: dict[tuple, tuple[int, int]] = {}
-
-
 def table_fingerprint(
     spark: SparkSession,
     sf_dir: str,
@@ -260,9 +270,9 @@ def table_fingerprint(
     table_fn=None,
 ) -> DataFrame:
     """Memoized ``src_fingerprint`` over a named driver table: the
-    1-row (n_src, src_ck) stamp is collected ONCE per (session,
-    sf_dir, table, source-plan) and re-attached as a literal
-    LocalRelation.
+    1-row (n_src, src_ck) stamp is collected ONCE per (session, table
+    file snapshot, key, source-plan) as a stage (stages.py) and
+    re-attached as a literal LocalRelation.
 
     r15 optimization (guide §2.4 — don't recompute what can't have
     changed): every audit-scratch write used to re-run the stamp's
@@ -278,37 +288,23 @@ def table_fingerprint(
     the memo key includes the source frame's ``semanticHash()``, so a
     patched frame can never poison — or be poisoned by — the real
     table's cached stamp. The bounded 1-row collect is the same class
-    as the engine's other probes.
-
-    Known limit (ADVICE r15): ``semanticHash()`` keys the PLAN, not
-    the file bytes — rewriting the parquet at the same sf_dir path
-    mid-session would reuse the stale stamp. The failure mode is loud
-    (the oracle's ``fingerprint_where`` then matches zero scratch rows
-    and the query goes red, never silently green), and in-session
-    corpus immutability is this engine's documented contract; a flow
-    that regenerates a corpus in place must call
-    ``release_fingerprints()`` (and the stage releases) first."""
-    from a3_fp_bigdata_spark.session import session_token
-
+    as the engine's other probes. Rewriting the table's file in place
+    changes its snapshot, so the stamp is re-collected."""
     src = (table_fn or table)(spark, sf_dir, table_name)
-    key = (
-        session_token(spark),
-        sf_dir,
-        table_name,
-        key_col,
-        src.semanticHash(),
-    )
-    if key not in _FP_CACHE:
+
+    def stamp() -> tuple[int, int]:
         row = src_fingerprint(src, key_col).first()
-        _FP_CACHE[key] = (row["n_src"], row["src_ck"])
-    n, ck = _FP_CACHE[key]
+        return (row["n_src"], row["src_ck"])
+
+    n, ck = stages.get(
+        spark, "table_fingerprint", (key_col, src.semanticHash()), stamp,
+        [table_path(sf_dir, table_name)],
+    )
     return spark.createDataFrame([(n, ck)], "n_src long, src_ck long")
 
 
-def release_fingerprints() -> None:
-    """Clear table_fingerprint's stamp memo (test hygiene hook, the
-    release_shingle_stage pattern)."""
-    _FP_CACHE.clear()
+#: Kept only because perfbench imports this name: it drops every stage.
+release_fingerprints = stages.release_all
 
 
 def fingerprint_where(table_name: str, key_col: str) -> str:

@@ -36,12 +36,12 @@ from pyspark.ml.feature import HashingTF, IDF
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch, table
+from a3_fp_bigdata_spark.data import run_scratch, table, table_path
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark.operators.text_analysis import sample_predicate
+from a3_fp_bigdata_spark import stages
 from a3_fp_bigdata_spark.registry import query
-from a3_fp_bigdata_spark.session import session_token
 
 QUALITY_TAU = 0.66      # heuristic label floor (~median of tx2 at sf0.01)
 HASH_DIM = 1 << 13      # stateless hashing; sized to the corpus vocab
@@ -84,19 +84,20 @@ def build_quality_pipeline() -> Pipeline:
     )
 
 
-#: One fit per (session, sf_dir) — same protocol as pipelines._FIT_CACHE.
-_QF_CACHE: dict[tuple[str, str], tuple[DataFrame, PipelineModel]] = {}
-
-
 def fit_score(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, PipelineModel]:
     """Fit on the deterministic {FIT_SAMPLE_PCT}% split, score ALL docs.
 
-    Returns (scored frame with p_keep/keep columns, fitted model)."""
-    key = (session_token(spark), sf_dir)
-    if key in _QF_CACHE:
-        return _QF_CACHE[key]
+    Returns (scored frame with p_keep/keep columns, fitted model); one
+    fit per documents snapshot (stages.py)."""
+    return stages.get(
+        spark, "quality_fit", (), lambda: _fit(spark, sf_dir),
+        [table_path(sf_dir, "documents")],
+    )
+
+
+def _fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, PipelineModel]:
     feats = _featurized(spark, sf_dir)
     fit_rows = feats.filter(
         sample_predicate(F.col("doc_id"), FIT_SAMPLE_PCT)
@@ -116,8 +117,7 @@ def fit_score(
         .cast("int")
         .alias("in_fit"),
     )
-    _QF_CACHE[key] = (scored, model)
-    return _QF_CACHE[key]
+    return (scored, model)
 
 
 _ML4_SCORE_SCRATCH = run_scratch("ml4_scores")

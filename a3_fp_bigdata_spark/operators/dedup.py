@@ -28,14 +28,15 @@ from a3_fp_bigdata_spark.data import (
     run_scratch,
     table_fingerprint,
     table,
+    table_path,
 )
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark.operators.text_analysis import _SQL_NORM, _SQL_TOKS
 from pyspark import StorageLevel
 
+from a3_fp_bigdata_spark import stages
 from a3_fp_bigdata_spark.registry import _PINNED, pin, query
-from a3_fp_bigdata_spark.session import session_token
 
 from a3_fp_bigdata_spark.pickling import ship_by_value
 
@@ -45,7 +46,10 @@ SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.3
 MINHASH_HASHES = 32
 MINHASH_BANDS = 16  # 2 rows/band: ~78% recall at j=0.3, ~99% at j=0.5
-MAX_BUCKET_DOCS = 64  # super-bucket cap: an s-doc bucket emits s^2 pairs
+#: super-bucket cap: an s-doc bucket emits s^2 candidate pairs, so one
+#: boilerplate cluster could quadratically explode the pair step.
+#: Near-dups lost to the cap in ONE band still collide in the other 15.
+MAX_BUCKET_DOCS = 64
 
 
 # DuckDB rendering of _shingle_rows() — keep in sync (1-based list indexing;
@@ -199,98 +203,42 @@ def _exact_jaccard_pairs(ex: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-#: The ONE deliberate long-lived cache in the engine: the distinct
-#: (doc_id, shingle) stage feeds d3 (exact pairs), d4 (minhash+LSH) and
-#: d5 (simhash) in the same session — exactly the production shape,
-#: where the shingle table is staged once and every dedup rung reads
-#: it. Keyed per (session, sf_dir); MEMORY_AND_DISK so the worst case
-#: is spill, not OOM. Per-query pin()/release_pinned() hygiene does
-#: NOT drop this (dropping it made d4 rebuild the stage d3 had just
-#: built - a measured +6 s at sf0.1); release_shingle_stage() exists
-#: for tests/sessions that need the memory back.
-_SHINGLE_STAGE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _session_stopped(df: DataFrame) -> bool:
-    """True when the session that built `df` has been stopped (its JVM
-    context is gone). Used by the stage memos to evict DEAD entries
-    only: evicting everything not owned by the current caller (the old
-    policy) made two live sessions purge each other's caches on every
-    interleaved call — rebuild thrash plus unpersisting a frame the
-    other session may still be using."""
-    try:
-        return df.sparkSession.sparkContext._jsc is None
-    except Exception:
-        return True
-
-
-def _evict_dead_entries(stage: dict, *, unpersist: bool) -> None:
-    stale = [k for k, df in stage.items() if _session_stopped(df)]
-    for k in stale:
-        df = stage.pop(k)
-        if unpersist:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
-
 def staged_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_token(spark), sf_dir)
-    # the cached frame strongly references its session, so a matching
-    # key always belongs to a LIVE session with that id. Entries whose
-    # session has been stopped would pin dead plans forever — evict
-    # those (and only those; other live sessions keep their stages).
-    _evict_dead_entries(_SHINGLE_STAGE, unpersist=True)
-    if key not in _SHINGLE_STAGE:
-        _SHINGLE_STAGE[key] = _shingle_rows(spark, sf_dir).persist(
+    """The distinct (doc_id, shingle) stage, staged once per corpus and
+    read by d3 (exact pairs), d4 (minhash+LSH) and d5 (simhash) — the
+    production shape, where every dedup rung reads one shingle table.
+    MEMORY_AND_DISK so the worst case is spill, not OOM. Per-query
+    release_pinned() does not drop it (dropping it made d4 rebuild the
+    stage d3 had just built: a measured +6 s at sf0.1)."""
+    return stages.get(
+        spark, "shingles", (),
+        lambda: _shingle_rows(spark, sf_dir).persist(
             StorageLevel.MEMORY_AND_DISK
-        )
-    return _SHINGLE_STAGE[key]
-
-
-def release_shingle_stage() -> None:
-    while _SHINGLE_STAGE:
-        _, df = _SHINGLE_STAGE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-#: The staged MinHash signature/bucket table, memoized per (session,
-#: sf_dir) like the shingle stage it derives from: d4 (full pair mine)
-#: and d11 (nightly incremental probe) consume the SAME bucket rows,
-#: and production materializes the bucket table once per corpus
-#: snapshot, written bucketed by (band, sig), so the nightly probe
-#: partition-prunes instead of recomputing 32 hashes over the corpus.
-#: Since r15 the stage holds the RAW (pre-cap) rows — d4's scratch
-#: write needs them, and the cap is one window pass over the persisted
-#: frame — consumers apply _cap_buckets on read.
-_BUCKET_STAGE: dict[tuple[str, str], DataFrame] = {}
+        ),
+        [table_path(sf_dir, "documents")],
+    )
 
 
 def staged_raw_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_token(spark), sf_dir)
-    _evict_dead_entries(_BUCKET_STAGE, unpersist=True)
-    if key not in _BUCKET_STAGE:
-        _BUCKET_STAGE[key] = minhash_raw_buckets(
-            staged_shingles(spark, sf_dir)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _BUCKET_STAGE[key]
+    """The staged (doc_id, band, sig) MinHash rows, before the
+    super-bucket cap: d4 (full pair mine) and d11 (nightly incremental
+    probe) read the same rows, as production materializes the bucket
+    table once per corpus snapshot. Both apply the cap at group level
+    (size of the bucket's doc list <= MAX_BUCKET_DOCS)."""
+    return stages.get(
+        spark, "raw_buckets", (),
+        lambda: minhash_raw_buckets(staged_shingles(spark, sf_dir)).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
+        [table_path(sf_dir, "documents")],
+    )
 
 
-def staged_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cap_buckets(staged_raw_buckets(spark, sf_dir))
-
-
-def release_bucket_stage() -> None:
-    while _BUCKET_STAGE:
-        _, df = _BUCKET_STAGE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+#: Kept only because perfbench imports these names: each drops every
+#: stage (stages.release_all).
+release_shingle_stage = release_bucket_stage = release_cluster_stage = (
+    stages.release_all
+)
 
 
 # d3's oracle, split into composable pieces so d12's recursive-CTE
@@ -331,7 +279,7 @@ def d3_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB use d4_minhash_lsh and keep this for verification samples."""
     # staged_shingles: the pairs computation references the shingle
     # frame three times (per-doc counts + both self-join sides), and
-    # d4/d5 reuse the same stage — see the _SHINGLE_STAGE note.
+    # d4/d5 reuse the same stage — see staged_shingles.
     return _exact_jaccard_pairs(
         staged_shingles(spark, sf_dir), JACCARD_THRESHOLD
     )
@@ -340,7 +288,8 @@ def d3_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_raw_buckets(ex: DataFrame) -> DataFrame:
     """(doc_id, band, sig) LSH bucket rows from (doc_id, shingle) rows:
     32 seeded minhashes -> 16 bands of 2 — BEFORE the super-bucket cap
-    (the cap is `_cap_buckets`, split out in r15 so d4 can materialize
+    (d4 and d11 apply the cap at group level; split out in r15 so d4
+    can materialize
     the raw signature rows to scratch and both engines replay the cap
     + collision + verification chain from the same table)."""
     # xxhash64(seed, shingle) is Spark-deterministic across sessions.
@@ -365,29 +314,6 @@ def minhash_raw_buckets(ex: DataFrame) -> DataFrame:
     return mins.select(
         "doc_id", F.explode(band_sigs).alias("bs")
     ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-
-
-def _cap_buckets(buckets: DataFrame) -> DataFrame:
-    """Super-bucket guard: a bucket of s docs emits s^2 candidate
-    pairs, so one boilerplate cluster (cookie banners, templated pages
-    — or plain exact copies, which belong to d1's ladder rung anyway)
-    can quadratically explode the join. Cap the bucket size; a window
-    count over (band, sig) costs one pass over the already-shuffled
-    bucket rows. Near-dups lost to the cap in ONE band still collide
-    in the other 15."""
-    w_bucket = Window.partitionBy("band", "sig")
-    return (
-        buckets.withColumn("_bsize", F.count("*").over(w_bucket))
-        .filter(F.col("_bsize") <= MAX_BUCKET_DOCS)
-        .drop("_bsize")
-    )
-
-
-def minhash_band_buckets(ex: DataFrame) -> DataFrame:
-    """(doc_id, band, sig) LSH bucket rows with the super-bucket cap
-    applied. Shared by d4 (full self-join) and d11 (incremental
-    probe)."""
-    return _cap_buckets(minhash_raw_buckets(ex))
 
 
 #: d4's band-signature scratch (r15 — d5's exact recipe one rung up
@@ -465,21 +391,21 @@ def d4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides if ground truth agrees on its jaccard. Audit-scale
     note: the scratch is 16 rows per doc — far smaller than d5's
     per-token scratch; the production path writes the same bucket
-    table per corpus snapshot anyway (the _BUCKET_STAGE note), so
+    table per corpus snapshot anyway (see staged_raw_buckets), so
     the materialization IS the production shape, not an audit tax.
     """
     # The shingle frame feeds the minhash agg, the candidate pruning and
     # the exact verification; without persist, Spark INLINES the whole
     # subtree at every reference (a ~22x plan blowup measured at sf0.01 —
     # DataFrames share no common subexpressions across an unshared DAG).
-    # Persisting is also the production shape: the _SHINGLE_STAGE
+    # Persisting is also the production shape: the staged_shingles
     # cache holds the table once per session, shared with d3/d5.
     # Distinct-first: although min() wouldn't need set semantics,
     # deduping BEFORE the 32-hash agg measured faster than skipping the
     # shuffle (fewer rows to hash 32x beats one saved exchange).
     ex = staged_shingles(spark, sf_dir)
-    # staged_raw_buckets: the signature table is memoized per
-    # (session, sf_dir) and SHARED with d11's nightly probe — computing
+    # staged_raw_buckets: the signature table is one stage per corpus
+    # snapshot, SHARED with d11's nightly probe — computing
     # the 32-hash agg once per corpus snapshot is the production shape.
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
     staged_raw_buckets(spark, sf_dir).crossJoin(
@@ -489,7 +415,7 @@ def d4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Candidate pairs WITHOUT a bucket self-join: collect each bucket's
     # doc list and explode its pairs in place. The super-bucket cap is
     # applied at GROUP level (size(ds) <= MAX_BUCKET_DOCS) instead of
-    # routing the read-back through _cap_buckets' count window: the
+    # routing the read-back through a (band, sig) count window: the
     # window partitioned by exactly the groupBy keys added a full sort
     # + WindowExec pass over the same exchange for a predicate the
     # grouped row answers for free — bucket size IS size(ds). Values
@@ -1433,7 +1359,7 @@ def d11_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ex = staged_shingles(spark, sf_dir)
-    # the staged signature table d4 built (memoized per session/sf):
+    # the staged signature table d4 built (one stage per corpus snapshot):
     # the nightly probe reads it instead of re-hashing the corpus
     buckets = staged_raw_buckets(spark, sf_dir)
     # d4's join-free in-bucket pair explode, with a new-member filter
@@ -1444,7 +1370,7 @@ def d11_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split), so it rides along as a struct field: no probe join and no
     # second reference to the bucket table. The super-bucket cap is
     # applied at GROUP level like d4's (r16): size(ds) <= MAX_BUCKET_DOCS
-    # is exactly _cap_buckets' per-bucket count predicate, without the
+    # is exactly the per-bucket count predicate, without the
     # count window's sort pass over the same exchange. Corpus-vs-corpus
     # pairs are dropped inside the per-bucket pair transform before
     # they ever become rows.
@@ -1582,33 +1508,14 @@ def d11_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CC_MAX_ITERS = 25  # propagation rounds; components here have tiny diameter
 
-#: Converged cluster tables memoized per (session, sf_dir) — see
-#: d12_dedup_clusters docstring. release_cluster_stage() drops them.
-_CLUSTER_STAGE: dict[tuple[str, str], DataFrame] = {}
-
-
-#: Cluster-member counts memoized alongside _CLUSTER_STAGE — the
-#: drop-set size guard (d13/d14/pl1) reads the same number, so one
-#: count job per (session, sf_dir) serves every consumer.
-_CLUSTER_COUNT: dict[tuple[str, str], int] = {}
-
-
 def _cluster_member_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (session_token(spark), sf_dir)
-    if key not in _CLUSTER_COUNT:
-        n = d12_dedup_clusters(spark, sf_dir).count()
-        # d12's accessor just evicted dead sessions' stage entries;
-        # mirror that here so a recycled id can't serve a stale count
-        for k in [k for k in _CLUSTER_COUNT if k not in _CLUSTER_STAGE]:
-            _CLUSTER_COUNT.pop(k)
-        _CLUSTER_COUNT[key] = n
-    return _CLUSTER_COUNT[key]
-
-
-def release_cluster_stage() -> None:
-    while _CLUSTER_STAGE:
-        _CLUSTER_STAGE.popitem()
-    _CLUSTER_COUNT.clear()
+    """d12's row count: the drop-set size guard (d13/d14/pl1) reads the
+    same number, so one count job per corpus serves every consumer."""
+    return stages.get(
+        spark, "cluster_count", (),
+        lambda: d12_dedup_clusters(spark, sf_dir).count(),
+        [table_path(sf_dir, "documents")],
+    )
 
 
 #: Broadcast a dedup drop set only while it is provably small. "The
@@ -1761,28 +1668,27 @@ def d12_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-partitioned joins, nothing driver-side but the empty-check.
     The oracle is the same closure as a DuckDB recursive CTE.
 
-    Like the shingle stage, the converged cluster table is memoized per
-    (session, sf_dir): d13 (min-id corpus), d14 (quality keeper) and
+    Like the shingle stage, the converged cluster table is a shared
+    stage (stages.py): d13 (min-id corpus), d14 (quality keeper) and
     pl1 (manifest) all consume it, and production materializes the
     cluster table once per corpus snapshot rather than re-running the
     propagation per downstream policy. The cached frame is
     localCheckpoint-backed (materialized), so reuse costs a scan."""
-    key = (session_token(spark), sf_dir)
-    # evict only DEAD sessions' entries — see _session_stopped
-    _evict_dead_entries(_CLUSTER_STAGE, unpersist=False)
-    if key in _CLUSTER_STAGE:
-        return _CLUSTER_STAGE[key]
+    return stages.get(
+        spark, "clusters", (), lambda: _build_clusters(spark, sf_dir),
+        [table_path(sf_dir, "documents")],
+    )
+
+
+def _build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = pin(
         d3_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     )
     labels, _rounds = connected_components(spark, pairs)
-    # NOT added to _PINNED: the memo outlives per-query release_pinned()
-    # (same policy as _SHINGLE_STAGE); the frame is tiny — cluster
-    # members only — and localCheckpoint-backed.
-    _CLUSTER_STAGE[key] = labels.select(
-        "doc_id", F.col("lab").alias("cluster_id")
-    )
-    return _CLUSTER_STAGE[key]
+    # NOT added to _PINNED: the stage outlives per-query
+    # release_pinned(); the frame is tiny — cluster members only — and
+    # localCheckpoint-backed.
+    return labels.select("doc_id", F.col("lab").alias("cluster_id"))
 
 
 @query(

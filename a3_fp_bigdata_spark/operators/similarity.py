@@ -20,7 +20,6 @@ the same association on both engines so rounded values match exactly.
 from __future__ import annotations
 
 import atexit
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,10 +29,11 @@ from a3_fp_bigdata_spark.data import (
     run_scratch,
     table_fingerprint,
     table,
+    table_path,
 )
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
+from a3_fp_bigdata_spark import stages
 from a3_fp_bigdata_spark.registry import pin, query
-from a3_fp_bigdata_spark.session import session_token
 
 NEARDUP_COSINE = 0.4
 N_PLANES = 8
@@ -242,11 +242,6 @@ def build_bucketed_ann_index(
     up-front bucketing pass; every later probe is a partition-pruned
     scan of ~corpus/2^{N_PLANES} vectors (PartitionFilters, asserted in
     tests/test_plans.py), not a full-table pass."""
-    # a rebuild at the same path invalidates any cached index frame —
-    # its file listing was taken at creation and is stale after the
-    # overwrite (FileNotFoundException or stale rows on the next probe)
-    for k in [k for k in _SIM4_IDX_DF if k[1] == out_dir]:
-        _SIM4_IDX_DF.pop(k)
     emb = table(spark, sf_dir, "embeddings")
     with_bucket = _attach_bucket(emb, _planes(emb))
     # cluster rows by bucket BEFORE the partitioned write: without it
@@ -261,19 +256,16 @@ def build_bucketed_ann_index(
     )
 
 
-#: index DataFrames per (session, dir): creating spark.read.parquet on
-#: a 2^{N_PLANES}-directory layout re-lists every partition dir; a probe
-#: should pay that once per session, not per query.
-_SIM4_IDX_DF: dict[tuple[str, str], DataFrame] = {}
-
-
 def _index_frame(spark: SparkSession, index_dir: str) -> DataFrame:
-    for k in [k for k, df in _SIM4_IDX_DF.items() if df.sparkSession is not spark]:
-        _SIM4_IDX_DF.pop(k)
-    key = (session_token(spark), index_dir)
-    if key not in _SIM4_IDX_DF:
-        _SIM4_IDX_DF[key] = spark.read.parquet(index_dir)
-    return _SIM4_IDX_DF[key]
+    """The index as a DataFrame, one per index write: creating
+    spark.read.parquet on a 2^{N_PLANES}-directory layout re-lists every
+    partition dir, and a probe should pay that once, not per query. A
+    rebuild or append rewrites the root _SUCCESS, so the stage's
+    snapshot changes and the stale listing is dropped."""
+    return stages.get(
+        spark, "ann_index_frame", (),
+        lambda: spark.read.parquet(index_dir), [index_dir],
+    )
 
 
 def probe_bucketed_ann(
@@ -332,29 +324,20 @@ def probe_bucketed_ann(
     )
 
 
-#: index dirs already built this session, keyed by (sf_dir, source
-#: mtime) — sweeps that run sim4 repeatedly probe the same materialized
-#: index instead of re-bucketing (exactly the production shape: build
-#: once, probe many). The mtime in the key invalidates the cache if the
-#: underlying embeddings table is rewritten mid-session; the dirs
-#: themselves are removed at interpreter exit (atexit below).
-_SIM4_INDEX: dict[tuple[str, float], str] = {}
-
-
-def _sim4_key(sf_dir: str) -> tuple[str, float]:
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = os.stat(src).st_mtime
-    except OSError:
-        mtime = -1.0
-    return (sf_dir, mtime)
+#: index dirs already built by this process, keyed by (sf_dir,
+#: embeddings snapshot) — sweeps that run sim4 repeatedly probe the
+#: same materialized index instead of re-bucketing (exactly the
+#: production shape: build once, probe many). The snapshot in the key
+#: (stages.snapshot) invalidates the entry if the embeddings table is
+#: rewritten; the dirs themselves are removed at interpreter exit
+#: (atexit below).
+_SIM4_INDEX: dict[tuple, str] = {}
 
 
 def release_sim4_index() -> None:
     """Delete every cached sim4 index dir (also runs via atexit)."""
     import shutil
 
-    _SIM4_IDX_DF.clear()
     while _SIM4_INDEX:
         _, path = _SIM4_INDEX.popitem()
         shutil.rmtree(path, ignore_errors=True)
@@ -370,7 +353,7 @@ def warm_sim4_index(spark: SparkSession, sf_dir: str) -> str:
     scale — not the one-time index build."""
     import tempfile
 
-    key = _sim4_key(sf_dir)
+    key = (sf_dir, stages.snapshot(table_path(sf_dir, "embeddings")))
     if key not in _SIM4_INDEX:
         out = tempfile.mkdtemp(prefix="a3_sim4_idx_")
         build_bucketed_ann_index(spark, sf_dir, out)
@@ -421,31 +404,28 @@ IVF_SEED = 7
 #: by sim11_ivf_recall_audit against DuckDB's own ground truth.
 _SIM3_SCRATCH = run_scratch("sim3_ivf_cells")
 
-#: (assigned-checkpoint, probe_cells) memoized per (session, sf_dir):
-#: the seeded KMeans fit is sim3's dominant cost and sim11's audit
-#: runs sim3 a second time in the same sweep — one fit serves both
-#: (the _SEMDEDUP_STAGE/_PQ_CB_STAGE protocol; ADVICE r14).
-_SIM3_STAGE: dict[tuple[str, str], tuple[DataFrame, list[int]]] = {}
-
 
 def _sim3_assignments(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[int]]:
     """((vec_id, cell) checkpoint, nprobe nearest cells to the query) —
-    the seed-internal half of sim3, fit once per session+sf."""
+    the seed-internal half of sim3. The seeded KMeans fit is sim3's
+    dominant cost and sim11's audit runs sim3 a second time in the same
+    sweep, so it is a stage (stages.py): one fit serves both."""
+    return stages.get(
+        spark, "sim3_cells", (), lambda: _fit_sim3_cells(spark, sf_dir),
+        [table_path(sf_dir, "embeddings")],
+    )
+
+
+def _fit_sim3_cells(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[int]]:
     from pyspark.ml.clustering import KMeans as MLKMeans
     from pyspark.ml.functions import array_to_vector
 
     import numpy as np
 
-    from a3_fp_bigdata_spark.operators.dedup import _session_stopped
-
-    key = (session_token(spark), sf_dir)
-    for k in [k for k, (df, _) in _SIM3_STAGE.items()
-              if _session_stopped(df)]:
-        _SIM3_STAGE.pop(k)
-    if key in _SIM3_STAGE:
-        return _SIM3_STAGE[key]
     emb = table(spark, sf_dir, "embeddings").withColumn(
         "vec", array_to_vector(F.col("embedding").cast("array<double>"))
     )
@@ -466,8 +446,7 @@ def _sim3_assignments(
     # (driver-side over k centroids only)
     d2 = ((centers - qvec) ** 2).sum(axis=1)
     probe_cells = [int(c) for c in np.argsort(d2)[:IVF_NPROBE]]
-    _SIM3_STAGE[key] = (assigned, probe_cells)
-    return _SIM3_STAGE[key]
+    return (assigned, probe_cells)
 
 
 def _sim3_oracle() -> str:
@@ -1123,8 +1102,6 @@ def append_to_bucketed_index(
     nothing existing is rewritten or even listed. Vectors are
     immutable rows, so append IS the correct merge (no upsert needed,
     unlike the keyed materialized views)."""
-    for k in [k for k in _SIM4_IDX_DF if k[1] == index_dir]:
-        _SIM4_IDX_DF.pop(k)  # cached listing is stale after append
     emb = table(spark, sf_dir, "embeddings")
     with_bucket = _attach_bucket(new_vectors, _planes(emb))
     (
@@ -1153,7 +1130,7 @@ def sim10_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized like warm_sim4_index: repeated invocations (bench
     # warmup + timed runs, sweep passes) probe the one materialized
     # base+appended index instead of rebuilding a full copy per call
-    key = ("sim10",) + _sim4_key(sf_dir)
+    key = ("sim10", sf_dir, stages.snapshot(table_path(sf_dir, "embeddings")))
     if key not in _SIM4_INDEX:
         out = tempfile.mkdtemp(prefix="a3_sim10_idx_")
         base, delta = emb.filter(~is_delta), emb.filter(is_delta)
@@ -1266,13 +1243,6 @@ PQ_ITERS = 25
 PQ_SHORTLIST = 10 * ANN_TOPK
 
 
-#: Codebooks memoized per (session, sf_dir) — tiny driver-side numpy
-#: arrays (M*K*dsub doubles), so no checkpoint needed; the audit runs
-#: sim12 a second time and must not re-pay the distributed fit (the
-#: "train once, encode forever" contract).
-_PQ_CB_STAGE: dict[tuple[str, str], "object"] = {}
-
-
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "object":
     """Train the PQ_M per-subspace codebooks (seeded Lloyd, PQ_ITERS
     fixed iterations) and return them as a numpy (M, K, dim/M) array.
@@ -1287,13 +1257,22 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "object":
     same bounded O(k*dim) driver-side footprint as sim3's cluster
     centers. At 100 TB you fit on a deterministic SAMPLE (codebooks
     need ~1e5-1e6 vectors, not the corpus) and ENCODE distributed —
-    the encode pass, not training, is the corpus-sized work."""
+    the encode pass, not training, is the corpus-sized work.
+
+    A stage (stages.py): the codebooks are tiny driver-side numpy
+    arrays (M*K*dsub doubles), so no checkpoint is needed, and the
+    audit runs sim12 a second time without re-paying the distributed
+    fit (the "train once, encode forever" contract)."""
+    return stages.get(
+        spark, "pq_codebooks", (), lambda: _fit_pq_codebooks(spark, sf_dir),
+        [table_path(sf_dir, "embeddings")],
+    )
+
+
+def _fit_pq_codebooks(spark: SparkSession, sf_dir: str) -> "object":
     import numpy as np
     import pandas as pd
 
-    key = (session_token(spark), sf_dir)
-    if key in _PQ_CB_STAGE:
-        return _PQ_CB_STAGE[key]
     emb = table(spark, sf_dir, "embeddings")
     dim = emb.select(F.size("embedding")).first()[0]
     dsub = dim // PQ_M
@@ -1345,7 +1324,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "object":
     cb = np.zeros((PQ_M, PQ_K, dsub))
     for r in rows:
         cb[r.m, r.k] = r.centroid
-    _PQ_CB_STAGE[key] = cb
     return cb
 
 
@@ -1564,28 +1542,27 @@ SEMDEDUP_EPS = NEARDUP_COSINE
 SEMDEDUP_CELL_CAP = 50_000
 
 
-#: Cell assignments memoized per (session, sf_dir, k) — the k-means fit
-#: is the dominant cost of d17 and its audit runs the query a second
-#: time, so one localCheckpoint-backed assignment serves both (the
-#: "materialize once per snapshot" story d17's docstring promises; at
-#: 100 TB this is a parquet table the IVF index shares). k is in the
-#: key because the SCALE harness scales the cell count with the corpus.
-_SEMDEDUP_STAGE: dict[tuple[int, str, int], DataFrame] = {}
-
-
 def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cell, embedding) — the seeded coarse k-means
     assignment (sim3's quantizer recipe, its own k so the dedup grain
-    is tunable independently of the ANN probe)."""
+    is tunable independently of the ANN probe).
+
+    A stage per (k, cap) (stages.py): the k-means fit is the dominant
+    cost of d17 and its audit runs the query a second time, so one
+    localCheckpoint-backed assignment serves both (the "materialize
+    once per snapshot" story d17's docstring promises; at 100 TB this
+    is a parquet table the IVF index shares). k is in the key because
+    the SCALE harness scales the cell count with the corpus."""
+    return stages.get(
+        spark, "semdedup_cells", (SEMDEDUP_CELLS, SEMDEDUP_CELL_CAP),
+        lambda: _fit_semdedup_cells(spark, sf_dir), [table_path(sf_dir, "embeddings")],
+    )
+
+
+def _fit_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans as MLKMeans
     from pyspark.ml.functions import array_to_vector
 
-    from a3_fp_bigdata_spark.operators.dedup import _evict_dead_entries
-
-    key = (session_token(spark), sf_dir, SEMDEDUP_CELLS, SEMDEDUP_CELL_CAP)
-    _evict_dead_entries(_SEMDEDUP_STAGE, unpersist=False)
-    if key in _SEMDEDUP_STAGE:
-        return _SEMDEDUP_STAGE[key]
     emb = table(spark, sf_dir, "embeddings").withColumn(
         "vec", array_to_vector(F.col("embedding").cast("array<double>"))
     )
@@ -1614,8 +1591,7 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
         )
     )
-    _SEMDEDUP_STAGE[key] = sharded.localCheckpoint()
-    return _SEMDEDUP_STAGE[key]
+    return sharded.localCheckpoint()
 
 
 #: d17's cell-assignment scratch (r14 flip to oracle-backed): the

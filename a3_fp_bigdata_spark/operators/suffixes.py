@@ -69,9 +69,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch, table
+from a3_fp_bigdata_spark import stages
+from a3_fp_bigdata_spark.data import run_scratch, table, table_path
 from a3_fp_bigdata_spark.registry import pin, query
-from a3_fp_bigdata_spark.session import session_token
 
 #: deterministic doc sample for the audit slice (~1/47 of the corpus —
 #: sized so even sf0.01's slice carries real >= SPAN_L repeats and the
@@ -131,33 +131,8 @@ def corpus_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.agg(F.array_join(ordered, SA_SEP).alias("s"))
 
 
-#: One construction per (session, sf_dir, mode): d21/d22/d23 consume
-#: the same array; the checkpointed rank blocks live for the session
-#: (the ml _FIT_CACHE protocol — release_pinned doesn't touch them).
-#: Mode is in the key so the equality-pin test can hold both builds.
-_SA_CACHE: dict[tuple[str, str, bool, int], DataFrame] = {}
-
-#: char-rows memo (same keying rationale as _SA_CACHE; cleared by the
-#: same tests that clear it)
-_ROWS_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-#: stitched-segment memo — the staged-table shape: ONE segment build
-#: per (session, sf_dir, modulus, width, overlap) serves the SA build's
-#: prefix keys, d22/d25's span projection and d23/d26's LCP staircase
-#: (each overlap width gets its own entry). Cleared wherever
-#: _SA_CACHE/_ROWS_CACHE are.
-_SEG_CACHE: dict[tuple[str, str, int, int, int], DataFrame] = {}
-
-
-def release_caches() -> None:
-    """Clear every suffix-family memo (_SA_CACHE, _ROWS_CACHE,
-    _SEG_CACHE) — the one call sites that retune SA_DOC_MOD /
-    SA_SEG_BYTES must make, instead of reaching into three private
-    dicts by hand (ADVICE r15: the r14 stress-rung leak happened
-    precisely because a hand-rolled clear listed only one of them)."""
-    _SA_CACHE.clear()
-    _ROWS_CACHE.clear()
-    _SEG_CACHE.clear()
+#: Kept only because perfbench imports this name: it drops every stage.
+release_caches = stages.release_all
 
 
 def suffix_char_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,13 +148,16 @@ def suffix_char_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the slice (DuckDB needs one string to sort suffixes of) and in
     the _spans_broadcast/_lcp_broadcast equality-pin lanes.
 
-    Checkpoint-memoized per (session, sf_dir, SA_DOC_MOD): the build
-    reads it for the prefix keys AND the keep filter, and
-    _slice_segments stitches from it — one offset prefix sum serves
-    all three."""
-    key = (session_token(spark), sf_dir, SA_DOC_MOD)
-    if key in _ROWS_CACHE:
-        return _ROWS_CACHE[key]
+    A checkpointed stage per SA_DOC_MOD (stages.py): the build reads
+    it for the prefix keys AND the keep filter, and _slice_segments
+    stitches from it — one offset prefix sum serves all three."""
+    return stages.get(
+        spark, "sa_char_rows", (SA_DOC_MOD,),
+        lambda: _build_char_rows(spark, sf_dir), [table_path(sf_dir, "documents")],
+    )
+
+
+def _build_char_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SA_DOC_MOD == 0
     )
@@ -213,10 +191,7 @@ def suffix_char_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(SA_SEP).alias("ch"),
         )
     )
-    _ROWS_CACHE[key] = chars.unionByName(seps).localCheckpoint(
-        eager=True
-    )
-    return _ROWS_CACHE[key]
+    return chars.unionByName(seps).localCheckpoint(eager=True)
 
 #: Shard count for the two-pass re-rank — the parallelism of every
 #: doubling round (pk1's NSHARDS rationale: size for executor memory;
@@ -440,16 +415,24 @@ def build_suffix_array(
     log2(SA_BASE_CHARS) doubling rounds (each round costs fixed stage
     overhead at audit scale: measured 13.8 s -> ~9 s at sf0.1)."""
     # SA_DOC_MOD is in the key: the SCALE rung and tests retune the
-    # sample modulus, and a memo keyed only by sf_dir would hand back
-    # the previous modulus's slice (ADVICE r14)
-    key = (session_token(spark), sf_dir, two_pass, SA_DOC_MOD)
-    if key in _SA_CACHE:
-        return _SA_CACHE[key]
+    # sample modulus, and a stage keyed only by its input would hand
+    # back the previous modulus's slice (ADVICE r14). Mode is in the
+    # key so the equality-pin test can hold both builds.
+    return stages.get(
+        spark, "suffix_array", (two_pass, SA_DOC_MOD),
+        lambda: _build_suffix_array(spark, sf_dir, two_pass),
+        [table_path(sf_dir, "documents")],
+    )
+
+
+def _build_suffix_array(
+    spark: SparkSession, sf_dir: str, two_pass: bool
+) -> DataFrame:
     if two_pass:
         rows = suffix_char_rows(spark, sf_dir)
         # the unified SA_SEG_OVERLAP table (its derivation maxes over
         # SA_BASE_CHARS, so a wider-base retune can never silently
-        # truncate rank keys — ADVICE r15); ONE memo entry now serves
+        # truncate rank keys — ADVICE r15); ONE stage entry now serves
         # the build, d22/d25's spans and d23/d26's staircase
         segs = _slice_segments(spark, sf_dir)
         w_seg = SA_SEG_BYTES
@@ -578,12 +561,10 @@ def build_suffix_array(
         numbered = joined.withColumn(
             "rnk", F.row_number().over(Window.orderBy("srt")).cast("long")
         )
-    sa = numbered.select(
+    return numbered.select(
         F.col("rnk").cast("int").alias("sa_rank"),
         F.col("pos").cast("int").alias("pos"),
     ).localCheckpoint(eager=True)
-    _SA_CACHE[key] = sa
-    return sa
 
 
 @query(
@@ -817,16 +798,20 @@ def _slice_segments(
     per group). No stage ever holds the whole slice — byte-identical
     to slicing the concatenated string (pytest pin).
 
-    Memoized per (session, sf_dir, SA_DOC_MOD, SA_SEG_BYTES, overlap)
-    with an eager localCheckpoint — the staged-table shape: the SA
+    A stage per (SA_DOC_MOD, SA_SEG_BYTES, overlap) with an eager
+    localCheckpoint (stages.py) — the staged-table shape: the SA
     build, d22/d25 and d23/d26 all read their segment table once per
-    session (the ml _FIT_CACHE protocol; release_pinned doesn't touch
-    it, cache-clearing tests clear _SEG_CACHE alongside _SA_CACHE)."""
-    key = (
-        session_token(spark), sf_dir, SA_DOC_MOD, SA_SEG_BYTES, overlap
+    corpus snapshot."""
+    return stages.get(
+        spark, "sa_segments", (SA_DOC_MOD, SA_SEG_BYTES, overlap),
+        lambda: _build_segments(spark, sf_dir, overlap),
+        [table_path(sf_dir, "documents")],
     )
-    if key in _SEG_CACHE:
-        return _SEG_CACHE[key]
+
+
+def _build_segments(
+    spark: SparkSession, sf_dir: str, overlap: int
+) -> DataFrame:
     rows = suffix_char_rows(spark, sf_dir)
     w = SA_SEG_BYTES
     # segment j holds byte pos iff j*w <= pos <= j*w + w + overlap - 1;
@@ -856,12 +841,11 @@ def _slice_segments(
         ),
         "",
     )
-    _SEG_CACHE[key] = (
+    return (
         assigned.groupBy("seg_id")
         .agg(F.encode(stitched, "UTF-8").alias("seg"))
         .localCheckpoint(eager=True)
     )
-    return _SEG_CACHE[key]
 
 
 @query(
@@ -1297,7 +1281,7 @@ def d26_repeat_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: d27's cleaned-corpus scratch: d24's output docs land here AS a
 #: documents table, and the detector re-runs ON the cleaned corpus by
 #: pointing the ordinary d22 path at this directory. Per-process
-#: (run_scratch) + per-source-sf (subdir), so the suffix memos keyed
+#: (run_scratch) + per-source-sf (subdir), so the suffix stages keyed
 #: by the scratch path can never serve one source's cleaned corpus to
 #: another's audit. NO fingerprint stamping is needed: the oracle
 #: never reads this scratch — it replays the cut AND re-sorts the
@@ -1392,14 +1376,24 @@ def d27_cut_effectiveness_audit(
     # re-executes per action without it (r16: full d27 6.0 -> ~4.4 s
     # at sf0.1 with the write leg no longer re-deriving the cuts)
     cleaned = pin(d24_sa_span_cut(spark, sf_dir))
-    out_dir = _d27_cleaned_dir(sf_dir)
-    cleaned.select(
-        "doc_id",
-        F.col("clean_text").alias("text"),
-        F.lit("en").alias("lang"),
-        F.lit("sa_cut").alias("source"),
-    ).repartition(1).write.mode("overwrite").parquet(
-        out_dir + "/documents.parquet"
+
+    def write_cleaned() -> str:
+        out_dir = _d27_cleaned_dir(sf_dir)
+        cleaned.select(
+            "doc_id",
+            F.col("clean_text").alias("text"),
+            F.lit("en").alias("lang"),
+            F.lit("sa_cut").alias("source"),
+        ).repartition(1).write.mode("overwrite").parquet(
+            out_dir + "/documents.parquet"
+        )
+        return out_dir
+
+    # written once per source snapshot: rewriting it on every call
+    # would change its snapshot and rebuild the cleaned corpus's SA
+    out_dir = stages.get(
+        spark, "d27_cleaned_corpus", (SA_DOC_MOD,), write_cleaned,
+        [table_path(sf_dir, "documents")],
     )
     after = d22_exact_substring_spans(spark, out_dir)
     return (

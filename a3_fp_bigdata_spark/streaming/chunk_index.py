@@ -31,17 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from a3_fp_bigdata_spark.data import table
+from a3_fp_bigdata_spark.data import fresh_scratch, table
 from a3_fp_bigdata_spark.operators.packing import (
     chunk_bucket_frame,
     sliding_chunk_frame,
 )
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import (
-    STAGE_FILES,
-    _scratch_dir,
-)
+from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
@@ -109,7 +106,7 @@ def chunk_index_sink(
         key="bucket",
         delta_fn=bucket_delta_frame,
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_chunkidx_cp_"),
+        checkpoint_dir=checkpoint_dir or fresh_scratch("a3_chunkidx_cp_"),
     )
 
 
@@ -161,7 +158,7 @@ def chunk_membership_sink(
         key=_PAIR_COL,
         delta_fn=membership_delta_frame,
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_chunkmem_cp_"),
+        checkpoint_dir=checkpoint_dir or fresh_scratch("a3_chunkmem_cp_"),
     )
 
 
@@ -186,8 +183,8 @@ def st11_chunk_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk_index_sink, then read the drained occupancy table. The
     oracle is pl2's one-shot SQL over the full corpus — streaming
     accumulation must converge to exactly the batch answer."""
-    stage = _scratch_dir("a3_chunkidx_stage_")
-    out = _scratch_dir("a3_chunkidx_out_")
+    stage = fresh_scratch("a3_chunkidx_stage_")
+    out = fresh_scratch("a3_chunkidx_out_")
     docs = table(spark, sf_dir, "documents")
     docs.repartition(STAGE_FILES, "doc_id").write.mode("overwrite").parquet(
         stage

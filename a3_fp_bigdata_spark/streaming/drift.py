@@ -25,13 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import table
+from a3_fp_bigdata_spark.data import fresh_scratch, table
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import (
-    STAGE_FILES,
-    _scratch_dir,
-)
+from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
@@ -95,7 +92,7 @@ def drift_histogram_sink(
         key="cell",
         delta_fn=lambda batch: cell_histogram_delta(batch, planes),
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_drift_cp_"),
+        checkpoint_dir=checkpoint_dir or fresh_scratch("a3_drift_cp_"),
     )
 
 
@@ -122,8 +119,8 @@ def st14_stream_embedding_drift(
     from a3_fp_bigdata_spark.operators.similarity import _planes
     from a3_fp_bigdata_spark.registry import pin
 
-    stage = _scratch_dir("a3_drift_stage_")
-    out = _scratch_dir("a3_drift_out_")
+    stage = fresh_scratch("a3_drift_stage_")
+    out = fresh_scratch("a3_drift_out_")
     emb = table(spark, sf_dir, "embeddings")
     emb.repartition(STAGE_FILES, "vec_id").write.mode(
         "overwrite"

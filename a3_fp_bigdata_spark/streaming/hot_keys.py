@@ -32,15 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch, table
+from a3_fp_bigdata_spark.data import fresh_scratch, run_scratch, table
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.operators.aggregates import HH_K, HH_SHARDS
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import (
-    STAGE_FILES,
-    _scratch_dir,
-)
+from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
@@ -105,7 +102,7 @@ def hot_key_sink(
         key="shard",
         delta_fn=shard_summary_delta,
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_hotkey_cp_"),
+        checkpoint_dir=checkpoint_dir or fresh_scratch("a3_hotkey_cp_"),
     )
 
 
@@ -133,8 +130,8 @@ def st13_stream_hot_keys(
     count over the BATCH plus a merge against a <= HH_SHARDS*HH_K-row
     view; the view never grows. The exact-count join here is the
     AUDIT rung only."""
-    stage = _scratch_dir("a3_hotkey_stage_")
-    out = _scratch_dir("a3_hotkey_out_")
+    stage = fresh_scratch("a3_hotkey_stage_")
+    out = fresh_scratch("a3_hotkey_out_")
     docs = table(spark, sf_dir, "documents")
     docs.repartition(STAGE_FILES, "doc_id").write.mode(
         "overwrite"

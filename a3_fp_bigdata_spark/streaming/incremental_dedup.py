@@ -21,15 +21,11 @@ pipeline actually runs.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from a3_fp_bigdata_spark.data import table
+from a3_fp_bigdata_spark.data import fresh_scratch, table
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
@@ -39,25 +35,6 @@ from a3_fp_bigdata_spark.streaming.materialized import (
 
 #: micro-batch granularity for the staged stream (files per trigger = 1)
 STAGE_FILES = 4
-
-#: scratch dirs created by st10 runs, removed at interpreter exit so
-#: repeated sweeps/bench rounds don't leak a corpus copy per invocation
-_SCRATCH_DIRS: list[str] = []
-
-
-def _scratch_dir(prefix: str) -> str:
-    path = tempfile.mkdtemp(prefix=prefix)
-    _SCRATCH_DIRS.append(path)
-    return path
-
-
-def _cleanup_scratch() -> None:
-    while _SCRATCH_DIRS:
-        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
-
-
-atexit.register(_cleanup_scratch)
-
 
 def fingerprint_frame(docs: DataFrame) -> DataFrame:
     """(fp, keeper_id, n_copies) — d1's aggregate, reusable per batch."""
@@ -97,7 +74,7 @@ def incremental_dedup_sink(
         key="fp",
         delta_fn=fingerprint_frame,
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_incdedup_cp_"),
+        checkpoint_dir=checkpoint_dir or fresh_scratch("a3_incdedup_cp_"),
     )
 
 
@@ -116,8 +93,8 @@ def st10_incremental_dedup_stream(
     incremental_dedup_sink, then read the drained fingerprint table.
     The oracle is d1's one-shot SQL over the full corpus — streaming
     accumulation must converge to exactly the batch answer."""
-    stage = _scratch_dir("a3_incdedup_stage_")
-    out = _scratch_dir("a3_incdedup_out_")
+    stage = fresh_scratch("a3_incdedup_stage_")
+    out = fresh_scratch("a3_incdedup_out_")
     docs = table(spark, sf_dir, "documents")
     docs.repartition(STAGE_FILES, "doc_id").write.mode("overwrite").parquet(
         stage

@@ -41,15 +41,11 @@ def clean_shingle_stage():
     """Monkeypatching dedup inputs must not read or leave a cached
     shingle/bucket stage keyed to the real (session, sf) — clear both
     ways (the bucket stage derives from the shingle stage)."""
-    from a3_fp_bigdata_spark.operators import dedup as D
+    from a3_fp_bigdata_spark import stages
 
-    D.release_bucket_stage()
-    D.release_shingle_stage()
-    D._SHINGLE_STAGE.clear()
+    stages.release_all()
     yield
-    D.release_bucket_stage()
-    D.release_shingle_stage()
-    D._SHINGLE_STAGE.clear()
+    stages.release_all()
 
 
 def test_empty_input_dedup_pipeline(spark, monkeypatch, clean_shingle_stage):
@@ -299,8 +295,7 @@ def test_d12_reliable_checkpoint_path(spark, monkeypatch, tmp_path):
     cluster table; checkpoint files actually land in the dir."""
     import os as _os
 
-    from a3_fp_bigdata_spark import registry
-    from a3_fp_bigdata_spark.operators import dedup as D
+    from a3_fp_bigdata_spark import registry, stages
 
     qs = registry.all_queries()
     want = sorted(
@@ -308,7 +303,7 @@ def test_d12_reliable_checkpoint_path(spark, monkeypatch, tmp_path):
     )
     ck = str(tmp_path / "ck")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ck)
-    D.release_cluster_stage()  # force a rebuild under the env var
+    stages.release_all()  # force a rebuild under the env var
     got = sorted(
         tuple(r) for r in qs["d12_dedup_clusters"](spark, SF0001).collect()
     )
@@ -316,7 +311,7 @@ def test_d12_reliable_checkpoint_path(spark, monkeypatch, tmp_path):
     assert any(
         files for _, _, files in _os.walk(ck)
     ), "no checkpoint files written"
-    D.release_cluster_stage()  # don't leak the env-var build to others
+    stages.release_all()  # don't leak the env-var build to others
     registry.release_pinned()
 
 

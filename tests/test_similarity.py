@@ -124,18 +124,19 @@ def test_pq_codebooks_deterministic_and_codes_bounded(spark):
     PQ_M codes with K <= 16 fit nibbles (the ~21x index-shrink claim)."""
     import numpy as np
 
+    from a3_fp_bigdata_spark import stages
     from a3_fp_bigdata_spark.operators.similarity import (
-        _PQ_CB_STAGE,
         PQ_K,
         PQ_M,
         _pq_codebooks,
         _pq_encoded,
     )
 
-    _PQ_CB_STAGE.clear()  # force two REAL fits — the memo would make
+    stages.release_all()  # force two REAL fits — the stage would make
     cb1 = _pq_codebooks(spark, SF001)  # this determinism check vacuous
-    _PQ_CB_STAGE.clear()
+    stages.release_all()
     cb2 = _pq_codebooks(spark, SF001)
+    assert cb1 is not cb2
     assert cb1.shape == (PQ_M, PQ_K, 64 // PQ_M)
     assert np.array_equal(cb1, cb2)
     assert PQ_K <= 16  # nibble codes

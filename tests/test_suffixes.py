@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark import registry
+from a3_fp_bigdata_spark import registry, stages
 from a3_fp_bigdata_spark.operators import suffixes as SX
 from tests.conftest import SF0001
 
@@ -64,11 +64,11 @@ def _planted_corpus(spark, tmp_path):
 
 def test_d22_finds_planted_cross_doc_span(spark, tmp_path):
     sf_dir = _planted_corpus(spark, tmp_path)
-    SX.release_caches()  # keyed by sf_dir, but keep the test hermetic
+    stages.release_all()  # keyed by input path, but keep the test hermetic
     rows = registry.all_queries()["d22_exact_substring_spans"](
         spark, sf_dir
     ).collect()
-    SX.release_caches()
+    stages.release_all()
     spans = {r["span"] for r in rows}
     # every reported span really is SPAN_L chars of the planted repeat
     s = SX.corpus_slice(spark, sf_dir).first()["s"]
@@ -93,7 +93,7 @@ def test_d22_zero_false_negatives_on_planted(spark, tmp_path):
     recoverable from d22's adjacent-pair output via span equality —
     the Lee et al. completeness property at test scale."""
     sf_dir = _planted_corpus(spark, tmp_path)
-    SX.release_caches()
+    stages.release_all()
     s = SX.corpus_slice(spark, sf_dir).first()["s"]
     windows: dict[str, list[int]] = {}
     for p in range(len(s) - SX.SPAN_L + 1):
@@ -105,7 +105,7 @@ def test_d22_zero_false_negatives_on_planted(spark, tmp_path):
     rows = registry.all_queries()["d22_exact_substring_spans"](
         spark, sf_dir
     ).collect()
-    SX.release_caches()
+    stages.release_all()
     got_spans = {r["span"] for r in rows}
     assert dup_spans == got_spans, (
         dup_spans - got_spans,
@@ -113,14 +113,18 @@ def test_d22_zero_false_negatives_on_planted(spark, tmp_path):
     )
 
 
+def _sa_stages() -> int:
+    return sum(1 for k in stages._ENTRIES if k[1] == "suffix_array")
+
+
 def test_sa_cache_shared_between_queries(spark):
-    SX.release_caches()
+    stages.release_all()
     registry.all_queries()["d21_suffix_array"](spark, SF0001).count()
-    assert len(SX._SA_CACHE) == 1
+    assert _sa_stages() == 1
     registry.all_queries()["d22_exact_substring_spans"](
         spark, SF0001
     ).count()
-    assert len(SX._SA_CACHE) == 1  # reused, not rebuilt
+    assert _sa_stages() == 1  # reused, not rebuilt
 
 
 def test_d23_lcp_matches_python_ground_truth(spark):
@@ -168,7 +172,7 @@ def test_d25_segmented_equals_broadcast_lane(spark, tmp_path):
         SX._spans_broadcast(spark, SF0001)
     )
     sf_dir = _planted_corpus(spark, tmp_path)
-    SX.release_caches()
+    stages.release_all()
     old_seg = SX.SA_SEG_BYTES
     SX.SA_SEG_BYTES = 16  # < SPAN_L: every window crosses a boundary
     try:
@@ -176,7 +180,7 @@ def test_d25_segmented_equals_broadcast_lane(spark, tmp_path):
         want = rows(SX._spans_broadcast(spark, sf_dir))
     finally:
         SX.SA_SEG_BYTES = old_seg
-        SX.release_caches()
+        stages.release_all()
     assert got == want and len(got) > 0
 
 
@@ -198,7 +202,7 @@ def test_d23_segmented_equals_broadcast_lane(spark, tmp_path):
         SX._lcp_broadcast(spark, SF0001)
     )
     sf_dir = _planted_corpus(spark, tmp_path)
-    SX.release_caches()
+    stages.release_all()
     old_seg = SX.SA_SEG_BYTES
     SX.SA_SEG_BYTES = 24  # < LCP_CAP: every 64-byte window straddles
     try:
@@ -206,7 +210,7 @@ def test_d23_segmented_equals_broadcast_lane(spark, tmp_path):
         want = rows(SX._lcp_broadcast(spark, sf_dir))
     finally:
         SX.SA_SEG_BYTES = old_seg
-        SX.release_caches()
+        stages.release_all()
     assert got == want and len(got) > 0
 
 
@@ -218,7 +222,7 @@ def test_d24_cut_matches_python_reference(spark, tmp_path):
     earliest occurrence of the planted repeat survives, the later one
     is cut."""
     sf_dir = _planted_corpus(spark, tmp_path)
-    SX.release_caches()
+    stages.release_all()
     s = SX.corpus_slice(spark, sf_dir).first()["s"]
     L = SX.SPAN_L
     sa = _python_suffix_array(s)
@@ -254,7 +258,7 @@ def test_d24_cut_matches_python_reference(spark, tmp_path):
     rows = registry.all_queries()["d24_sa_span_cut"](
         spark, sf_dir
     ).collect()
-    SX.release_caches()
+    stages.release_all()
     got = {
         r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_cut"])
         for r in rows
@@ -304,7 +308,7 @@ def test_segments_reconstruct_slice_bytes(spark):
         }
     finally:
         SX.SA_SEG_BYTES = old_seg
-        SX.release_caches()
+        stages.release_all()
     w = 257
     import math
 
@@ -321,7 +325,7 @@ def test_two_pass_rerank_equals_global_window(spark):
     path) is BIT-EQUAL to the legacy single-partition global-window
     build on the same slice — every (sa_rank, pos) row identical
     (VERDICT r13 ask #2's equality pin)."""
-    SX.release_caches()
+    stages.release_all()
     fast = sorted(
         (r["sa_rank"], r["pos"])
         for r in SX.build_suffix_array(spark, SF0001, two_pass=True)
@@ -332,7 +336,7 @@ def test_two_pass_rerank_equals_global_window(spark):
         for r in SX.build_suffix_array(spark, SF0001, two_pass=False)
         .collect()
     )
-    SX.release_caches()
+    stages.release_all()
     assert fast == legacy
     assert len(fast) == len({p for _, p in fast})  # ranks are a bijection
 
@@ -433,7 +437,7 @@ def test_d27_effectiveness_matches_python_replay(spark, tmp_path):
     third-implementation style. Also pins the planted scenario: spans
     exist before, and cutting the single planted pair leaves zero."""
     sf_dir = _planted_corpus(spark, tmp_path)
-    SX.release_caches()
+    stages.release_all()
     s = SX.corpus_slice(spark, sf_dir).first()["s"]
     L = SX.SPAN_L
 
@@ -479,7 +483,7 @@ def test_d27_effectiveness_matches_python_replay(spark, tmp_path):
     row = registry.all_queries()["d27_cut_effectiveness_audit"](
         spark, sf_dir
     ).first()
-    SX.release_caches()
+    stages.release_all()
     got = (
         row["n_spans_before"],
         row["n_spans_after"],

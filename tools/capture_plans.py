@@ -1,10 +1,10 @@
-"""Capture .explain('formatted') for named queries -> plans/r15/.
+"""Capture .explain('formatted') for named queries -> plans/r<N>/.
 
 Usage:
-    python tools/capture_plans_r15.py before q1 q2 ...
-    python tools/capture_plans_r15.py after q1 q2 ...
+    python tools/capture_plans.py --round N before q1 q2 ...
+    python tools/capture_plans.py --round N after q1 q2 ...
 
-Writes plans/r15/<query>_<tag>.txt. Runs at $SPARK_GRAFT_SF_DIR
+Writes plans/r<N>/<query>_<tag>.txt. Runs at $SPARK_GRAFT_SF_DIR
 (default sf0.1) on the bench's own session builder so the plans match
 what bench.py executes. Queries whose build triggers execution
 (streaming runs, ML fits, scratch writes) still produce the plan of the
@@ -13,24 +13,28 @@ txt notes nothing extra.
 """
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-tag = sys.argv[1]
-names = sys.argv[2:]
-assert tag in ("before", "after"), "first arg must be before|after"
+ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+ap.add_argument("--round", type=int, required=True, help="plans/r<N>/")
+ap.add_argument("tag", choices=("before", "after"))
+ap.add_argument("names", nargs="+", metavar="query")
+args = ap.parse_args()
+tag, names, rnd = args.tag, args.names, f"r{args.round}"
 
 from a3_fp_bigdata_spark import registry  # noqa: E402
 from a3_fp_bigdata_spark.session import local_session  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r15")
+                   "plans", rnd)
 os.makedirs(OUT, exist_ok=True)
 
-spark = local_session(app_name="plan-capture-r15")
+spark = local_session(app_name=f"plan-capture-{rnd}")
 spark.sparkContext.setLogLevel("ERROR")
 
 queries = registry.exposed_queries()
@@ -44,7 +48,7 @@ for want in names:
     )
     path = os.path.join(OUT, f"{name}_{tag}.txt")
     with open(path, "w") as fh:
-        fh.write(f"# {name} — explain('formatted') at {SF}, {tag} r15\n\n")
+        fh.write(f"# {name} — explain('formatted') at {SF}, {tag} {rnd}\n\n")
         fh.write(plan)
     print(f"wrote {path} ({plan.count('Exchange')} Exchange, "
           f"{plan.count('EvalPython') + plan.count('MapInPandas') + plan.count('ArrowEval')} py-nodes)")

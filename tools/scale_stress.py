@@ -299,13 +299,13 @@ def microbatch_overhead_probe(spark, src_dir: str, nfiles: int = 40) -> dict:
     from "flat per-batch work" (bounded merge)."""
     import json as _json
 
+    from a3_fp_bigdata_spark.data import fresh_scratch
     from a3_fp_bigdata_spark.data import table as _table
     from a3_fp_bigdata_spark.schemas import TESTDATA
     from a3_fp_bigdata_spark.streaming.hot_keys import hot_key_sink
-    from a3_fp_bigdata_spark.streaming.incremental_dedup import _scratch_dir
     from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 
-    stage = _scratch_dir("a3_probe_stage_")
+    stage = fresh_scratch("a3_probe_stage_")
     _table(spark, src_dir, "documents").repartition(
         nfiles, "doc_id"
     ).write.mode("overwrite").parquet(stage)
@@ -332,7 +332,7 @@ def microbatch_overhead_probe(spark, src_dir: str, nfiles: int = 40) -> dict:
         lambda s: s.writeStream.foreachBatch(
             lambda df, bid: df.count()
         )
-        .option("checkpointLocation", _scratch_dir("a3_probe_cp_"))
+        .option("checkpointLocation", fresh_scratch("a3_probe_cp_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -340,8 +340,8 @@ def microbatch_overhead_probe(spark, src_dir: str, nfiles: int = 40) -> dict:
         lambda s: hot_key_sink(
             s,
             spark,
-            _scratch_dir("a3_probe_out_"),
-            checkpoint_dir=_scratch_dir("a3_probe_cp2_"),
+            fresh_scratch("a3_probe_out_"),
+            checkpoint_dir=fresh_scratch("a3_probe_cp2_"),
         )
     )
 
@@ -1456,6 +1456,7 @@ def main() -> None:
     print()
     from pyspark.sql import Window
 
+    from a3_fp_bigdata_spark import stages
     from a3_fp_bigdata_spark.operators import suffixes as SX
 
     print("| re-rank of 10M (r1, r2) keys | wall s | rank-stage "
@@ -1537,11 +1538,10 @@ def main() -> None:
     # offsets are, see d25).
     old_mod = SX.SA_DOC_MOD
     SX.SA_DOC_MOD = 15
-    # clear ALL the family's memos, not just _SA_CACHE: correctness is
-    # key-safe (SA_DOC_MOD is in every key) but mod-15 checkpoint
-    # blocks in _ROWS_CACHE/_SEG_CACHE would stay resident for the
-    # rest of a long stress session (ADVICE r14)
-    SX.release_caches()
+    # drop every stage: correctness is key-safe (SA_DOC_MOD is in
+    # every suffix stage key) but mod-15 checkpoint blocks would stay
+    # resident for the rest of a long stress session (ADVICE r14)
+    stages.release_all()
     try:
         slice_len = len(SX.corpus_slice(spark, sf_dir).first()["s"])
         walls = {}
@@ -1570,7 +1570,7 @@ def main() -> None:
         assert n_diff == 0
     finally:
         SX.SA_DOC_MOD = old_mod
-        SX.release_caches()
+        stages.release_all()
 
     # ---- suffix cut rung (r15, VERDICT ask #6): d24 composes spans ->
     # offset join -> gaps-and-islands -> positional-lambda char cut;
@@ -1589,7 +1589,7 @@ def main() -> None:
     share_by_mod = {}
     for mod in (150, 15):
         SX.SA_DOC_MOD = mod
-        SX.release_caches()
+        stages.release_all()
         try:
             n_chars = SX.suffix_char_rows(spark, sf_dir).count()
             t0 = time.perf_counter()
@@ -1634,7 +1634,7 @@ def main() -> None:
             )
         finally:
             SX.SA_DOC_MOD = old_mod
-            SX.release_caches()
+            stages.release_all()
     print()
     n10, p10, s10, d10 = share_by_mod[15]
     d1x = share_by_mod[150][3]

@@ -28,13 +28,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from a3_fp_bigdata_spark.data import table
+from a3_fp_bigdata_spark.data import fresh_scratch, table
 from a3_fp_bigdata_spark.metrics import stage_metrics
 from a3_fp_bigdata_spark.schemas import TESTDATA
 from a3_fp_bigdata_spark.session import local_session
 from a3_fp_bigdata_spark.streaming.incremental_dedup import (
     STAGE_FILES,
-    _scratch_dir,
     incremental_dedup_sink,
 )
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
@@ -51,8 +50,8 @@ DURATION_KEYS = (
 
 
 def run_once(spark, sf_dir: str) -> dict:
-    stage = _scratch_dir("a3_st10brk_stage_")
-    out = _scratch_dir("a3_st10brk_out_")
+    stage = fresh_scratch("a3_st10brk_stage_")
+    out = fresh_scratch("a3_st10brk_out_")
 
     t0 = time.monotonic()
     docs = table(spark, sf_dir, "documents")
