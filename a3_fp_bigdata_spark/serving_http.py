@@ -1,13 +1,24 @@
 """Optional HTTP layer over the serving query shapes — the reference's
 Flask API surface (reference app.py:144-308), kept deliberately thin:
-every endpoint parses params, builds the SAME plan shapes as serving.py,
-collects, jsonifies. No query logic lives here.
+every endpoint parses params, builds the same query shapes as
+serving.py, collects, jsonifies. No query logic lives here, and nothing
+is computed ahead of a request. Two intended differences from
+serving.py, both so a request runs the fewest Spark jobs its answer
+needs:
+- a serving table whose scan is one partition is cached as
+  ``coalesce(1)``: the cached relation then reports SinglePartition,
+  which already satisfies the distinct/agg/orderBy distributions, so no
+  Exchange (and no extra AQE stage job) is planned — one job per query;
+- /recommend_similar_app_by_name collects the anchor's label in its
+  existence check (one round trip) and filters on it, where
+  srv_similar_in_cluster (one DataFrame, no collect) joins the anchor.
 
 Flask is an optional dependency (import-gated): the engine is complete
 without HTTP; `build_app` raises a clear error if Flask is absent.
 
 Parity notes vs the reference:
-- serving table cached at startup with an eager count (S3, app.py:114-115);
+- serving tables cached at startup, each with an eager count (S3,
+  app.py:114-115);
 - /search_app_suggestions enforces min 2 chars (app.py:169) -> 400;
 - /top_apps validates sort_by against the schema (P9, app.py:238-239) -> 400;
 - distinct-before-orderBy fix documented in SURVEY §2.6 applies here too.
@@ -43,9 +54,21 @@ def _rows(df: DataFrame) -> list[dict[str, Any]]:
     return out
 
 
+def _cached(df: DataFrame) -> DataFrame:
+    """Cache a serving table and materialize it. A one-partition scan is
+    cached as ``coalesce(1)``, which moves no data but makes the cached
+    relation report SinglePartition; a wider scan keeps its
+    parallelism."""
+    if df.rdd.getNumPartitions() == 1:
+        df = df.coalesce(1)
+    df = df.cache()
+    df.count()
+    return df
+
+
 def build_app(spark: SparkSession, sf_dir: str) -> "Flask":
-    """App factory. Loads + caches the serving tables once (S3 shape),
-    then each route is a pure plan over the cached frames."""
+    """App factory. Loads, caches and warms the serving tables once (S3
+    shape), then each route is a pure plan over the cached frames."""
     if not HAVE_FLASK:
         raise RuntimeError(
             "flask is not installed; the engine's serving layer is usable "
@@ -53,10 +76,9 @@ def build_app(spark: SparkSession, sf_dir: str) -> "Flask":
         )
     app = Flask("a3_fp_bigdata_spark")
 
-    orders = table(spark, sf_dir, "orders").cache()
-    customer = table(spark, sf_dir, "customer").cache()
-    emb = table(spark, sf_dir, "embeddings").cache()
-    n_orders = orders.count()  # eager cache warm, app.py:115
+    orders = _cached(table(spark, sf_dir, "orders"))  # app.py:114-115
+    customer = _cached(table(spark, sf_dir, "customer"))
+    emb = _cached(table(spark, sf_dir, "embeddings"))
 
     @app.get("/check_data")
     def check_data():
@@ -143,16 +165,17 @@ def build_app(spark: SparkSession, sf_dir: str) -> "Flask":
 
     @app.get("/recommend_similar_app_by_name/<int:vec_id>")
     def similar(vec_id: int):
-        anchor = emb.filter(F.col("vec_id") == vec_id).select(
-            F.col("label").alias("anchor_label")
+        anchor = (
+            emb.filter(F.col("vec_id") == vec_id).select("label").limit(1).collect()
         )
-        if anchor.isEmpty():
+        if not anchor:
             return jsonify({"error": f"vector {vec_id} not found"}), 404
+        # a null anchor label matches nothing, as an equi-join on it would
         peers = (
-            emb.join(
-                F.broadcast(anchor), F.col("label") == F.col("anchor_label")
+            emb.filter(
+                (F.col("label") == F.lit(anchor[0]["label"]))
+                & (F.col("vec_id") != vec_id)
             )
-            .filter(F.col("vec_id") != vec_id)
             .select("vec_id", "label")
             .orderBy("vec_id")
             .limit(10)
@@ -169,5 +192,4 @@ def build_app(spark: SparkSession, sf_dir: str) -> "Flask":
         )
         return jsonify(_rows(rows))
 
-    app.config["N_ORDERS"] = n_orders
     return app

@@ -1,15 +1,26 @@
 """HTTP layer parity tests (reference app.py:144-308) via Flask test
-client — no server process, same routes/verbs/status codes."""
+client — no server process, same routes/verbs/status codes. Bodies are
+compared with DuckDB over the same parquet; job counts pin how many
+Spark jobs each request runs."""
 
 from __future__ import annotations
 
+import itertools
+
+import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF0001
 
 flask = pytest.importorskip("flask")
 
 from a3_fp_bigdata_spark import serving_http  # noqa: E402
+
+SERVED = ("orders", "customer", "embeddings")
+KEYS = {"orders": "o_orderkey", "customer": "c_custkey", "embeddings": "vec_id"}
+#: the embeddings row whose label the twin_apps tables null out
+NULL_LABEL_ID = 7
 
 
 @pytest.fixture(scope="module")
@@ -19,26 +30,72 @@ def client(spark):
     return app.test_client()
 
 
-def test_check_data(client):
-    r = client.get("/check_data")
-    assert r.status_code == 200
-    body = r.get_json()
+@pytest.fixture(scope="module")
+def duck():
+    con = duckdb.connect()
+    for t in SERVED:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF0001}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+def _rows(con, sql: str, params: list | None = None) -> list[dict]:
+    cur = con.execute(sql, params or [])
+    names = [d[0] for d in cur.description]
+    return [
+        {n: v.isoformat() if hasattr(v, "isoformat") else v for n, v in zip(names, r)}
+        for r in cur.fetchall()
+    ]
+
+
+def _get(client, url: str):
+    r = client.get(url)
+    assert r.status_code == 200, url
+    return r.get_json()
+
+
+def test_check_data(client, duck):
+    body = _get(client, "/check_data")
     assert body["status"] == "ok"
+    assert body["stats"] == _rows(
+        duck,
+        "SELECT count(*) AS cnt, min(o_orderkey) AS min_key, "
+        "max(o_orderkey) AS max_key FROM orders",
+    )[0]
     assert body["stats"]["cnt"] > 0
     assert len(body["sample"]) == 3
 
 
-def test_categories_sorted_nonnull(client):
-    r = client.get("/categories")
-    cats = r.get_json()
+def test_categories_sorted_nonnull(client, duck):
+    cats = _get(client, "/categories")
     assert cats == sorted(cats) and None not in cats
+    assert cats == [
+        r["category"]
+        for r in _rows(
+            duck,
+            "SELECT DISTINCT c_mktsegment AS category FROM customer "
+            "WHERE c_mktsegment IS NOT NULL ORDER BY category",
+        )
+    ]
 
 
-def test_suggestions_min_chars_400(client):
+def _search_oracle(con, q: str) -> list[dict]:
+    return _rows(
+        con,
+        "SELECT DISTINCT c_custkey, c_name, c_mktsegment FROM customer "
+        "WHERE contains(lower(c_name), ?) ORDER BY c_custkey LIMIT 15",
+        [q.strip().lower()],
+    )
+
+
+def test_suggestions_min_chars_400(client, duck):
     assert client.get("/search_app_suggestions?q=a").status_code == 400
-    r = client.get("/search_app_suggestions?q=19")
-    assert r.status_code == 200
-    assert len(r.get_json()) <= 15
+    for q in ("19", "customer", "00001", "zz"):
+        rows = _get(client, f"/search_app_suggestions?q={q}")
+        assert len(rows) <= 15
+        assert rows == _search_oracle(duck, q), q
 
 
 def test_details_found_and_404(client):
@@ -47,31 +104,75 @@ def test_details_found_and_404(client):
     assert client.get("/app_details_by_id/999999999").status_code == 404
 
 
-def test_by_category_case_insensitive(client):
-    r = client.get("/recommend_apps_by_category/2-HIGH")
-    rows = r.get_json()
-    assert rows and len(rows) <= 20
-    prices = [row["o_totalprice"] for row in rows]
-    assert prices == sorted(prices, reverse=True)
+def _by_category_oracle(con, category: str) -> list[dict]:
+    return _rows(
+        con,
+        "SELECT o_orderkey, o_totalprice, o_orderdate FROM orders "
+        "WHERE lower(o_orderpriority) = ? "
+        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 20",
+        [category.lower()],
+    )
 
 
-def test_top_apps_validates_sort(client):
+def test_by_category_case_insensitive(client, duck):
+    for category in ("2-HIGH", "2-high", "5-LOW", "nope"):
+        rows = _get(client, f"/recommend_apps_by_category/{category}")
+        assert rows == _by_category_oracle(duck, category), category
+    assert len(_get(client, "/recommend_apps_by_category/2-HIGH")) == 20
+
+
+def _top_oracle(con, sort_by: str, limit: int, category: str | None) -> list[dict]:
+    where = "WHERE o_orderpriority = ?" if category else ""
+    return _rows(
+        con,
+        f"SELECT o_orderkey, o_custkey, o_totalprice FROM orders {where} "
+        f"ORDER BY {sort_by} DESC, o_orderkey LIMIT {min(limit, 50)}",
+        [category] if category else [],
+    )
+
+
+def test_top_apps_validates_sort(client, duck):
     assert client.get("/top_apps?sort_by=nope").status_code == 400
-    r = client.get("/top_apps?limit=5")
-    rows = r.get_json()
+    rows = _get(client, "/top_apps?limit=5")
     assert len(rows) == 5
+    assert rows == _top_oracle(duck, "o_totalprice", 5, None)
+    for sort_by, limit, category in (
+        ("o_totalprice", 10, "1-URGENT"),
+        ("o_custkey", 7, None),
+        ("o_orderdate", 50, "3-MEDIUM"),
+    ):
+        url = f"/top_apps?sort_by={sort_by}&limit={limit}&category={category or ''}"
+        assert _get(client, url) == _top_oracle(duck, sort_by, limit, category), url
 
 
-def test_similar_and_cluster(client):
-    r = client.get("/recommend_similar_app_by_name/5")
-    assert r.status_code == 200
-    peers = r.get_json()
-    assert peers and all(p["vec_id"] != 5 for p in peers)
-    labels = {p["label"] for p in peers}
+def _similar_oracle(con, vec_id: int) -> list[dict]:
+    return _rows(
+        con,
+        "SELECT vec_id, label FROM embeddings WHERE label = "
+        "(SELECT label FROM embeddings WHERE vec_id = ?) AND vec_id <> ? "
+        "ORDER BY vec_id LIMIT 10",
+        [vec_id, vec_id],
+    )
+
+
+def _cluster_oracle(con, k: int) -> list[dict]:
+    return _rows(
+        con,
+        "SELECT vec_id, label FROM embeddings WHERE label = ? "
+        "ORDER BY vec_id LIMIT 20",
+        [k],
+    )
+
+
+def test_similar_and_cluster(client, duck):
+    for vec_id in (0, 5, 499):
+        peers = _get(client, f"/recommend_similar_app_by_name/{vec_id}")
+        assert peers and peers == _similar_oracle(duck, vec_id), vec_id
+        assert all(p["vec_id"] != vec_id for p in peers)
+    labels = {p["label"] for p in _get(client, "/recommend_similar_app_by_name/5")}
     assert len(labels) == 1
-    k = labels.pop()
-    rows = client.get(f"/apps_in_cluster/{k}").get_json()
-    assert rows and all(row["label"] == k for row in rows)
+    for k in (labels.pop(), 0, 9, 42):
+        assert _get(client, f"/apps_in_cluster/{k}") == _cluster_oracle(duck, k), k
     assert client.get("/recommend_similar_app_by_name/999999").status_code == 404
 
 
@@ -82,3 +183,125 @@ def test_top_apps_limit_edge_cases(client):
     assert client.get("/top_apps?limit=-3").status_code == 400
     assert client.get("/top_apps?limit=abc").status_code == 400
     assert len(client.get("/top_apps?limit=999").get_json()) <= 50
+
+
+# ---------------------------------------------------------------------------
+# Spark jobs per request
+# ---------------------------------------------------------------------------
+
+_groups = itertools.count()
+
+
+def _jobs(spark, client, url: str) -> tuple[int, int]:
+    """(status, number of Spark jobs the request ran)."""
+    sc = spark.sparkContext
+    group = f"serving-http-test-{next(_groups)}"
+    sc.setJobGroup(group, url)
+    try:
+        status = client.get(url).status_code
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return status, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "url,status,jobs",
+    [
+        ("/check_data", 200, 2),
+        ("/categories", 200, 1),
+        ("/search_app_suggestions?q=19", 200, 1),
+        ("/app_details_by_id/1", 200, 1),
+        ("/recommend_apps_by_category/2-HIGH", 200, 1),
+        ("/top_apps?limit=10", 200, 1),
+        ("/top_apps?limit=10&category=1-URGENT", 200, 1),
+        ("/apps_in_cluster/3", 200, 1),
+        ("/recommend_similar_app_by_name/5", 200, 2),
+        ("/recommend_similar_app_by_name/999999", 404, 1),
+    ],
+)
+def test_spark_jobs_per_request(spark, client, url, status, jobs):
+    """One-file tables are cached as SinglePartition, so distinct, global
+    aggregates and orderBy plan no Exchange (and AQE splits no extra
+    job); the similar-app anchor is one collect, not isEmpty + join."""
+    for _ in range(2):  # the first and a warm request run the same jobs
+        assert _jobs(spark, client, url) == (status, jobs)
+
+
+# ---------------------------------------------------------------------------
+# Multi-file tables: the scan's parallelism is kept, bodies are unchanged
+# ---------------------------------------------------------------------------
+
+
+def _cached_rdds(spark) -> dict[int, tuple[int, int]]:
+    """id -> (partitions, cached partitions) of every cached RDD."""
+    return {
+        i.id(): (i.numPartitions(), i.numCachedPartitions())
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+
+
+@pytest.fixture(scope="module")
+def twin_apps(spark, tmp_path_factory):
+    """The SF0001 serving tables, one embeddings label nulled, written
+    twice: one file per table, and three files per table. Returns each
+    app's test client and the RDD storage facts its build_app added."""
+    root = tmp_path_factory.mktemp("serving_twins")
+    single, multi = root / "single", root / "multi"
+    for t in SERVED:
+        df = spark.read.parquet(f"{SF0001}/{t}.parquet")
+        if t == "embeddings":
+            df = df.withColumn(
+                "label",
+                F.when(F.col("vec_id") != NULL_LABEL_ID, F.col("label")),
+            )
+        df.coalesce(1).write.parquet(str(single / f"{t}.parquet"))
+        df.repartitionByRange(3, KEYS[t]).write.parquet(str(multi / f"{t}.parquet"))
+    out = {}
+    for name, d in (("single", single), ("multi", multi)):
+        before = _cached_rdds(spark)
+        app = serving_http.build_app(spark, str(d))
+        after = _cached_rdds(spark)
+        app.testing = True
+        added = [v for k, v in after.items() if k not in before]
+        out[name] = (app.test_client(), added)
+    return out
+
+
+def test_build_app_warms_all_three_caches(twin_apps):
+    for name, parts in (("single", 1), ("multi", 3)):
+        added = twin_apps[name][1]
+        assert len(added) == 3, name
+        assert all(n == cached == parts for n, cached in added), (name, added)
+
+
+def test_multi_file_tables_serve_the_same_bodies(twin_apps):
+    single, multi = twin_apps["single"][0], twin_apps["multi"][0]
+    urls = [
+        "/categories",
+        "/search_app_suggestions?q=19",
+        "/search_app_suggestions?q=customer",
+        "/app_details_by_id/1",
+        "/app_details_by_id/999999999",
+        "/recommend_apps_by_category/2-high",
+        "/top_apps?limit=12",
+        "/top_apps?sort_by=o_orderdate&limit=30&category=5-LOW",
+        "/recommend_similar_app_by_name/5",
+        f"/recommend_similar_app_by_name/{NULL_LABEL_ID}",
+        "/recommend_similar_app_by_name/999999",
+        "/apps_in_cluster/4",
+    ]
+    for url in urls:
+        a, b = single.get(url), multi.get(url)
+        assert (a.status_code, a.get_json()) == (b.status_code, b.get_json()), url
+    # check_data's sample is an arbitrary limit(3): compare its stats only
+    stats = [c.get("/check_data").get_json()["stats"] for c in (single, multi)]
+    assert stats[0] == stats[1]
+
+
+def test_null_anchor_label_has_no_peers(twin_apps):
+    for name in ("single", "multi"):
+        r = twin_apps[name][0].get(f"/recommend_similar_app_by_name/{NULL_LABEL_ID}")
+        assert (r.status_code, r.get_json()) == (200, []), name
