@@ -232,6 +232,13 @@ def write_watermark(
     os.replace(tmp, path)  # atomic on POSIX
 
 
+def _free_local_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks ``df.localCheckpoint()`` stored: the frame's plan
+    is a LogicalRDD over the checkpointed RDD, whose blocks otherwise
+    stay until the JVM's garbage collector collects that RDD."""
+    df._jdf.queryExecution().logical().rdd().unpersist(True)
+
+
 def delta_merge_sink(
     stream: DataFrame,
     spark: SparkSession,
@@ -287,21 +294,29 @@ def delta_merge_sink(
         # batch's merge — a lost executor just fails the batch and the
         # at-least-once replay re-derives the delta from the source.
         delta = delta_fn(batch_df).localCheckpoint(eager=True)
-        if _has_parquet_data(out_dir):
-            base = (
-                spark.read.parquet(out_dir)
-                .join(F.broadcast(delta.select(key)), key, "left_semi")
-                .select(*delta.columns)
-            )
-            # the combined view rows are re-read by every downstream
-            # action too — same one-materialization treatment
-            merged = combine_fn(
-                base.unionByName(delta)
-            ).localCheckpoint(eager=True)
-        else:
-            merged = delta
-        merge_batch_into(spark, merged, key, out_dir)
-        write_watermark(out_dir, batch_id, lineage)
+        frames = [delta]
+        try:
+            if _has_parquet_data(out_dir):
+                base = (
+                    spark.read.parquet(out_dir)
+                    .join(F.broadcast(delta.select(key)), key, "left_semi")
+                    .select(*delta.columns)
+                )
+                # the combined view rows are re-read by every downstream
+                # action too — same one-materialization treatment
+                merged = combine_fn(
+                    base.unionByName(delta)
+                ).localCheckpoint(eager=True)
+                frames.append(merged)
+            else:
+                merged = delta
+            merge_batch_into(spark, merged, key, out_dir)
+            write_watermark(out_dir, batch_id, lineage)
+        finally:
+            # free the blocks now, not when the JVM's GC collects
+            # the frames: storage then holds one batch at a time
+            for df in frames:
+                _free_local_checkpoint(df)
 
     return (
         stream.writeStream.foreachBatch(merge)

@@ -121,6 +121,23 @@ def test_bench_emits_calib_normalized_headline():
     assert '"value_norm"' in src.split("if len(line) >= 2000")[1][:400]
 
 
+def test_reprobe_baseline_is_the_latest_committed_sweep(monkeypatch):
+    """With no override, bench.py's reprobe compares against the one
+    committed full sweep, bench_full_r16.json, keyed tier-free."""
+    import json
+    import os
+
+    import bench
+
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_PREV", raising=False)
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+    with open(os.path.join(here, "bench_full_r16.json")) as fh:
+        queries = json.load(fh)["queries"]
+    assert bench.prev_sweep_timings() == {
+        bench._canon(k): float(v) for k, v in queries.items()
+    }
+
+
 def test_doc_counts_rendered_from_registry():
     """The query/oracle tallies in __spark_entry__'s docstring and the
     README/SURVEY prose must equal the live registry — two consecutive

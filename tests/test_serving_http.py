@@ -6,6 +6,9 @@ Spark jobs each request runs."""
 from __future__ import annotations
 
 import itertools
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pytest
@@ -21,6 +24,9 @@ SERVED = ("orders", "customer", "embeddings")
 KEYS = {"orders": "o_orderkey", "customer": "c_custkey", "embeddings": "vec_id"}
 #: the embeddings row whose label the twin_apps tables null out
 NULL_LABEL_ID = 7
+#: a label the twin_apps tables give to exactly eleven embeddings rows
+ELEVEN_LABEL = 99
+ELEVEN_IDS = list(range(0, 401, 40))
 
 
 @pytest.fixture(scope="module")
@@ -207,6 +213,14 @@ def _jobs(spark, client, url: str) -> tuple[int, int]:
     return status, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _fresh_app(spark):
+    """A new app over the SF0001 tables: its answer memo is empty (the
+    cached tables are shared with the module's app, which is cheap)."""
+    app = serving_http.build_app(spark, SF0001)
+    app.testing = True
+    return app.test_client(), app.extensions["serving_answers"]
+
+
 @pytest.mark.parametrize(
     "url,status,jobs",
     [
@@ -214,20 +228,158 @@ def _jobs(spark, client, url: str) -> tuple[int, int]:
         ("/categories", 200, 1),
         ("/search_app_suggestions?q=19", 200, 1),
         ("/app_details_by_id/1", 200, 1),
+        ("/app_details_by_id/999999999", 404, 1),
         ("/recommend_apps_by_category/2-HIGH", 200, 1),
         ("/top_apps?limit=10", 200, 1),
         ("/top_apps?limit=10&category=1-URGENT", 200, 1),
+        ("/top_apps?sort_by=nope", 400, 0),
         ("/apps_in_cluster/3", 200, 1),
         ("/recommend_similar_app_by_name/5", 200, 2),
         ("/recommend_similar_app_by_name/999999", 404, 1),
     ],
 )
-def test_spark_jobs_per_request(spark, client, url, status, jobs):
-    """One-file tables are cached as SinglePartition, so distinct, global
-    aggregates and orderBy plan no Exchange (and AQE splits no extra
-    job); the similar-app anchor is one collect, not isEmpty + join."""
-    for _ in range(2):  # the first and a warm request run the same jobs
-        assert _jobs(spark, client, url) == (status, jobs)
+def test_spark_jobs_per_request(spark, url, status, jobs):
+    """On a fresh app the first request for a key runs its query: one
+    job, as one-file tables are cached as SinglePartition (distinct,
+    global aggregates and orderBy plan no Exchange, so AQE splits no
+    extra job); check_data runs its stats and its sample, a found
+    similar app its anchor lookup and its label's cluster listing. A
+    repeat is answered from the app's memo and runs none."""
+    client, _ = _fresh_app(spark)
+    assert _jobs(spark, client, url) == (status, jobs)
+    assert _jobs(spark, client, url) == (status, 0)
+
+
+def test_similar_jobs_per_request(spark, duck):
+    """A similar-app miss runs one job, the anchor's label lookup, once
+    that label's cluster listing is memoized."""
+    label = _rows(duck, "SELECT label FROM embeddings WHERE vec_id = 5")[0]["label"]
+    client, _ = _fresh_app(spark)
+    assert _jobs(spark, client, f"/apps_in_cluster/{label}") == (200, 1)
+    assert _jobs(spark, client, "/recommend_similar_app_by_name/5") == (200, 1)
+    assert _jobs(spark, client, "/recommend_similar_app_by_name/5") == (200, 0)
+
+
+def test_pre_query_400s_are_not_memoized(spark):
+    client, answers = _fresh_app(spark)
+    for url in ("/search_app_suggestions?q=a", "/top_apps?limit=abc",
+                "/top_apps?limit=-1", "/top_apps?sort_by=nope"):
+        assert _jobs(spark, client, url) == (400, 0), url
+    assert answers.cache_info().currsize == 0
+
+
+def test_over_long_text_is_not_memoized(spark):
+    """Text over MEMO_KEY_CHARS runs its query on every request and is
+    never stored; text at the limit is memoized."""
+    client, answers = _fresh_app(spark)
+    n = serving_http.MEMO_KEY_CHARS
+    for url in (f"/search_app_suggestions?q={'x' * (n + 1)}",
+                f"/recommend_apps_by_category/{'y' * (n + 1)}",
+                f"/top_apps?category={'z' * (n + 1 - len('o_totalprice'))}"):
+        assert _jobs(spark, client, url) == (200, 1), url[:40]
+        assert _jobs(spark, client, url) == (200, 1), url[:40]
+    assert answers.cache_info().currsize == 0
+    url = f"/search_app_suggestions?q={'x' * n}"
+    assert _jobs(spark, client, url) == (200, 1)
+    assert _jobs(spark, client, url) == (200, 0)
+    assert answers.cache_info().currsize == 1
+
+
+# ---------------------------------------------------------------------------
+# The per-app answer memo
+# ---------------------------------------------------------------------------
+
+
+def _oracle_cases(con) -> list[tuple[str, object]]:
+    """(url, the body DuckDB says it must return), one or more per route."""
+    stats = _rows(
+        con,
+        "SELECT count(*) AS cnt, min(o_orderkey) AS min_key, "
+        "max(o_orderkey) AS max_key FROM orders",
+    )[0]
+    cats = _rows(
+        con,
+        "SELECT DISTINCT c_mktsegment AS category FROM customer "
+        "WHERE c_mktsegment IS NOT NULL ORDER BY category",
+    )
+    return [
+        ("/check_data", stats),
+        ("/categories", [r["category"] for r in cats]),
+        ("/search_app_suggestions?q=19", _search_oracle(con, "19")),
+        ("/search_app_suggestions?q=%20CUSTOMER", _search_oracle(con, "customer")),
+        ("/app_details_by_id/1", _rows(
+            con, "SELECT * FROM orders WHERE o_orderkey = 1")[0]),
+        ("/recommend_apps_by_category/5-low", _by_category_oracle(con, "5-low")),
+        ("/top_apps?sort_by=o_custkey&limit=7&category=3-MEDIUM",
+         _top_oracle(con, "o_custkey", 7, "3-MEDIUM")),
+        ("/apps_in_cluster/4", _cluster_oracle(con, 4)),
+        ("/recommend_similar_app_by_name/5", _similar_oracle(con, 5)),
+        ("/recommend_similar_app_by_name/499", _similar_oracle(con, 499)),
+    ]
+
+
+def test_hit_body_equals_miss_body_equals_duckdb(spark, duck):
+    client, answers = _fresh_app(spark)
+    for url, want in _oracle_cases(duck):
+        miss = client.get(url)
+        hits = answers.cache_info().hits
+        hit = client.get(url)
+        assert answers.cache_info().hits == hits + 1, url
+        assert miss.status_code == hit.status_code == 200, url
+        assert miss.data == hit.data, url
+        body = miss.get_json()
+        assert (body["stats"] if url == "/check_data" else body) == want, url
+
+
+def test_memo_stays_within_its_bound(spark):
+    """More distinct keys than the bound: the memo never holds more than
+    ANSWER_CACHE_SIZE answers, and the oldest are the ones let go. The
+    keys are distinct search texts, each answered by its own query (four
+    clients at once between the first key and the last)."""
+    client, answers = _fresh_app(spark)
+    bound = serving_http.ANSWER_CACHE_SIZE
+    url = "/search_app_suggestions?q=q{}".format
+
+    def ask(i):
+        assert client.application.test_client().get(url(i)).status_code == 200
+        assert answers.cache_info().currsize <= bound
+
+    ask(0)
+    with ThreadPoolExecutor(4) as pool:
+        list(pool.map(ask, range(1, bound + 99)))
+    ask(bound + 99)
+    assert answers.cache_info().currsize == bound
+    assert answers.cache_info().misses == bound + 100
+    assert _jobs(spark, client, url(bound + 99)) == (200, 0)  # newest: kept
+    assert _jobs(spark, client, url(0)) == (200, 1)  # oldest: evicted
+
+
+def test_concurrent_clients_get_identical_bodies(spark, duck):
+    """More clients than cores ask for the same keys at once, with the
+    interpreter switching threads as often as it can: every client gets
+    the same status and the same bytes for every key."""
+    client, answers = _fresh_app(spark)
+    app = client.application
+    urls = [url for url, _ in _oracle_cases(duck)]
+    n = 8
+    start = threading.Barrier(n)
+
+    def ask(_):
+        c = app.test_client()
+        start.wait(timeout=60)
+        return [(r.status_code, r.data) for r in map(c.get, urls)]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(n) as pool:
+            seen = [f.result(timeout=300) for f in
+                    [pool.submit(ask, i) for i in range(n)]]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(s == seen[0] for s in seen)
+    assert {status for status, _ in seen[0]} == {200}
+    assert len(urls) <= answers.cache_info().currsize <= serving_http.ANSWER_CACHE_SIZE
 
 
 # ---------------------------------------------------------------------------
@@ -245,9 +397,10 @@ def _cached_rdds(spark) -> dict[int, tuple[int, int]]:
 
 @pytest.fixture(scope="module")
 def twin_apps(spark, tmp_path_factory):
-    """The SF0001 serving tables, one embeddings label nulled, written
-    twice: one file per table, and three files per table. Returns each
-    app's test client and the RDD storage facts its build_app added."""
+    """The SF0001 serving tables, one embeddings label nulled and one
+    label given to exactly eleven rows, written twice: one file per
+    table, and three files per table. Returns each app's test client and
+    the RDD storage facts its build_app added."""
     root = tmp_path_factory.mktemp("serving_twins")
     single, multi = root / "single", root / "multi"
     for t in SERVED:
@@ -255,7 +408,8 @@ def twin_apps(spark, tmp_path_factory):
         if t == "embeddings":
             df = df.withColumn(
                 "label",
-                F.when(F.col("vec_id") != NULL_LABEL_ID, F.col("label")),
+                F.when(F.col("vec_id").isin(ELEVEN_IDS), ELEVEN_LABEL)
+                .when(F.col("vec_id") != NULL_LABEL_ID, F.col("label")),
             )
         df.coalesce(1).write.parquet(str(single / f"{t}.parquet"))
         df.repartitionByRange(3, KEYS[t]).write.parquet(str(multi / f"{t}.parquet"))
@@ -305,3 +459,26 @@ def test_null_anchor_label_has_no_peers(twin_apps):
     for name in ("single", "multi"):
         r = twin_apps[name][0].get(f"/recommend_similar_app_by_name/{NULL_LABEL_ID}")
         assert (r.status_code, r.get_json()) == (200, []), name
+
+
+def test_similar_on_an_eleven_member_label(twin_apps):
+    """Peers are the label's cluster listing without the anchor, whether
+    the anchor comes first or last in it."""
+    members = [{"vec_id": i, "label": ELEVEN_LABEL} for i in ELEVEN_IDS]
+    for name in ("single", "multi"):
+        client = twin_apps[name][0]
+        for anchor in (ELEVEN_IDS[0], ELEVEN_IDS[-1]):
+            peers = _get(client, f"/recommend_similar_app_by_name/{anchor}")
+            assert peers == [m for m in members if m["vec_id"] != anchor], name
+            assert len(peers) == serving_http.SIMILAR_LIMIT
+        assert _get(client, f"/apps_in_cluster/{ELEVEN_LABEL}") == members
+
+
+def test_each_app_has_its_own_memo(twin_apps):
+    single, multi = (twin_apps[n][0] for n in ("single", "multi"))
+    answers = [c.application.extensions["serving_answers"] for c in (single, multi)]
+    assert answers[0] is not answers[1]
+    before = answers[1].cache_info()
+    single.get("/app_details_by_id/2")
+    single.get("/app_details_by_id/2")
+    assert answers[1].cache_info() == before

@@ -343,6 +343,49 @@ def test_delta_merge_sink_replay_and_fresh_lineage(spark, tmp_path):
     assert after == expected
 
 
+def test_delta_merge_sink_frees_each_batch_blocks(spark, tmp_path):
+    """Every micro-batch's localCheckpoint blocks are dropped at the end
+    of its merge: across a six-batch availableNow stream, no batch
+    starts (and the stream does not end) with an earlier batch's blocks
+    still in storage, whenever the JVM's GC runs."""
+    from pyspark.sql import functions as F
+
+    from a3_fp_bigdata_spark.streaming import materialized as MV
+
+    stage, out = str(tmp_path / "stage"), str(tmp_path / "view")
+    rows = spark.range(60).selectExpr("id % 7 AS k", "id AS n")
+    rows.repartition(6).write.parquet(stage)
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {i.id() for i in sc.getRDDStorageInfo()}
+
+    before = stored()
+    leftover = []
+
+    def delta_fn(batch):
+        leftover.append(stored() - before)
+        return batch.groupBy("k").agg(F.sum("n").alias("n"))
+
+    def combine_fn(df):
+        return df.groupBy("k").agg(F.sum("n").alias("n"))
+
+    stream = (
+        spark.readStream.schema("k long, n long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage)
+    )
+    MV.delta_merge_sink(
+        stream, spark, out, key="k", delta_fn=delta_fn, combine_fn=combine_fn,
+        checkpoint_dir=str(tmp_path / "cp"),
+    ).awaitTermination()
+    leftover.append(stored() - before)
+    assert leftover == [set()] * 7  # six batch starts and the end
+    got = sorted(map(tuple, MV.read_view(spark, out).select("k", "n").collect()))
+    want = sorted(map(tuple, combine_fn(rows).select("k", "n").collect()))
+    assert got == want
+
+
 def test_watermark_lineage_scoping(tmp_path):
     """read/write_watermark unit semantics: lineage match returns the
     id, mismatch returns -1, and a legacy bare-int file reads as
