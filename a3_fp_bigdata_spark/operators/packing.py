@@ -30,8 +30,11 @@ are just more files). Nothing funnels through the driver.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from a3_fp_bigdata_spark.data import (
     read_stamped_scratch,
@@ -1603,8 +1606,10 @@ def pl6_forget_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     the memoized d12 cluster table (near-dup members, a small fraction
     of the corpus), never the corpus itself. At 100 TB: requests
     broadcast against the materialized cluster snapshot — one
-    broadcast-hash join plus one corpus-scan filter for the request
-    rows; no new shuffle over document text anywhere."""
+    broadcast-hash join for the affected clusters' members, one
+    corpus-scan filter for the request rows, and one full outer join
+    of those two request-sized sets; no new shuffle over document
+    text anywhere."""
     from a3_fp_bigdata_spark.operators.dedup import d12_dedup_clusters
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
@@ -1615,26 +1620,25 @@ def pl6_forget_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cluster_id")
         .distinct()
     )
-    requested = (
-        req.join(clusters, "doc_id", "left")
+    members = clusters.join(F.broadcast(req_clusters), "cluster_id")
+    # A full outer join, not a union: a union of two children
+    # hash-partitioned on doc_id claims that partitioning while the
+    # sort-merge join above it is planned, and drops the claim once
+    # exchange reuse rewrites one child; without AQE it then runs as
+    # a concatenation (4 + 4 partitions) zipped against 4 partitions.
+    return (
+        req.withColumn("_req", F.lit(True))
+        .join(members, "doc_id", "full")
         .select(
             "doc_id",
-            F.lit("requested").alias("reason"),
+            F.when(F.col("_req"), F.lit("requested"))
+            .otherwise(F.lit("cluster_expansion"))
+            .alias("reason"),
             F.coalesce(F.col("cluster_id"), F.lit(-1))
             .cast("long")
             .alias("cluster_id"),
         )
     )
-    expansion = (
-        clusters.join(F.broadcast(req_clusters), "cluster_id")
-        .filter(~_forget_predicate(F.col("doc_id")))
-        .select(
-            "doc_id",
-            F.lit("cluster_expansion").alias("reason"),
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-        )
-    )
-    return requested.unionByName(expansion)
 
 
 @query(
@@ -2155,7 +2159,25 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain ran twice, once per rate/mixture branch, until surv was
     pinned. After both: 0 per-run broadcast joins (+12 inside staged
     relations materialized once), planner time 0.14 s for the whole
-    composition at sf0.1, wall 11.3 -> 9.9 s warm."""
+    composition at sf0.1, wall 11.3 -> 9.9 s warm.
+
+    Two branches at once: d17's verdict (table fingerprint, seeded
+    k-means fit, two scratch writes) needs nothing from the span cut,
+    the clusters or the decontamination sets, so it builds on one
+    worker thread (``inheritable_thread_target``: its jobs keep the
+    caller's job group, description and pool) while this thread
+    builds d12 through the span cut, then tx9/d18, then pl6, and waits
+    for the verdict only where ``sem_drop`` reads it. The overlap pays
+    only while each branch alone leaves task slots idle: on the
+    100-document benchmark corpus on 4 cores both are sequences of
+    small jobs (propagation rounds, k-means iterations). Where a
+    branch's jobs fill the slots on their own (the k-means fit scans
+    the whole embeddings table each iteration, the fingerprint is a
+    full scan) the two branches share slots instead, and that gain is
+    unmeasured; CC's fewer jobs per round do not depend on input size.
+    The stage registry is safe for the two callers (stages.py). A
+    failure on either side waits for the branch to end, then
+    raises."""
     from a3_fp_bigdata_spark.operators.dedup import (
         d18_fuzzy_decontaminate,
     )
@@ -2169,23 +2191,30 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from a3_fp_bigdata_spark.registry import pin
 
-    kept = _span_clean_docs(spark, sf_dir)
-    flagged = (
-        tx9_decontaminate(spark, sf_dir)
-        .select("doc_id")
-        .union(d18_fuzzy_decontaminate(spark, sf_dir).select("doc_id"))
-        .distinct()
-    )
-    clean = kept.filter(
-        ~sample_predicate(F.col("doc_id"), DECON_BENCH_PCT)
-    ).join(flagged, "doc_id", "left_anti")
-    sem_drop = (
-        materialize_d17_verdict(spark, sf_dir)
-        .filter(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
+    # leaving the block waits for the d17 branch, on a failure too
+    with ThreadPoolExecutor(1) as pool:
+        verdict = pool.submit(
+            inheritable_thread_target(spark)(materialize_d17_verdict),
+            spark,
+            sf_dir,
+        )
+        kept = _span_clean_docs(spark, sf_dir)
+        flagged = (
+            tx9_decontaminate(spark, sf_dir)
+            .select("doc_id")
+            .union(d18_fuzzy_decontaminate(spark, sf_dir).select("doc_id"))
+            .distinct()
+        )
+        clean = kept.filter(
+            ~sample_predicate(F.col("doc_id"), DECON_BENCH_PCT)
+        ).join(flagged, "doc_id", "left_anti")
+        purged = pl6_forget_ledger(spark, sf_dir).select("doc_id")
+        sem_drop = (
+            verdict.result()
+            .filter(~F.col("is_kept"))
+            .select(F.col("vec_id").alias("doc_id"))
+        )
     clean = clean.join(sem_drop, "doc_id", "left_anti")
-    purged = pl6_forget_ledger(spark, sf_dir).select("doc_id")
     clean = clean.join(purged, "doc_id", "left_anti")
 
     langs = table(spark, sf_dir, "documents").select("doc_id", "lang")

@@ -27,14 +27,24 @@ call site keeps its own ``persist(MEMORY_AND_DISK)`` or
 ``localCheckpoint()`` choice, because the two measurably differ in
 cost per stage. Per-query ``registry.release_pinned()`` does not touch
 these entries — dropping a shared stage between queries makes the
-next consumer rebuild it. Stages are built from one driver thread;
-the registry takes no lock.
+next consumer rebuild it. Dropping an entry also frees the blocks of
+a ``localCheckpoint`` behind its value (``free_checkpoint``), which
+``unpersist()`` does not touch.
+
+Stages may be asked for from several driver threads at once (pl8
+builds d17's verdict on a second thread). One lock guards the entry
+table and the dead-session sweep, and is never held across a build;
+each key has its own build lock, so one key builds once while
+different keys build in parallel. A build only asks for stages
+upstream of it, so build locks are taken in the order of the acyclic
+stage graph and cannot deadlock.
 """
 
 from __future__ import annotations
 
 import os
 import stat
+import threading
 from typing import Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +55,10 @@ T = TypeVar("T")
 
 #: (token, name, key, inputs) -> (snapshot, value)
 _ENTRIES: dict[tuple, tuple[tuple, object]] = {}
+#: the same keys -> the lock held while that stage builds
+_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
+#: guards _ENTRIES and _BUILD_LOCKS; never held across a build
+_LOCK = threading.Lock()
 
 
 def snapshot(path: str) -> tuple | None:
@@ -66,11 +80,27 @@ def snapshot(path: str) -> tuple | None:
         return None
 
 
+def free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks a ``localCheckpoint()`` behind ``df`` stored.
+    ``unpersist()`` leaves them until the JVM's garbage collector
+    collects the checkpointed RDD. The walk goes down single-child
+    nodes (projections, renames, filters) to the plan's leaf, so a
+    frame derived from a checkpoint frees it too; a leaf that is not
+    a LogicalRDD holds no checkpoint and is left alone. A frame still
+    reading the freed checkpoint fails loudly on its next action."""
+    plan = df._jdf.queryExecution().logical()
+    while plan.children().size() == 1:
+        plan = plan.children().head()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(True)
+
+
 def _unpersist(value: object) -> None:
     for v in value if isinstance(value, tuple) else (value,):
         if isinstance(v, DataFrame):
             try:
                 v.unpersist()
+                free_checkpoint(v)
             except Exception:
                 pass  # its session is already gone
 
@@ -86,23 +116,35 @@ def get(
     ``inputs`` paths: the stored value while the inputs' snapshot is
     unchanged, else ``build()``'s."""
     token = session_token(spark)
-    for k in [k for k in _ENTRIES if k[0] != token]:
-        _unpersist(_ENTRIES.pop(k)[1])
     inputs = tuple(inputs)
     entry_key = (token, name, key, inputs)
-    snap = tuple(snapshot(p) for p in inputs)
-    hit = _ENTRIES.get(entry_key)
-    if hit is not None:
-        if hit[0] == snap:
-            return hit[1]
-        _unpersist(_ENTRIES.pop(entry_key)[1])
-    value = build()
-    _ENTRIES[entry_key] = (snap, value)
-    return value
+    with _LOCK:
+        dead = [_ENTRIES.pop(k)[1] for k in list(_ENTRIES) if k[0] != token]
+        for k in [k for k in _BUILD_LOCKS if k[0] != token]:
+            del _BUILD_LOCKS[k]
+        build_lock = _BUILD_LOCKS.setdefault(entry_key, threading.Lock())
+    for value in dead:
+        _unpersist(value)
+    with build_lock:
+        snap = tuple(snapshot(p) for p in inputs)
+        with _LOCK:
+            hit = _ENTRIES.get(entry_key)
+            if hit is not None and hit[0] == snap:
+                return hit[1]
+            _ENTRIES.pop(entry_key, None)
+        if hit is not None:
+            _unpersist(hit[1])
+        value = build()
+        with _LOCK:
+            _ENTRIES[entry_key] = (snap, value)
+        return value
 
 
 def release_all() -> None:
     """Drop and unpersist every stage (tests and harnesses that need
     the memory back or a cold start)."""
-    while _ENTRIES:
-        _unpersist(_ENTRIES.popitem()[1])
+    with _LOCK:
+        values = [v for _snap, v in _ENTRIES.values()]
+        _ENTRIES.clear()
+    for value in values:
+        _unpersist(value)

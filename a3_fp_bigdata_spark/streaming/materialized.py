@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from a3_fp_bigdata_spark.functions.rounding import half_up
 from a3_fp_bigdata_spark.operators.upsert import merge_upsert
+from a3_fp_bigdata_spark.stages import free_checkpoint
 
 #: Default key-bucket count. Small here (tests touch few keys); at
 #: production scale size it so one bucket's rows fit an executor task
@@ -232,13 +233,6 @@ def write_watermark(
     os.replace(tmp, path)  # atomic on POSIX
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Drop the blocks ``df.localCheckpoint()`` stored: the frame's plan
-    is a LogicalRDD over the checkpointed RDD, whose blocks otherwise
-    stay until the JVM's garbage collector collects that RDD."""
-    df._jdf.queryExecution().logical().rdd().unpersist(True)
-
-
 def delta_merge_sink(
     stream: DataFrame,
     spark: SparkSession,
@@ -316,7 +310,7 @@ def delta_merge_sink(
             # free the blocks now, not when the JVM's GC collects
             # the frames: storage then holds one batch at a time
             for df in frames:
-                _free_local_checkpoint(df)
+                free_checkpoint(df)
 
     return (
         stream.writeStream.foreachBatch(merge)

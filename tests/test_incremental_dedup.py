@@ -12,7 +12,7 @@ from a3_fp_bigdata_spark.operators.text_analysis import (
     SAMPLE_MULT,
     SAMPLE_PREMOD,
 )
-from tests.conftest import SF0001, SF001
+from tests.conftest import SF0001, SF001, job_group, job_ids
 
 
 def _is_new(doc_id: int) -> bool:
@@ -115,7 +115,9 @@ def test_connected_components_rounds_track_diameter(spark):
     round, plus the round that observes convergence), labels exact.
     SCALE.md's CC rung asserts the same at 100k nodes; this pins the
     semantics at unit size, plus the max_iters guard raising loudly
-    on a graph deeper than the cap (the adversarial chain shape)."""
+    on a graph deeper than the cap (the adversarial chain shape).
+    Job counts are pinned too: round 1 reads the edge list alone and
+    each round's convergence check is one filter over its checkpoint."""
     import pytest
 
     from a3_fp_bigdata_spark import registry as reg
@@ -124,26 +126,29 @@ def test_connected_components_rounds_track_diameter(spark):
     def pairs_df(pairs):
         return spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
+    def run(group, pairs):
+        with job_group(spark, group):
+            labels, rounds = connected_components(spark, pairs_df(pairs))
+        jobs = len(job_ids(spark, group))
+        got = {r.doc_id: r.lab for r in labels.collect()}
+        labels.unpersist()
+        reg.release_pinned()
+        return got, rounds, jobs
+
     # chain 0-1-2-3-4: min label 0 travels 4 hops -> 5 rounds
-    labels, rounds = connected_components(
-        spark, pairs_df([(i, i + 1) for i in range(4)])
-    )
-    got = {r.doc_id: r.lab for r in labels.collect()}
+    got, rounds, jobs = run("cc-chain", [(i, i + 1) for i in range(4)])
     assert got == {i: 0 for i in range(5)}
     assert rounds == 5
-    labels.unpersist()
-    reg.release_pinned()
+    assert jobs <= 31, jobs
 
     # two triangles (cliques, diam 1): converge in 1 round + 1 observe
-    labels, rounds = connected_components(
-        spark,
-        pairs_df([(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12)]),
+    got, rounds, jobs = run(
+        "cc-triangles",
+        [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12)],
     )
-    got = {r.doc_id: r.lab for r in labels.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10}
     assert rounds == 2
-    labels.unpersist()
-    reg.release_pinned()
+    assert jobs <= 11, jobs
 
     # a chain deeper than the cap must refuse loudly, never return
     # half-propagated labels

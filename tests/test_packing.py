@@ -7,8 +7,10 @@ actually relies on, independent of any oracle."""
 from __future__ import annotations
 
 import math
+import threading
+import time
 
-from a3_fp_bigdata_spark import registry
+from a3_fp_bigdata_spark import registry, stages
 from a3_fp_bigdata_spark.operators.packing import (
     NSHARDS,
     PACK_BUDGET,
@@ -17,7 +19,7 @@ from a3_fp_bigdata_spark.operators.packing import (
     STRATA_DEFAULT_PCT,
     STRATA_PCT,
 )
-from tests.conftest import SF0001
+from tests.conftest import SF0001, job_group, job_ids
 
 
 def test_concat_chunks_is_a_gapless_token_stream(spark):
@@ -611,6 +613,89 @@ def test_pl8_release_manifest_composes_and_attests(spark):
 
     again = qs["pl8_release_manifest"](spark, SF0001).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+
+
+def _pl8_rows(spark) -> list[tuple]:
+    rows = registry.all_queries()["pl8_release_manifest"](spark, SF0001)
+    return sorted(map(tuple, rows.collect()))
+
+
+def test_pl8_jobs_stay_in_the_callers_job_group(spark):
+    """pl8 builds d17's verdict on a worker thread: every job of the
+    pass, that branch's included, runs under the caller's job group
+    (perfbench charges a traced pass by it), and when pl8 returns no
+    thread or Spark job of the pass is still running."""
+    registry.release_pinned()
+    stages.release_all()
+    threads = threading.active_count()
+    outside = job_ids(spark, None)
+    with job_group(spark, "pl8-pass"):
+        df = registry.all_queries()["pl8_release_manifest"](spark, SF0001)
+        assert threading.active_count() == threads
+        assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+        df.collect()
+    # the tracker keeps the newest jobs only, so compare new ids
+    assert job_ids(spark, None) - outside == set()
+    assert len(job_ids(spark, "pl8-pass")) > 40
+
+
+def test_pl8_raises_the_verdict_branchs_error(spark, monkeypatch):
+    """A failing d17 branch fails pl8 with that same error, and a
+    failure on the calling side waits for the branch before raising."""
+    import pytest
+
+    from a3_fp_bigdata_spark.operators import similarity, text_analysis
+
+    boom = RuntimeError("verdict failed")
+
+    def failing(spark, sf_dir):
+        spark.range(3).count()
+        raise boom
+
+    monkeypatch.setattr(similarity, "materialize_d17_verdict", failing)
+    with pytest.raises(RuntimeError) as err:
+        _pl8_rows(spark)
+    assert err.value is boom
+    monkeypatch.undo()
+
+    finished = threading.Event()
+    real = similarity.materialize_d17_verdict
+
+    def slow(spark, sf_dir):
+        time.sleep(1)
+        out = real(spark, sf_dir)
+        finished.set()
+        return out
+
+    def decon_fails(spark, sf_dir):
+        raise ValueError("decon failed")
+
+    monkeypatch.setattr(similarity, "materialize_d17_verdict", slow)
+    monkeypatch.setattr(text_analysis, "tx9_decontaminate", decon_fails)
+    with pytest.raises(ValueError, match="decon failed"):
+        _pl8_rows(spark)
+    assert finished.is_set()
+
+
+def test_pl8_rows_without_aqe_equal_rows_with_it(spark):
+    """pl8 plans and runs with adaptive execution off, stages built
+    cold there too. A union of two doc_id-hash-partitioned children
+    under the purge sort-merge join fails this: exchange reuse drops
+    the union's partitioning claim after the join was planned on it,
+    and the union runs as 4 + 4 partitions zipped against 4."""
+    with_aqe = _pl8_rows(spark)
+    registry.release_pinned()
+    stages.release_all()
+    conf = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        without = _pl8_rows(spark)
+    finally:
+        spark.conf.set(conf, old)
+        registry.release_pinned()
+        stages.release_all()
+    assert without == with_aqe
 
 
 def test_pk13_curriculum_is_a_global_total_order(spark):

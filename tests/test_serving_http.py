@@ -14,7 +14,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF0001
+from tests.conftest import SF0001, job_group, job_ids
 
 flask = pytest.importorskip("flask")
 
@@ -200,17 +200,10 @@ _groups = itertools.count()
 
 def _jobs(spark, client, url: str) -> tuple[int, int]:
     """(status, number of Spark jobs the request ran)."""
-    sc = spark.sparkContext
     group = f"serving-http-test-{next(_groups)}"
-    sc.setJobGroup(group, url)
-    try:
+    with job_group(spark, group):
         status = client.get(url).status_code
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status tracker is fed by the listener bus, asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return status, len(sc.statusTracker().getJobIdsForGroup(group))
+    return status, len(job_ids(spark, group))
 
 
 def _fresh_app(spark):

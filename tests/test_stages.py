@@ -10,6 +10,10 @@ from __future__ import annotations
 
 import pathlib
 import re
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pyarrow as pa
@@ -19,6 +23,7 @@ from a3_fp_bigdata_spark import registry, stages
 from a3_fp_bigdata_spark.data import FINGERPRINT_MOD, table_fingerprint
 from a3_fp_bigdata_spark.operators import suffixes as SX
 from a3_fp_bigdata_spark.operators.similarity import _semdedup_cells
+from tests.conftest import SF0001
 
 _DOCS = pa.schema(
     [
@@ -126,3 +131,94 @@ def test_session_token_read_only_by_stages():
         "a3_fp_bigdata_spark/session.py",
         "a3_fp_bigdata_spark/stages.py",
     }
+
+
+def test_one_key_builds_once_under_concurrent_callers(spark):
+    """Eight threads asking for one cold key: one build, one value."""
+    stages.release_all()
+    builds = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.2)
+        return object()
+
+    with ThreadPoolExecutor(8) as pool:
+        values = list(
+            pool.map(
+                lambda _: stages.get(spark, "concurrent_one", (), build, []),
+                range(8),
+            )
+        )
+    assert len(builds) == 1
+    assert all(v is values[0] for v in values)
+    stages.release_all()
+
+
+def test_different_keys_build_in_parallel(spark):
+    """Each build waits (with a timeout) for the other to start, so
+    both see the other only if the registry runs them side by side."""
+    stages.release_all()
+    started = {"a": threading.Event(), "b": threading.Event()}
+
+    def build(me, other):
+        started[me].set()
+        return started[other].wait(timeout=20)
+
+    with ThreadPoolExecutor(2) as pool:
+        a = pool.submit(
+            stages.get, spark, "parallel_a", (), lambda: build("a", "b"), []
+        )
+        b = pool.submit(
+            stages.get, spark, "parallel_b", (), lambda: build("b", "a"), []
+        )
+        assert a.result() and b.result()
+    stages.release_all()
+
+
+def test_dead_session_sweep_under_concurrent_inserts(spark, monkeypatch):
+    """Threads under different session tokens insert entries while
+    each get sweeps the others' entries as dead: no sweep ever sees
+    the entry table change under it."""
+    stages.release_all()
+    local = threading.local()
+    monkeypatch.setattr(stages, "session_token", lambda _s: local.token)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+
+    def worker(t):
+        local.token = f"token-{t % 2}"
+        for i in range(300):
+            stages.get(spark, "sweep", (t, i), lambda: i, [])
+
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            for f in [pool.submit(worker, t) for t in range(8)]:
+                f.result()
+    finally:
+        sys.setswitchinterval(switch)
+        stages.release_all()
+
+
+def test_release_all_frees_checkpoint_blocks(spark):
+    """Dropping a stage frees the localCheckpoint blocks behind it,
+    including a projected value (d12's cluster_id rename) and CC's
+    superseded rounds: after release_all, no RDD the builds stored
+    is left in storage."""
+    from a3_fp_bigdata_spark.operators.dedup import d12_dedup_clusters
+
+    sc = spark.sparkContext
+
+    def stored() -> set[int]:
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    stages.release_all()
+    registry.release_pinned()
+    before = stored()
+    d12_dedup_clusters(spark, SF0001).count()
+    _semdedup_cells(spark, SF0001).count()
+    assert stored() - before, "the builds stored nothing"
+    registry.release_pinned()
+    stages.release_all()
+    spark.catalog.clearCache()
+    assert stored() - before == set()
