@@ -268,11 +268,12 @@ def table_fingerprint(
     table_name: str,
     key_col: str,
     table_fn=None,
-) -> DataFrame:
+) -> tuple[int, int]:
     """Memoized ``src_fingerprint`` over a named driver table: the
-    1-row (n_src, src_ck) stamp is collected ONCE per (session, table
+    ``(n_src, src_ck)`` stamp is collected ONCE per (session, table
     file snapshot, key, source-plan) as a stage (stages.py) and
-    re-attached as a literal LocalRelation.
+    returned as a plain tuple, which ``stamp`` attaches to a scratch
+    frame as two literal columns.
 
     r15 optimization (guide §2.4 — don't recompute what can't have
     changed): every audit-scratch write used to re-run the stamp's
@@ -292,15 +293,29 @@ def table_fingerprint(
     changes its snapshot, so the stamp is re-collected."""
     src = (table_fn or table)(spark, sf_dir, table_name)
 
-    def stamp() -> tuple[int, int]:
+    def collect() -> tuple[int, int]:
         row = src_fingerprint(src, key_col).first()
         return (row["n_src"], row["src_ck"])
 
-    n, ck = stages.get(
-        spark, "table_fingerprint", (key_col, src.semanticHash()), stamp,
+    return stages.get(
+        spark, "table_fingerprint", (key_col, src.semanticHash()), collect,
         [table_path(sf_dir, table_name)],
     )
-    return spark.createDataFrame([(n, ck)], "n_src long, src_ck long")
+
+
+def stamp(df: DataFrame, fp: tuple[int, int]) -> DataFrame:
+    """``df`` with the ``table_fingerprint`` stamp appended as literal
+    bigint columns ``n_src`` and ``src_ck`` — the rows and column order
+    of a crossJoin with the 1-row fingerprint frame, planned as a
+    projection: no local relation, no broadcast job, no Python worker
+    to serialize the relation. A null ``src_ck`` (empty table) stays a
+    typed null."""
+    n, ck = fp
+    return df.select(
+        "*",
+        F.lit(n).cast("long").alias("n_src"),
+        F.lit(ck).cast("long").alias("src_ck"),
+    )
 
 
 #: Kept only because perfbench imports this name: it drops every stage.

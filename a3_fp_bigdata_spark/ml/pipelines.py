@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
     run_scratch,
+    stamp,
     table_fingerprint,
     table,
     table_path,
@@ -275,7 +276,7 @@ def _write_fingerprinted(df: DataFrame, spark, sf_dir: str, scratch: str):
     # no pin: the frame feeds exactly ONE write (the read-back is a
     # fresh scan of the scratch) — persisting a single-consumer frame
     # just burns executor memory (ADVICE r13)
-    df.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
+    stamp(df, fp).repartition(1).write.mode(
         "overwrite"
     ).parquet(scratch)
     return spark.read.parquet(scratch).drop("n_src", "src_ck")

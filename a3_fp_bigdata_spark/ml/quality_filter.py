@@ -142,7 +142,7 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derive the confusion cells (exact int64 counts + micro-sum, one
     shared division construction, half_up to 2 decimals). The fit
     itself stays pinned by pytest's holdout-accuracy floor."""
-    from a3_fp_bigdata_spark.data import table, table_fingerprint
+    from a3_fp_bigdata_spark.data import stamp, table, table_fingerprint
 
     scored, _ = fit_score(spark, sf_dir)
     rows = scored.select(
@@ -155,7 +155,7 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("p_micro"),
     )
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    rows.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
+    stamp(rows, fp).repartition(1).write.mode(
         "overwrite"
     ).parquet(_ML4_SCORE_SCRATCH)
     back = spark.read.parquet(_ML4_SCORE_SCRATCH).drop("n_src", "src_ck")

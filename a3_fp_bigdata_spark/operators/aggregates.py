@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
     run_scratch,
+    stamp,
     table_fingerprint,
     table,
 )
@@ -313,7 +314,7 @@ def a19_approx_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp = table_fingerprint(spark, sf_dir, "events", "event_id", table_fn=table)
-    approx = approx.crossJoin(F.broadcast(fp))
+    approx = stamp(approx, fp)
     approx.repartition(1).write.mode("overwrite").parquet(_A19_SCRATCH)
     back = spark.read.parquet(_A19_SCRATCH).drop("n_src", "src_ck")
     exact = (
@@ -401,7 +402,7 @@ def a20_quantile_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp = table_fingerprint(spark, sf_dir, "events", "event_id", table_fn=table)
-    ap.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
+    stamp(ap, fp).repartition(1).write.mode(
         "overwrite"
     ).parquet(_A20_SCRATCH)
     back = spark.read.parquet(_A20_SCRATCH).drop("n_src", "src_ck")

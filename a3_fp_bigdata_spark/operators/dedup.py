@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
     run_scratch,
+    stamp,
     table_fingerprint,
     table,
     table_path,
@@ -408,9 +409,9 @@ def d4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # snapshot, SHARED with d11's nightly probe — computing
     # the 32-hash agg once per corpus snapshot is the production shape.
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    staged_raw_buckets(spark, sf_dir).crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(_D4_SIG_SCRATCH)
+    stamp(staged_raw_buckets(spark, sf_dir), fp).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(_D4_SIG_SCRATCH)
     back = spark.read.parquet(_D4_SIG_SCRATCH).drop("n_src", "src_ck")
     # Candidate pairs WITHOUT a bucket self-join: collect each bucket's
     # doc list and explode its pairs in place. The super-bucket cap is
@@ -559,11 +560,7 @@ def d4_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny write + two counting joins on top of the shared staged
     shingle/bucket tables."""
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    pairs = (
-        d4_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .crossJoin(F.broadcast(fp))
-    )
+    pairs = stamp(d4_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"), fp)
     pairs.repartition(1).write.mode("overwrite").parquet(_D4_AUDIT_SCRATCH)
     back = spark.read.parquet(_D4_AUDIT_SCRATCH).drop("n_src", "src_ck")
     exact = d3_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
@@ -675,7 +672,7 @@ def d5_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no pin: th feeds exactly one write; the aggregation reads the
     # scratch back, not th (d9 pins its READ-BACK because it feeds
     # both self-join sides — different shape)
-    th.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
+    stamp(th, fp).repartition(1).write.mode(
         "overwrite"
     ).parquet(_D5_TOK_SCRATCH)
     back = spark.read.parquet(_D5_TOK_SCRATCH).drop("n_src", "src_ck")
@@ -976,9 +973,7 @@ def d9_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = simhash_frame(spark, sf_dir, SIMHASH_PAIR_BITS).select(
         "doc_id", "simhash"
     )
-    sh.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D9_FP_SCRATCH)
+    stamp(sh, fp).repartition(1).write.mode("overwrite").parquet(_D9_FP_SCRATCH)
     # the read-back feeds BOTH self-join sides: pin it, or the scan
     # runs twice (dedup.py's measured multi-reference rule)
     fps = pin(
@@ -1180,9 +1175,9 @@ def d9_pigeonhole_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = simhash_frame(spark, sf_dir, SIMHASH_PAIR_BITS).select(
         "doc_id", "simhash"
     )
-    sh.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D9_AUDIT_FP_SCRATCH)
+    stamp(sh, fp).repartition(1).write.mode("overwrite").parquet(
+        _D9_AUDIT_FP_SCRATCH
+    )
     # the pairs under audit derive from the MATERIALIZED fingerprints
     # (same shared derivation d9 runs; simhash_frame is deterministic,
     # so these are exactly d9's pairs — without paying the 48-column
@@ -1192,11 +1187,9 @@ def d9_pigeonhole_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_src", "src_ck"
         )
     )
-    _pairs_from_simhash(fps).crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(
-        _D9_AUDIT_PAIRS_SCRATCH
-    )
+    stamp(_pairs_from_simhash(fps), fp).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(_D9_AUDIT_PAIRS_SCRATCH)
     prs = spark.read.parquet(_D9_AUDIT_PAIRS_SCRATCH).drop(
         "n_src", "src_ck"
     )
@@ -1466,9 +1459,9 @@ def d11_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    d11_incremental_lsh(spark, sf_dir).crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(_D11_AUDIT_SCRATCH)
+    stamp(d11_incremental_lsh(spark, sf_dir), fp).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(_D11_AUDIT_SCRATCH)
     back = pin(
         spark.read.parquet(_D11_AUDIT_SCRATCH).drop("n_src", "src_ck")
     )

@@ -39,6 +39,7 @@ from pyspark.util import inheritable_thread_target
 from a3_fp_bigdata_spark.data import (
     read_stamped_scratch,
     run_scratch,
+    stamp,
     table_fingerprint,
     table,
 )
@@ -88,6 +89,30 @@ def _sharded_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % NSHARDS).alias("shard"),
         TX.bpe_ish_token_count(F.col("text")).cast("long").alias("cost"),
     )
+
+
+#: Output schema of ``_greedy_pack``.
+_PACK_SCHEMA = "doc_id long, shard long, seq_id long, cost long"
+
+
+def _greedy_pack(pdf):
+    """pk2's no-split rule over one shard's (doc_id, shard, cost) rows:
+    walk them in doc_id order and open a new sequence when the next
+    doc would overflow PACK_BUDGET (an oversize doc gets a sequence of
+    its own). Pure (doc_id, cost) pairs — Python never touches text."""
+    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+    seq_ids = []
+    seq, fill, first = 0, 0, True
+    for cost in pdf["cost"]:
+        if first:
+            fill, first = cost, False
+        elif fill + cost > PACK_BUDGET:
+            seq, fill = seq + 1, cost
+        else:
+            fill += cost
+        seq_ids.append(seq)
+    pdf["seq_id"] = seq_ids
+    return pdf[["doc_id", "shard", "seq_id", "cost"]]
 
 
 @query(
@@ -215,32 +240,10 @@ def pk2_greedy_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     hatch. Python touches (doc_id, cost) pairs only, never text: the
     crossing is O(docs), not O(bytes). The oracle replays the identical
     walk with a recursive CTE."""
-    import pandas as pd
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        seq_ids = []
-        seq, fill = 0, 0
-        first = True
-        for cost in pdf["cost"]:
-            if first:
-                fill = cost
-                first = False
-            elif fill + cost > PACK_BUDGET:
-                seq += 1
-                fill = cost
-            else:
-                fill += cost
-            seq_ids.append(seq)
-        pdf["seq_id"] = seq_ids
-        return pdf[["doc_id", "shard", "seq_id", "cost"]]
-
     out = (
         _sharded_costs(spark, sf_dir)
         .groupBy("shard")
-        .applyInPandas(
-            pack, schema="doc_id long, shard long, seq_id long, cost long"
-        )
+        .applyInPandas(_greedy_pack, schema=_PACK_SCHEMA)
     )
     return out.select(
         "doc_id", "shard", "seq_id", F.col("cost").alias("n_tokens")
@@ -892,8 +895,6 @@ def pl1_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast is size-guarded (dedup._maybe_broadcast_drop): forced
     only while the cluster table is provably small, shuffled anti-join
     otherwise — web-corpus dup rates make the drop set unbroadcastable."""
-    import pandas as pd
-
     from a3_fp_bigdata_spark.functions import text as TXF
     from a3_fp_bigdata_spark.operators.dedup import (
         _cluster_member_count,
@@ -928,29 +929,7 @@ def pl1_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "shard", "cost")
     )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        seq_ids = []
-        seq, fill, first = 0, 0, True
-        for cost in pdf["cost"]:
-            if first:
-                fill, first = cost, False
-            elif fill + cost > PACK_BUDGET:
-                seq, fill = seq + 1, cost
-            else:
-                fill += cost
-            seq_ids.append(seq)
-        pdf["seq_id"] = seq_ids
-        return pdf[["doc_id", "shard", "seq_id", "cost"]]
-
-    packed = kept.groupBy("shard").applyInPandas(
-        pack, schema="doc_id long, shard long, seq_id long, cost long"
-    )
-    return packed.groupBy("shard", "seq_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("cost").cast("bigint").alias("seq_tokens"),
-    )
+    return _pack_manifest(kept)
 
 
 def _pl1_oracle() -> str:
@@ -1251,25 +1230,8 @@ def _span_clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pack_manifest(kept: DataFrame) -> DataFrame:
     """(doc_id, shard, cost) -> per-sequence manifest via pk2's greedy
     no-split packer (one Arrow group per shard, O(docs) Python)."""
-    import pandas as pd
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        seq_ids = []
-        seq, fill, first = 0, 0, True
-        for cost in pdf["cost"]:
-            if first:
-                fill, first = cost, False
-            elif fill + cost > PACK_BUDGET:
-                seq, fill = seq + 1, cost
-            else:
-                fill += cost
-            seq_ids.append(seq)
-        pdf["seq_id"] = seq_ids
-        return pdf[["doc_id", "shard", "seq_id", "cost"]]
-
     packed = kept.groupBy("shard").applyInPandas(
-        pack, schema="doc_id long, shard long, seq_id long, cost long"
+        _greedy_pack, schema=_PACK_SCHEMA
     )
     return packed.groupBy("shard", "seq_id").agg(
         F.count("*").alias("n_docs"),
@@ -2146,11 +2108,16 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprinted scratch and re-derives the keep RULE independently
     (the d17-audit protocol; a rule bug still reds this row).
 
-    Scale: strictly pl5's shape plus a broadcast purge anti-join, a
-    broadcast |langs|-row rate join, and two map-side xor digests —
-    no new corpus-sized shuffle beyond the stages already costed; at
-    100 TB each stage's verdict is materialized per snapshot and this
-    manifest composes the read-backs.
+    Scale: pl5's chain up to its packer, plus a broadcast purge
+    anti-join and a broadcast |langs|-row rate join; at 100 TB each
+    stage's verdict is materialized per snapshot and this manifest
+    composes the read-backs. The tail is ONE shard aggregate over the
+    mixture, every release column computed in one pass (LMFAO's
+    shared-input aggregates): n_seqs as pk2's greedy rule folded in
+    the JVM (``_greedy_pack_count``), count and sum, and the two
+    bit_xor digests. All of it combines map-side, so the shard
+    shuffle carries (doc_id, cost) pairs and partial digests, never
+    the text, and no stage of the pass starts a Python worker.
 
     Plan audit (r12, VERDICT r11 ask #4): the r11 PLANS row's
     64-broadcast count was the text dump re-expanding cached subtrees
@@ -2162,7 +2129,7 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition at sf0.1, wall 11.3 -> 9.9 s warm.
 
     Two branches at once: d17's verdict (table fingerprint, seeded
-    k-means fit, two scratch writes) needs nothing from the span cut,
+    k-means fit, one scratch write) needs nothing from the span cut,
     the clusters or the decontamination sets, so it builds on one
     worker thread (``inheritable_thread_target``: its jobs keep the
     caller's job group, description and pool) while this thread
@@ -2240,8 +2207,8 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(100).cast("long"),
         ).alias("keep_pct"),
     )
-    # NOT pinned (r12): both readers (manifest roll-up + digest) now
-    # derive from the pinned surv through a cheap broadcast join +
+    # NOT pinned (r12): its one reader, the shard aggregate below,
+    # derives it from the pinned surv through a cheap broadcast join +
     # filter; caching mixed too would store the wide text twice and
     # measured SLOWER (sf0.1: warm 12.6s vs 9.9s with surv-only pin)
     mixed = (
@@ -2249,29 +2216,13 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(sample_predicate(F.col("doc_id"), F.col("keep_pct")))
         .select("doc_id", "shard", "cost", "clean_text")
     )
-    manifest = _pack_manifest(mixed.select("doc_id", "shard", "cost"))
-    roll = manifest.groupBy("shard").agg(
-        F.count("*").cast("long").alias("n_seqs"),
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("seq_tokens").cast("long").alias("n_tokens"),
-    )
-    dig = (
-        mixed.select(
-            "shard",
-            _row_digest(["doc_id", "clean_text"], "r1").alias("_d1"),
-            _row_digest(["doc_id", "clean_text"], "r2").alias("_d2"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.coalesce(F.expr("bit_xor(_d1)"), F.lit(0))
-            .cast("long")
-            .alias("xor1"),
-            F.coalesce(F.expr("bit_xor(_d2)"), F.lit(0))
-            .cast("long")
-            .alias("xor2"),
-        )
-    )
-    return roll.join(dig, "shard").select(
+    return mixed.groupBy("shard").agg(
+        _greedy_pack_count(F.col("doc_id"), F.col("cost")).alias("n_seqs"),
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("cost").cast("long").alias("n_tokens"),
+        F.bit_xor(_row_digest(["doc_id", "clean_text"], "r1")).alias("xor1"),
+        F.bit_xor(_row_digest(["doc_id", "clean_text"], "r2")).alias("xor2"),
+    ).select(
         F.col("shard").cast("long").alias("shard"),
         "n_seqs",
         "n_docs",
@@ -2279,6 +2230,33 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "xor1",
         "xor2",
     )
+
+
+def _greedy_pack_count(doc_id: Column, cost: Column) -> Column:
+    """Aggregate: how many sequences ``_greedy_pack`` cuts a group's
+    docs into, as a Catalyst fold over the group's doc_id-sorted
+    (doc_id, cost) pairs — the same no-split rule, in the JVM. The
+    fold starts with no open sequence (seq -1) and an over-full fill,
+    so the first doc always opens sequence 0. It holds one group's
+    pairs in one array: the per-shard memory bound of the
+    applyInPandas group it replaces. Only a count comes out; a per-doc
+    seq_id would need the array rebuilt on every step, which is why
+    the packers that publish per-doc rows stay on ``_greedy_pack``."""
+    pairs = F.array_sort(F.collect_list(F.struct(doc_id, cost.alias("c"))))
+    budget = F.lit(PACK_BUDGET).cast("long")
+
+    def step(acc: Column, x: Column) -> Column:
+        opens = acc["fill"] + x["c"] > budget
+        return F.struct(
+            F.when(opens, acc["seq"] + 1).otherwise(acc["seq"]).alias("seq"),
+            F.when(opens, x["c"]).otherwise(acc["fill"] + x["c"]).alias("fill"),
+        )
+
+    start = F.struct(
+        F.lit(-1).cast("long").alias("seq"),
+        (budget + 1).alias("fill"),
+    )
+    return F.aggregate(pairs, start, step, lambda acc: acc["seq"] + 1)
 
 
 def _attach_pl8_oracle() -> None:
@@ -2603,7 +2581,7 @@ def pk16_bestfit_pack_audit(
         )
     )
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    assignment.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
+    stamp(assignment, fp).repartition(1).write.mode(
         "overwrite"
     ).parquet(_PK16_SCRATCH)
     back = read_stamped_scratch(spark, _PK16_SCRATCH).drop("src_ck")

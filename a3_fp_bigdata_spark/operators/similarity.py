@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
     run_scratch,
+    stamp,
     table_fingerprint,
     table,
     table_path,
@@ -495,7 +496,7 @@ def sim3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
         F.col("cell").isin(probe_cells).alias("probed"),
     )
-    scr.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
+    stamp(scr, fp).repartition(1).write.mode(
         "overwrite"
     ).parquet(_SIM3_SCRATCH)
     back = spark.read.parquet(_SIM3_SCRATCH).drop("n_src", "src_ck")
@@ -713,9 +714,9 @@ def d6_gemm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tasks, each one BLAS matmul)."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    _d6_gemm_candidates(emb).crossJoin(F.broadcast(fp)).repartition(
-        1
-    ).write.mode("overwrite").parquet(_D6_AUDIT_SCRATCH)
+    stamp(_d6_gemm_candidates(emb), fp).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(_D6_AUDIT_SCRATCH)
     # pin: cand feeds five aggregates and exact feeds two (the d9/d11
     # audits' measured multi-reference rule — without it each count
     # re-scans the scratch parquet / re-runs the quadratic join)
@@ -1208,11 +1209,7 @@ def sim11_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seed-specific path via the d4-audit scratch protocol).
     tests/test_similarity.py separately pins recall >= 0.8."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    hits = (
-        sim3_ivf_ann(spark, sf_dir)
-        .select("vec_id")
-        .crossJoin(F.broadcast(fp))
-    )
+    hits = stamp(sim3_ivf_ann(spark, sf_dir).select("vec_id"), fp)
     hits.repartition(1).write.mode("overwrite").parquet(_SIM11_SCRATCH)
     back = spark.read.parquet(_SIM11_SCRATCH).drop("n_src", "src_ck")
     exact = sim1_cosine_topk(spark, sf_dir).limit(ANN_TOPK).select("vec_id")
@@ -1453,7 +1450,7 @@ def sim12_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below (and the oracle) read it back, so the attested selection
     # is exactly the bytes the quantizer produced
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    shortlist.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
+    stamp(shortlist, fp).repartition(1).write.mode(
         "overwrite"
     ).parquet(_SIM12_SL_SCRATCH)
     back = spark.read.parquet(_SIM12_SL_SCRATCH).drop("n_src", "src_ck")
@@ -1510,9 +1507,7 @@ def sim12_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly; any quantization loss shows up identically on both
     engines. tests/test_similarity.py separately pins recall >= 0.8."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    hits = (
-        sim12_pq_ann(spark, sf_dir).select("vec_id").crossJoin(F.broadcast(fp))
-    )
+    hits = stamp(sim12_pq_ann(spark, sf_dir).select("vec_id"), fp)
     hits.repartition(1).write.mode("overwrite").parquet(_SIM12_SCRATCH)
     back = spark.read.parquet(_SIM12_SCRATCH).drop("n_src", "src_ck")
     exact = sim1_cosine_topk(spark, sf_dir).limit(ANN_TOPK).select("vec_id")
@@ -1659,12 +1654,11 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     attestation over the published verdict. Audit-scale note: the
     scratch is one row per vector — the production path keeps the
     assignment as the IVF index's own materialized artifact."""
-    # already localCheckpoint-backed by the stage memo — no pin needed
     assigned = _semdedup_cells(spark, sf_dir)
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    assigned.select("vec_id", "cell").crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(_D17_CELLS_SCRATCH)
+    stamp(assigned.select("vec_id", "cell"), fp).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(_D17_CELLS_SCRATCH)
     back = pin(
         spark.read.parquet(_D17_CELLS_SCRATCH)
         .drop("n_src", "src_ck")
@@ -1675,12 +1669,21 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
         )
     )
-    a = back.select(
+    return _semdedup_verdict(back)
+
+
+def _semdedup_verdict(cells: DataFrame) -> DataFrame:
+    """(vec_id, cell, embedding) -> (vec_id, cell, is_kept): the
+    within-cell min-id keep rule. ``cells`` is read three times (both
+    pair sides and the verdict join), so callers pass a materialized
+    frame (a pinned read-back or the localCheckpoint-backed cells
+    stage)."""
+    a = cells.select(
         "cell",
         F.col("vec_id").alias("va"),
         F.col("embedding").alias("ea"),
     )
-    b = back.select(
+    b = cells.select(
         "cell",
         F.col("vec_id").alias("vb"),
         F.col("embedding").alias("eb"),
@@ -1693,7 +1696,7 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_d", F.lit(1))
     )
-    return back.join(dropped, "vec_id", "left").select(
+    return cells.join(dropped, "vec_id", "left").select(
         "vec_id", "cell", F.col("_d").isNull().alias("is_kept")
     )
 
@@ -1708,13 +1711,16 @@ def materialize_d17_verdict(
     """Write d17's full (vec_id, cell, is_kept) verdict to the
     fingerprinted scratch and return the read-back frame (pinned).
     Shared by the d17 audit and pl8's release chain — both of whose
-    oracles take the CELLS as given from the scratch bytes and
-    re-derive the keep rule independently."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    oracles take the CELLS as given from this scratch's bytes and
+    re-derive the keep rule independently. The verdict comes straight
+    from the localCheckpoint-backed cells stage: neither oracle reads
+    d17's own cells scratch, so this path neither writes it nor joins
+    the embeddings back."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    d17_semantic_dedup(spark, sf_dir).crossJoin(F.broadcast(fp)).repartition(
-        1
-    ).write.mode("overwrite").parquet(_D17_SCRATCH)
+    verdict = _semdedup_verdict(_semdedup_cells(spark, sf_dir))
+    stamp(verdict, fp).repartition(1).write.mode("overwrite").parquet(
+        _D17_SCRATCH
+    )
     return pin(spark.read.parquet(_D17_SCRATCH).drop("n_src", "src_ck"))
 
 

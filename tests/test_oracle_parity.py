@@ -217,3 +217,32 @@ def test_src_fingerprint_cross_engine_identical(spark):
         ).fetchone()
         con.close()
         assert (row.n_src, row.src_ck) == (n, ck), t
+
+
+def test_stamp_is_the_crossjoin_rows_as_a_projection(spark):
+    """``stamp`` appends the fingerprint as literal columns: the same
+    rows, column order and types as the crossJoin with a 1-row
+    fingerprint frame it replaced (a null checksum of an empty table
+    included), planned with no broadcast join and no RDD scan."""
+    from pyspark.sql import functions as F
+
+    from a3_fp_bigdata_spark.data import stamp
+    from a3_fp_bigdata_spark.plans.inspect import _walk_counts
+
+    df = spark.range(6).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 2 == 0).alias("kept")
+    )
+    for fp in ((6, 15), (0, None)):
+        old = df.crossJoin(
+            F.broadcast(spark.createDataFrame([fp], "n_src long, src_ck long"))
+        )
+        new = stamp(df, fp)
+        assert new.columns == old.columns == ["doc_id", "kept", "n_src", "src_ck"]
+        assert new.dtypes == old.dtypes
+        assert sorted(map(tuple, new.collect())) == sorted(
+            map(tuple, old.collect())
+        )
+        nodes = frozenset(
+            {"BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec", "RDDScanExec"}
+        )
+        assert _walk_counts(new, nodes) == (0, 0)

@@ -7,6 +7,10 @@ actually relies on, independent of any oracle."""
 from __future__ import annotations
 
 import math
+import os
+import re
+import subprocess
+import sys
 import threading
 import time
 
@@ -696,6 +700,111 @@ def test_pl8_rows_without_aqe_equal_rows_with_it(spark):
         registry.release_pinned()
         stages.release_all()
     assert without == with_aqe
+
+
+def test_pl8_final_plan_reads_caches_and_runs_no_python(spark):
+    """After its stages are built, pl8's final executed plan reads only
+    cached relations: no file scan (of documents or any other table)
+    outside them, so the survivor chain is not re-run by a second
+    reader of the mixture. And no node of it, cached subtrees
+    included, runs Python. Checked with adaptive execution on and
+    off."""
+    from a3_fp_bigdata_spark.plans.inspect import _walk_counts
+
+    python_nodes = frozenset({
+        "FlatMapGroupsInPandasExec",
+        "ArrowEvalPythonExec",
+        "BatchEvalPythonExec",
+        "MapInPandasExec",
+    })
+    conf = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(conf)
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set(conf, aqe)
+            df = registry.all_queries()["pl8_release_manifest"](spark, SF0001)
+            df.collect()
+            scans, _ = _walk_counts(df, frozenset({"FileSourceScanExec"}))
+            assert scans == 0, aqe
+            assert _walk_counts(df, python_nodes) == (0, 0), aqe
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_pl8_timeline_tool_reports_no_python_stage():
+    """tools/pl8_timeline.py, one cold pass at the benchmark's corpus
+    size in its own process (it starts and stops its own JVM): it
+    tells the d17 branch's jobs from the caller's and finds no stage
+    that started a Python worker."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "pl8_timeline.py"),
+         "--seed", "4"],
+        cwd=root, check=True, stdout=subprocess.PIPE, text=True,
+        timeout=600,
+    ).stdout
+    m = re.search(r"^pass wall: [\d.]+ s, (\d+) jobs$", out, re.M)
+    assert m and int(m.group(1)) > 0, out
+    branches = {ln.split()[0] for ln in out.splitlines() if "(all)" in ln}
+    assert branches == {"d17", "main"}, out
+    assert re.search(r"^stages with Python workers: 0$", out, re.M), out
+
+
+def test_greedy_pack_count_equals_the_pandas_packer(spark):
+    """pl8's JVM fold counts the sequences pk2's pandas packer cuts:
+    per shard, n_seqs / n_docs / n_tokens equal ``_greedy_pack``'s
+    output rolled up, on the edge costs (0, exactly the budget, over
+    it, a fill that lands exactly on it) and on seeded random shards,
+    with rows handed over out of doc_id order across partitions."""
+    import random
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from a3_fp_bigdata_spark.operators.packing import (
+        _greedy_pack,
+        _greedy_pack_count,
+    )
+
+    B = PACK_BUDGET
+    edge = {
+        # 100 + (B-100) lands on B and 0 still fits: one sequence;
+        # a doc of exactly B opens the second, the 1 after it the third
+        0: [(1, 100), (2, B - 100), (3, 0), (4, B), (5, 1)],
+        1: [(10, B + 44)],  # one-doc shard, oversize singleton
+        # oversize docs stand alone; even a 0 after one opens a sequence
+        2: [(20, B + 44), (21, B + 44), (22, 0)],
+        3: [(30, 0)],
+        4: [(40, 0), (41, B)],
+    }
+    want_seqs = {0: 3, 1: 1, 2: 3, 3: 1, 4: 1}
+    rng = random.Random(7)
+    shards = dict(edge)
+    for shard in range(5, 13):
+        ids = rng.sample(range(1000 * shard, 1000 * shard + 500), rng.randint(1, 40))
+        shards[shard] = [(d, rng.choice([0, B, B + 1, rng.randint(0, B)])) for d in ids]
+    rows = [(d, shard, c) for shard, docs in shards.items() for d, c in docs]
+    rng.shuffle(rows)
+
+    got = {
+        r.shard: (r.n_seqs, r.n_docs, r.n_tokens)
+        for r in spark.createDataFrame(rows, "doc_id long, shard long, cost long")
+        .repartition(3)
+        .groupBy("shard")
+        .agg(
+            _greedy_pack_count(F.col("doc_id"), F.col("cost")).alias("n_seqs"),
+            F.count("*").alias("n_docs"),
+            F.sum("cost").alias("n_tokens"),
+        )
+        .collect()
+    }
+    pdf = pd.DataFrame(rows, columns=["doc_id", "shard", "cost"])
+    for shard, group in pdf.groupby("shard"):
+        packed = _greedy_pack(group.copy())
+        assert got[shard] == (
+            packed["seq_id"].nunique(), len(packed), packed["cost"].sum()
+        ), shard
+    assert {s: got[s][0] for s in want_seqs} == want_seqs
 
 
 def test_pk13_curriculum_is_a_global_total_order(spark):

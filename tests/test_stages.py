@@ -83,9 +83,7 @@ def _observe(spark, sf_dir):
     }
     n_suffixes = qs["d21_suffix_array"](spark, sf_dir).count()
     cell_ids = {r.vec_id for r in _semdedup_cells(spark, sf_dir).collect()}
-    fp = tuple(
-        table_fingerprint(spark, sf_dir, "documents", "doc_id").first()
-    )
+    fp = table_fingerprint(spark, sf_dir, "documents", "doc_id")
     registry.release_pinned()
     return clusters, n_suffixes, cell_ids, fp
 
