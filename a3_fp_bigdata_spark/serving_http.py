@@ -2,7 +2,7 @@
 Flask API surface (reference app.py:144-308), kept deliberately thin:
 every endpoint parses params, builds the same query shapes as
 serving.py, collects, jsonifies. No query logic lives here, and nothing
-is computed ahead of a request. Three intended differences from
+is computed ahead of a request. Four intended differences from
 serving.py, all so a request runs the fewest Spark jobs its answer
 needs:
 - a serving table whose scan is one partition is cached as
@@ -20,7 +20,12 @@ needs:
 - /recommend_similar_app_by_name collects the anchor's label in its
   existence check (one job) and reads the peers off that label's
   memoized /apps_in_cluster listing, where srv_similar_in_cluster (one
-  DataFrame, no collect) joins the anchor.
+  DataFrame, no collect) joins the anchor;
+- /top_apps always queries the top ``TOP_LIMIT`` rows of its (sort_by,
+  category) and slices them to the requested limit after the memo, so
+  every limit reads one memoized listing. The order, sort_by descending
+  then the unique o_orderkey, is total, so the top L rows are exactly
+  the listing's first L.
 
 Flask is an optional dependency (import-gated): the engine is complete
 without HTTP; `build_app` raises a clear error if Flask is absent.
@@ -61,6 +66,10 @@ ANSWER_CACHE_SIZE = 1024
 #: near, is answered without the memo, so what clients send cannot
 #: grow it past its bound.
 MEMO_KEY_CHARS = 256
+#: Most rows a /top_apps answer holds: the reference UI's cap on the
+#: limit a user picks (SURVEY §2.6). A larger limit is clamped to it,
+#: and every limit is sliced from one listing of this many rows.
+TOP_LIMIT = 50
 #: Rows in an /apps_in_cluster listing and in a similar-app answer.
 CLUSTER_LIMIT = 20
 SIMILAR_LIMIT = 10
@@ -161,11 +170,11 @@ def build_app(spark: SparkSession, sf_dir: str) -> "Flask":
         )
         return _rows(recs), 200
 
-    def top_apps_answer(sort_by: str, limit: int, category: str | None):
+    def top_apps_answer(sort_by: str, category: str | None):
         df = top_records(
             orders,
             sort_by=sort_by,
-            limit=limit,
+            limit=TOP_LIMIT,
             tie_break="o_orderkey",
             select_cols=["o_orderkey", "o_custkey", "o_totalprice"],
             category=("o_orderpriority", category) if category else None,
@@ -194,19 +203,23 @@ def build_app(spark: SparkSession, sf_dir: str) -> "Flask":
         return _rows(rows), 200
 
     # every request for a key gets the same payload object, so nothing
-    # may mutate one: jsonify only reads it, and similar_answer builds a
-    # new list over the listing's rows
+    # may mutate one: jsonify only reads it, and similar_answer and
+    # /top_apps build new lists over a listing's rows
     @functools.lru_cache(maxsize=ANSWER_CACHE_SIZE)
     def answer(body, *key):
         return body(*key)
 
     app.extensions["serving_answers"] = answer
 
-    def reply(body, *key):
+    def lookup(body, *key):
+        """``(payload, status)`` of ``body(*key)``, from the memo unless
+        the key's text is over MEMO_KEY_CHARS."""
         if sum(len(k) for k in key if isinstance(k, str)) > MEMO_KEY_CHARS:
-            payload, status = body(*key)
-        else:
-            payload, status = answer(body, *key)
+            return body(*key)
+        return answer(body, *key)
+
+    def reply(body, *key):
+        payload, status = lookup(body, *key)
         return jsonify(payload), status
 
     @app.get("/check_data")
@@ -241,11 +254,12 @@ def build_app(spark: SparkSession, sf_dir: str) -> "Flask":
             return jsonify({"error": "limit must be an integer"}), 400
         if limit < 0:
             return jsonify({"error": "limit must be >= 0"}), 400
-        limit = min(limit, 50)  # UI cap; limit=0 legitimately means none
+        limit = min(limit, TOP_LIMIT)  # UI cap; limit=0 legitimately means none
         if sort_by not in orders.columns:  # P9 validation, app.py:238-239
             return jsonify({"error": f"invalid sort_by column: {sort_by}"}), 400
         category = request.args.get("category") or None
-        return reply(top_apps_answer, sort_by, limit, category)
+        payload, status = lookup(top_apps_answer, sort_by, category)
+        return jsonify(payload[:limit]), status
 
     @app.get("/recommend_similar_app_by_name/<int:vec_id>")
     def similar(vec_id: int):

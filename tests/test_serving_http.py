@@ -6,6 +6,9 @@ Spark jobs each request runs."""
 from __future__ import annotations
 
 import itertools
+import json
+import os
+import subprocess
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
@@ -253,6 +256,22 @@ def test_similar_jobs_per_request(spark, duck):
     assert _jobs(spark, client, "/recommend_similar_app_by_name/5") == (200, 0)
 
 
+def test_every_top_apps_limit_reads_one_listing(spark, duck):
+    """Every limit 0-TOP_LIMIT, and 51 and 999 (clamped), returns DuckDB's
+    top rows, for a category and for none. Each (sort_by, category) pair
+    is one memoized answer: its first request runs the listing's one
+    job, every later limit none."""
+    client, answers = _fresh_app(spark)
+    limits = [*range(serving_http.TOP_LIMIT + 1), 51, 999]
+    pairs = (("o_orderdate", "3-MEDIUM"), ("o_custkey", None))
+    for n, (sort_by, category) in enumerate(pairs, 1):
+        for i, limit in enumerate(limits):
+            url = f"/top_apps?sort_by={sort_by}&limit={limit}&category={category or ''}"
+            assert _jobs(spark, client, url) == (200, 0 if i else 1), url
+            assert _get(client, url) == _top_oracle(duck, sort_by, limit, category), url
+            assert answers.cache_info().currsize == n, url
+
+
 def test_pre_query_400s_are_not_memoized(spark):
     client, answers = _fresh_app(spark)
     for url in ("/search_app_suggestions?q=a", "/top_apps?limit=abc",
@@ -276,6 +295,26 @@ def test_over_long_text_is_not_memoized(spark):
     assert _jobs(spark, client, url) == (200, 1)
     assert _jobs(spark, client, url) == (200, 0)
     assert answers.cache_info().currsize == 1
+
+
+def test_serve_miss_path_tool_reports_every_route(client):
+    """tools/serve_miss_path.py, one round in its own process (it starts
+    and stops its own JVM): one JSON line per served route plus
+    similar_listed, each with its codegen and JIT counters, and every
+    body equal to the oracle's."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "serve_miss_path.py"),
+         "--seed", "1", "--rounds", "1"],
+        cwd=root, check=True, stdout=subprocess.PIPE, text=True, timeout=600,
+    ).stdout
+    lines = [json.loads(ln) for ln in out.splitlines() if ln.startswith("{")]
+    routes = {r.rule.split("/")[1] for r in client.application.url_map.iter_rules()}
+    names = [ln["route"] for ln in lines]
+    assert sorted(names) == sorted(routes - {"static"} | {"similar_listed"}), out
+    for ln in lines:
+        assert ln["n"] == 1 and ln["failed"] == 0, ln
+        assert ln["classes_per_req"] >= 0 and ln["jit_ms_per_req"] >= 0, ln
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ spark = (
     .config("spark.sql.shuffle.partitions", "4")
     # cosmetic only (not an engine config the driver would need): the
     # console progress bar writes \r-framed stage spam that corrupted
-    # result lines in the committed PARITY_FULL_r7.log — a reviewer's
+    # result lines in a committed parity log — a reviewer's
     # `grep -c "^  ok"` undercounted. Keep the LOG grep-parseable.
     .config("spark.ui.showConsoleProgress", "false")
     .getOrCreate()

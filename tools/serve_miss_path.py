@@ -14,9 +14,13 @@ every label's listing has been requested once (``similar_listed``): what
 a stream of distinct vec_ids sees once the ten labels have come up.
 
 Prints one JSON line per route: median wall ms, CPU ms per request (this
-process and the JVM), Spark jobs per request, and how many bodies
-differ from the DuckDB oracle. Runs against the checkout it sits in, so
-copy it into another checkout to compare two commits.
+process and the JVM), Spark jobs per request, generated classes per
+request (Spark's ``CodegenMetrics`` source-size count: each is Java
+source Janino compiled and HotSpot then JIT-compiles), JIT ms per
+request (HotSpot's ``CompilationMXBean`` total compile time), and how
+many bodies differ from the DuckDB oracle. Both JVM counters are read
+through py4j from the session's own JVM. Runs against the checkout it
+sits in, so copy it into another checkout to compare two commits.
 """
 
 from __future__ import annotations
@@ -67,20 +71,26 @@ def measure(seed: int, rounds: int) -> list[dict]:
         memo = app.extensions.get("serving_answers")
         client = app.test_client()
         pids = [os.getpid(), SparkContext._gateway.proc.pid]
-        samples: dict[str, list[tuple[float, float, int, bool]]] = {}
+        jvm = sc._jvm
+        sources = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE()
+        jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        samples: dict[str, list[tuple[float, float, int, int, int, bool]]] = {}
 
         def send(name: str, route: str, url: str, p: dict, expect: int) -> None:
             group = f"miss-{name}-{sum(map(len, samples.values()))}"
             sc.setJobGroup(group, url)
+            classes0, jit0 = sources.getCount(), jit.getTotalCompilationTime()
             cpu0, t0 = _cpu_s(pids), time.perf_counter()
             resp = client.get(url)
             wall, cpu = time.perf_counter() - t0, _cpu_s(pids) - cpu0
+            classes = sources.getCount() - classes0
+            jit_ms = jit.getTotalCompilationTime() - jit0
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             ok = oracle.check_response(
                 con, route, p, resp.status_code, resp.get_json(silent=True), expect)
-            samples.setdefault(name, []).append((wall, cpu, jobs, ok))
+            samples.setdefault(name, []).append((wall, cpu, jobs, classes, jit_ms, ok))
 
         con = oracle.connect(wl.data_dir, wl.tables)
         routes = list(ROUTE_WEIGHTS)
@@ -117,17 +127,20 @@ def measure(seed: int, rounds: int) -> list[dict]:
         except OSError:  # another run's scratch is still there
             pass
 
-    return [
-        {
+    out = []
+    for name, s in samples.items():
+        wall, cpu, jobs, classes, jit_ms, ok = zip(*s)
+        out.append({
             "route": name,
             "n": len(s),
-            "wall_ms_median": round(statistics.median(w for w, *_ in s) * 1000, 1),
-            "cpu_ms_per_req": round(sum(c for _, c, *_ in s) / len(s) * 1000, 1),
-            "jobs_per_req": round(sum(j for *_, j, _ in s) / len(s), 2),
-            "failed": sum(not ok for *_, ok in s),
-        }
-        for name, s in samples.items()
-    ]
+            "wall_ms_median": round(statistics.median(wall) * 1000, 1),
+            "cpu_ms_per_req": round(sum(cpu) / len(s) * 1000, 1),
+            "jobs_per_req": round(sum(jobs) / len(s), 2),
+            "classes_per_req": round(sum(classes) / len(s), 2),
+            "jit_ms_per_req": round(sum(jit_ms) / len(s), 1),
+            "failed": ok.count(False),
+        })
+    return out
 
 
 def main(argv=None) -> int:
