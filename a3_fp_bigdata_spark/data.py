@@ -12,6 +12,7 @@ import glob as _glob
 import os
 import shutil as _shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,10 +129,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return widen_legacy_long_ts(df, _TS_COLS.get(name, ()))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views so ``spark.sql`` queries match the
     oracle's pre-registered DuckDB view names."""
@@ -223,10 +220,34 @@ def read_stamped_scratch(spark: SparkSession, path: str) -> DataFrame:
 def fresh_scratch(prefix: str) -> str:
     """A new empty dir per call (``mkdtemp``), removed at interpreter
     exit with the run_scratch dirs — for runs that need their own
-    staging, output or checkpoint dir each time (streaming sinks)."""
+    staging, output or checkpoint dir each time (streaming sinks and
+    checkpoints, directory-valued stages)."""
     path = tempfile.mkdtemp(prefix=prefix)
     _RUN_SCRATCH_DIRS.append(path)
     return path
+
+
+def dir_stage(
+    spark: SparkSession,
+    name: str,
+    fill: Callable[[str], None],
+    inputs: list[str],
+) -> str:
+    """A directory-valued stage (stages.py): ``fill(path)`` writes the
+    artifact into a new ``fresh_scratch`` dir once per snapshot of
+    ``inputs``, and the path is returned until they change. Dropping
+    the entry, or a ``fill`` that raises, removes the dir."""
+
+    def build() -> stages.OwnedDir:
+        path = fresh_scratch(f"a3_{name}_")
+        try:
+            fill(path)
+        except BaseException:
+            _shutil.rmtree(path, ignore_errors=True)
+            raise
+        return stages.OwnedDir(path)
+
+    return stages.get(spark, name, (), build, inputs)
 
 
 def _cleanup_run_scratch() -> None:

@@ -421,68 +421,6 @@ def frame_sample(
     )
 
 
-_FRAME_FEATURE_SCHEMA = (
-    "media_id long, frame_idx int, n_frames int, "
-    "img_avg_red double, img_avg_green double, img_avg_blue double, "
-    "img_width int, img_height int"
-)
-
-
-def _container_frame_features(media: DataFrame, decode_frames) -> DataFrame:
-    """Shared real-container frame explosion: decode_frames(bytes) ->
-    list of HxWx3 composited frames; one input row fans out to
-    n_frames output rows inside the Arrow batch. No shuffle; executor
-    memory stays O(batch)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list[Any]] = {
-                k: []
-                for k in (
-                    "media_id", "frame_idx", "n_frames", "img_avg_red",
-                    "img_avg_green", "img_avg_blue", "img_width",
-                    "img_height",
-                )
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = decode_frames(bytes(payload))
-                for i, arr in enumerate(frames):
-                    means = arr.reshape(-1, 3).mean(axis=0)
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["n_frames"].append(len(frames))
-                    out["img_avg_red"].append(float(means[0]))
-                    out["img_avg_green"].append(float(means[1]))
-                    out["img_avg_blue"].append(float(means[2]))
-                    out["img_width"].append(arr.shape[1])
-                    out["img_height"].append(arr.shape[0])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=_FRAME_FEATURE_SCHEMA)
-
-
-def gif_frame_features(media: DataFrame) -> DataFrame:
-    """Real-container frame sampling: explode each animated GIF into
-    its composited frames (gif_codec) and emit per-frame channel means
-    — the genuine-format counterpart of ``frame_sample``'s fixed-stride
-    byte slicing."""
-    from a3_fp_bigdata_spark.multimodal.gif_codec import decode_gif_frames
-
-    return _container_frame_features(media, decode_gif_frames)
-
-
-def apng_frame_features(media: DataFrame) -> DataFrame:
-    """gif_frame_features' twin over APNG (fcTL/fdAT animation,
-    apng_codec): composited full-canvas frames honoring dispose
-    NONE/BACKGROUND/PREVIOUS and blend SOURCE/OVER with true
-    fractional alpha — the animation container GIF cannot express."""
-    from a3_fp_bigdata_spark.multimodal.apng_codec import (
-        decode_apng_frames,
-    )
-
-    return _container_frame_features(media, decode_apng_frames)
-
-
 # ---------------------------------------------------------------------------
 # Registered queries
 # ---------------------------------------------------------------------------

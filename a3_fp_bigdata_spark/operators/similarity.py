@@ -19,12 +19,11 @@ the same association on both engines so rounded values match exactly.
 
 from __future__ import annotations
 
-import atexit
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
+    dir_stage,
     fingerprint_where,
     run_scratch,
     stamp,
@@ -325,41 +324,22 @@ def probe_bucketed_ann(
     )
 
 
-#: index dirs already built by this process, keyed by (sf_dir,
-#: embeddings snapshot) — sweeps that run sim4 repeatedly probe the
-#: same materialized index instead of re-bucketing (exactly the
-#: production shape: build once, probe many). The snapshot in the key
-#: (stages.snapshot) invalidates the entry if the embeddings table is
-#: rewritten; the dirs themselves are removed at interpreter exit
-#: (atexit below).
-_SIM4_INDEX: dict[tuple, str] = {}
-
-
-def release_sim4_index() -> None:
-    """Delete every cached sim4 index dir (also runs via atexit)."""
-    import shutil
-
-    while _SIM4_INDEX:
-        _, path = _SIM4_INDEX.popitem()
-        shutil.rmtree(path, ignore_errors=True)
-
-
-atexit.register(release_sim4_index)
+#: Kept only because perfbench imports this name: it drops every stage,
+#: the index dirs included.
+release_sim4_index = stages.release_all
 
 
 def warm_sim4_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the materialized bucket index for sf_dir and
-    return its path. bench.py calls this in warmup so the timed sim4
-    number measures the partition-pruned PROBE — the per-query cost at
-    scale — not the one-time index build."""
-    import tempfile
-
-    key = (sf_dir, stages.snapshot(table_path(sf_dir, "embeddings")))
-    if key not in _SIM4_INDEX:
-        out = tempfile.mkdtemp(prefix="a3_sim4_idx_")
-        build_bucketed_ann_index(spark, sf_dir, out)
-        _SIM4_INDEX[key] = out
-    return _SIM4_INDEX[key]
+    return its path: a directory-valued stage keyed on the embeddings
+    table (build once, probe many). bench.py calls this in warmup so
+    the timed sim4 number measures the partition-pruned PROBE — the
+    per-query cost at scale — not the one-time index build."""
+    return dir_stage(
+        spark, "sim4_index",
+        lambda out: build_bucketed_ann_index(spark, sf_dir, out),
+        [table_path(sf_dir, "embeddings")],
+    )
 
 
 @query(
@@ -1124,28 +1104,20 @@ def sim10_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     per corpus and each arrival batch costs one bucketing pass over
     ITS OWN rows plus appends into the few partitions it touches; the
     probe plan (partition-pruned scan) never changes."""
-    import tempfile
-
     emb = table(spark, sf_dir, "embeddings")
     is_delta = F.col("vec_id") % INCR_IDX_MOD == INCR_IDX_RESIDUE
-    # memoized like warm_sim4_index: repeated invocations (bench
+
+    def fill(out: str) -> None:
+        append_to_bucketed_index(spark, emb.filter(~is_delta), sf_dir, out)
+        append_to_bucketed_index(spark, emb.filter(is_delta), sf_dir, out)
+
+    # a stage like warm_sim4_index's: repeated invocations (bench
     # warmup + timed runs, sweep passes) probe the one materialized
     # base+appended index instead of rebuilding a full copy per call
-    key = ("sim10", sf_dir, stages.snapshot(table_path(sf_dir, "embeddings")))
-    if key not in _SIM4_INDEX:
-        out = tempfile.mkdtemp(prefix="a3_sim10_idx_")
-        base, delta = emb.filter(~is_delta), emb.filter(is_delta)
-        planes = _planes(emb)
-        with_bucket = base.join(_buckets(base, planes), "vec_id")
-        (
-            with_bucket.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(out)
-        )
-        append_to_bucketed_index(spark, delta, sf_dir, out)
-        _SIM4_INDEX[key] = out
-    return probe_bucketed_ann(spark, _SIM4_INDEX[key], sf_dir=sf_dir)
+    index_dir = dir_stage(
+        spark, "sim10_index", fill, [table_path(sf_dir, "embeddings")]
+    )
+    return probe_bucketed_ann(spark, index_dir, sf_dir=sf_dir)
 
 
 def _attach_sim10_oracle() -> None:

@@ -143,9 +143,3 @@ def scan_read_schemas(df: DataFrame) -> list[str]:
 def has_take_ordered(df: DataFrame) -> bool:
     """orderBy+limit compiled to distributed top-k, not a full sort."""
     return "TakeOrderedAndProject" in physical_plan(df)
-
-
-def wholestage_codegen_ids(df: DataFrame) -> int:
-    """Count of whole-stage-codegen spans; 0 means everything fell out of
-    codegen (e.g. a row-at-a-time Python UDF in the hot path)."""
-    return len(set(re.findall(r"\*\((\d+)\)", physical_plan(df))))

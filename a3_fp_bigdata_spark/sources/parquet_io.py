@@ -1,8 +1,8 @@
 """Parquet scan/sink + versioned-path discovery (S2-S5, S12).
 
 Reference behavior re-expressed:
-- S2/S3: ``spark.read.parquet(...)`` (+ ``.cache()`` for the serving
-  table, reference app.py:114).
+- S2: ``spark.read.parquet(...)``. S3, the cached serving-table load
+  (reference app.py:114), is ``serving_http._cached``.
 - S4: ``find_latest_data_path`` — pick the most recent timestamped
   ``api_app_info_*`` output dir (app.py:98-108). Kept as a tiny driver
   util; on a real lake this is a catalog/Delta-version lookup, so the
@@ -20,15 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """S2: plain parquet scan — vectorized reader, pushdown-capable."""
     return spark.read.parquet(path)
-
-
-def read_serving_table(spark: SparkSession, path: str) -> DataFrame:
-    """S3: serving-table load pinned in memory (app.py:114). The eager
-    count materializes the cache so first-query latency is paid once at
-    startup, exactly like the reference's warm-up."""
-    df = spark.read.parquet(path).cache()
-    df.count()
-    return df
 
 
 def find_latest_data_path(base_dir: str, prefix: str) -> str | None:

@@ -2,10 +2,20 @@
 
 Expensive stages — shingles, MinHash buckets, dedup clusters, the
 suffix array, SemDeDup cells, PQ codebooks, the ML fits, table
-fingerprints — are built once and read by several queries (d3/d4/d5/
-d11 share shingles and buckets; d13/d14/pl1 share clusters; d21-d26
-share one suffix array). Every one of them lives here, under one key
-and one eviction rule, instead of in a hand-rolled memo per module.
+fingerprints, and the built directories below — are built once and
+read by several queries (d3/d4/d5/d11 share shingles and buckets;
+d13/d14/pl1 share clusters; d21-d26 share one suffix array). Every one
+of them lives here, under one key and one eviction rule, instead of in
+a hand-rolled memo per module.
+
+Three stages are directories rather than frames: sim4's bucketed ANN
+index, sim10's base-plus-appended index (both keyed on the embeddings
+table) and src8's z-ordered lineitem layout (keyed on lineitem). Each
+is written into a new ``data.fresh_scratch`` dir and stored as an
+``OwnedDir``; dropping the entry (a changed input snapshot, a stopped
+session, ``release_all``) removes the dir, so disk holds one copy per
+live entry. Each process owns its dirs: nothing is shared across
+processes, and nothing another process writes is ever read.
 
 An entry is keyed by (session token, stage name, the caller's extra
 key parts, the input paths) and remembers a snapshot of those paths
@@ -43,6 +53,7 @@ stage graph and cannot deadlock.
 from __future__ import annotations
 
 import os
+import shutil
 import stat
 import threading
 from typing import Callable, Iterable, TypeVar
@@ -80,6 +91,11 @@ def snapshot(path: str) -> tuple | None:
         return None
 
 
+class OwnedDir(str):
+    """The value of a directory-valued stage: the path of a scratch dir
+    that the entry owns, removed when the entry is dropped."""
+
+
 def free_checkpoint(df: DataFrame) -> None:
     """Drop the blocks a ``localCheckpoint()`` behind ``df`` stored.
     ``unpersist()`` leaves them until the JVM's garbage collector
@@ -97,7 +113,9 @@ def free_checkpoint(df: DataFrame) -> None:
 
 def _unpersist(value: object) -> None:
     for v in value if isinstance(value, tuple) else (value,):
-        if isinstance(v, DataFrame):
+        if isinstance(v, OwnedDir):
+            shutil.rmtree(v, ignore_errors=True)
+        elif isinstance(v, DataFrame):
             try:
                 v.unpersist()
                 free_checkpoint(v)
@@ -141,8 +159,9 @@ def get(
 
 
 def release_all() -> None:
-    """Drop and unpersist every stage (tests and harnesses that need
-    the memory back or a cold start)."""
+    """Drop and unpersist every stage and remove every stage-owned dir
+    (tests and harnesses that need the memory or disk back, or a cold
+    start)."""
     with _LOCK:
         values = [v for _snap, v in _ENTRIES.values()]
         _ENTRIES.clear()

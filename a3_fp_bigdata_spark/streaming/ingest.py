@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from a3_fp_bigdata_spark.data import fresh_scratch
 from a3_fp_bigdata_spark.data import table as batch_table
 from a3_fp_bigdata_spark.data import widen_legacy_long_ts
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
@@ -185,7 +185,7 @@ def micro_batch_csv_sink(
 
     trigger_seconds=None runs AvailableNow (deterministic tests);
     production passes 60 for the reference's cadence."""
-    cp = checkpoint_dir or tempfile.mkdtemp(prefix="a3_stream_cp_")
+    cp = checkpoint_dir or fresh_scratch("a3_stream_cp_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -393,11 +393,9 @@ def st9_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained parquet back. The view must equal the batch aggregate —
     the invariant the partition-scoped merge preserves batch after
     batch."""
-    import tempfile
-
     from a3_fp_bigdata_spark.streaming import materialized as MV
 
-    out = tempfile.mkdtemp(prefix="a3_mv_q_") + "/view"
+    out = fresh_scratch("a3_mv_q_") + "/view"
     with streaming_shuffle(spark, 8):
         q = MV.materialized_view_sink(
             MV.event_type_counts_stream(stream_events(spark, sf_dir)),

@@ -217,8 +217,9 @@ def main() -> None:
     _sim4 = registry.exposure_name("sim4_bucketed_ann")
     try_force(lambda: queries[_sim4](spark, sf_dir), "warm:sim4")
     # sim10 is the same build-once/probe-many shape (base index +
-    # appended batch memoized per sf): warm the build so its timed row
-    # is the steady-state partition-pruned probe, like sim4's
+    # appended batch, a stage keyed on the embeddings table): warm the
+    # build so its timed row is the steady-state partition-pruned
+    # probe, like sim4's
     _sim10 = registry.exposure_name("sim10_incremental_index")
     try_force(lambda: queries[_sim10](spark, sf_dir), "warm:sim10")
     # src8 is layout-once/box-query-many: warm the z-ordered rewrite so

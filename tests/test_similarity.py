@@ -47,7 +47,7 @@ def test_incremental_index_append_touches_only_new_buckets(spark, tmp_path):
     leaves every pre-existing index file untouched (same path, same
     mtime — nothing rewritten), adds files only under the buckets the
     batch hashes into, and the probe over the appended index equals a
-    probe over a from-scratch full index."""
+    probe over a from-scratch full index and sim10's rows."""
     import os
 
     from pyspark.sql import functions as F
@@ -105,6 +105,9 @@ def test_incremental_index_append_touches_only_new_buckets(spark, tmp_path):
         for r in S.probe_bucketed_ann(spark, full, sf_dir=SF001).collect()
     ]
     assert got == want and got
+    # sim10 fills its own index with two appends (base, then batch)
+    sim10 = registry.all_queries()["sim10_incremental_index"]
+    assert [tuple(r) for r in sim10(spark, SF001).collect()] == got
 
 
 def test_pq_recall_vs_bruteforce(spark):

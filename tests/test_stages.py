@@ -8,22 +8,26 @@ session token.
 
 from __future__ import annotations
 
+import os
 import pathlib
 import re
+import shutil
 import sys
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from a3_fp_bigdata_spark import registry, stages
 from a3_fp_bigdata_spark.data import FINGERPRINT_MOD, table_fingerprint
 from a3_fp_bigdata_spark.operators import suffixes as SX
 from a3_fp_bigdata_spark.operators.similarity import _semdedup_cells
-from tests.conftest import SF0001
+from tests.conftest import SF0001, SF001
 
 _DOCS = pa.schema(
     [
@@ -220,3 +224,185 @@ def test_release_all_frees_checkpoint_blocks(spark):
     stages.release_all()
     spark.catalog.clearCache()
     assert stored() - before == set()
+
+
+# ---------------------------------------------------------------------------
+# Directory-valued stages: sim4's and sim10's index dirs, src8's layout
+# ---------------------------------------------------------------------------
+
+_ANN_SQL = registry.all_oracles()["sim2_lsh_ann"]
+_BOX_SQL = registry.all_oracles()["src8_zorder_box_query"]
+
+
+def _duck(sf_dir, table, sql):
+    """``sql`` in DuckDB over ``{sf_dir}/{table}.parquet`` alone."""
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW {table} AS "
+            f"SELECT * FROM read_parquet('{sf_dir}/{table}.parquet')"
+        )
+        return con.execute(sql).fetchall()
+    finally:
+        con.close()
+
+
+def _box(spark, sf_dir):
+    return [
+        tuple(r)
+        for r in registry.all_queries()["src8_zorder_box_query"](
+            spark, sf_dir
+        ).collect()
+    ]
+
+
+def _ann(spark, name, sf_dir):
+    return [
+        tuple(r)
+        for r in registry.all_queries()[name](spark, sf_dir)
+        .select("vec_id", "cosine")
+        .collect()
+    ]
+
+
+def _dirs(name):
+    """The dirs the live ``name`` entries own."""
+    return [v for k, (_s, v) in stages._ENTRIES.items() if k[1] == name]
+
+
+def test_src8_layout_is_keyed_on_lineitem_not_the_dir_name(spark, tmp_path):
+    """Two sf dirs that share a basename hold different lineitems; each
+    src8 answer equals DuckDB's over its own dir."""
+    stages.release_all()
+    other = tmp_path / "sf0.001"
+    other.mkdir()
+    shutil.copyfile(f"{SF001}/lineitem.parquet", other / "lineitem.parquet")
+    for sf_dir in (SF0001, str(other)):
+        assert _box(spark, sf_dir) == _duck(sf_dir, "lineitem", _BOX_SQL)
+    assert _box(spark, SF0001) != _box(spark, str(other))
+    stages.release_all()
+
+
+def test_in_place_rewrite_rebuilds_each_dir_and_removes_the_old(
+    spark, tmp_path
+):
+    sf_dir = str(tmp_path)
+    for t in ("lineitem", "embeddings"):
+        shutil.copyfile(f"{SF0001}/{t}.parquet", f"{sf_dir}/{t}.parquet")
+    stages.release_all()
+
+    def observe():
+        answers = (
+            _box(spark, sf_dir),
+            _ann(spark, "sim4_bucketed_ann", sf_dir),
+            _ann(spark, "sim10_incremental_index", sf_dir),
+        )
+        assert answers == (
+            _duck(sf_dir, "lineitem", _BOX_SQL),
+            _duck(sf_dir, "embeddings", _ANN_SQL),
+            _duck(sf_dir, "embeddings", _ANN_SQL),
+        )
+        return [
+            d for n in ("zorder_layout", "sim4_index", "sim10_index")
+            for d in _dirs(n)
+        ]
+
+    old = observe()
+    assert len(old) == 3 and all(os.path.isdir(d) for d in old)
+    time.sleep(0.01)  # a new mtime_ns even on a coarse clock
+    for t in ("lineitem", "embeddings"):
+        shutil.copyfile(f"{SF001}/{t}.parquet", f"{sf_dir}/{t}.parquet")
+    new = observe()
+    assert len(new) == 3 and all(os.path.isdir(d) for d in new)
+    assert not set(old) & set(new)
+    assert not any(os.path.exists(d) for d in old)
+    stages.release_all()
+
+
+def test_release_sim4_index_removes_the_index_dirs(spark):
+    from a3_fp_bigdata_spark.operators import similarity as S
+    from a3_fp_bigdata_spark.sources.queries import warm_zorder_layout
+
+    stages.release_all()
+    built = [
+        S.warm_sim4_index(spark, SF0001),
+        warm_zorder_layout(spark, SF0001),
+    ]
+    registry.all_queries()["sim10_incremental_index"](spark, SF0001)
+    built += _dirs("sim10_index")
+    assert len(built) == 3 and all(os.path.isdir(d) for d in built)
+    S.release_sim4_index()
+    assert not any(os.path.exists(d) for d in built)
+    assert not stages._ENTRIES
+
+
+def test_warm_up_and_two_probes_build_each_dir_once(spark, monkeypatch):
+    from a3_fp_bigdata_spark.operators import similarity as S
+    from a3_fp_bigdata_spark.sources import parquet_io
+    from a3_fp_bigdata_spark.sources.queries import warm_zorder_layout
+
+    builds = {"sim4": 0, "sim10": 0, "zorder": 0}
+
+    def counting(fn, name):
+        def wrapper(*a, **k):
+            builds[name] += 1
+            return fn(*a, **k)
+
+        return wrapper
+
+    monkeypatch.setattr(
+        S, "build_bucketed_ann_index",
+        counting(S.build_bucketed_ann_index, "sim4"),
+    )
+    # one sim10 build appends twice: the base, then the arrivals
+    monkeypatch.setattr(
+        S, "append_to_bucketed_index",
+        counting(S.append_to_bucketed_index, "sim10"),
+    )
+    monkeypatch.setattr(
+        parquet_io, "write_zordered",
+        counting(parquet_io.write_zordered, "zorder"),
+    )
+    stages.release_all()
+    qs = registry.all_queries()
+    S.warm_sim4_index(spark, SF0001)
+    warm_zorder_layout(spark, SF0001)
+    for _ in range(3):  # sim10's warm-up is its first probe
+        qs["sim10_incremental_index"](spark, SF0001).collect()
+    for _ in range(2):
+        qs["sim4_bucketed_ann"](spark, SF0001).collect()
+        qs["src8_zorder_box_query"](spark, SF0001).collect()
+    assert builds == {"sim4": 1, "sim10": 2, "zorder": 1}
+    stages.release_all()
+
+
+def test_a_fill_that_raises_leaves_no_dir(spark):
+    from a3_fp_bigdata_spark.data import dir_stage
+
+    made = []
+
+    def fill(path):
+        made.append(path)
+        raise RuntimeError("fill failed")
+
+    with pytest.raises(RuntimeError, match="fill failed"):
+        dir_stage(spark, "failing_fill", fill, [])
+    assert made and not os.path.exists(made[0])
+    assert not _dirs("failing_fill")
+
+
+def test_scratch_dirs_are_made_only_in_data():
+    """``data`` is the one place that makes temp dirs; the process-level
+    dir memos are gone."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = list((root / "a3_fp_bigdata_spark").rglob("*.py"))
+    makers = {
+        str(f.relative_to(root))
+        for f in files
+        if re.search(r"\b(mkdtemp|gettempdir)\b", f.read_text())
+    }
+    assert makers == {"a3_fp_bigdata_spark/data.py"}
+    for f in files:
+        assert not re.search(
+            r"\b(_SIM4_INDEX|_ZORDER_LAYOUT|_shared_scratch)\b", f.read_text()
+        ), f

@@ -585,3 +585,25 @@ def test_st14_streaming_converges_to_batch_dq4(spark):
     }
     assert stream_rows == batch_rows
     assert stream_rows  # non-vacuous
+
+
+def test_st9_leaves_no_dir_the_exit_cleanup_misses(spark):
+    """st9's view dir and its sink's default checkpoint are
+    ``fresh_scratch`` dirs: every package dir (``a3_`` prefix) the call
+    adds to the temp dir is one ``data._cleanup_run_scratch`` removes
+    at exit. Spark's own per-session dirs there are Spark's to remove."""
+    import tempfile
+
+    from a3_fp_bigdata_spark import data
+    from a3_fp_bigdata_spark.registry import all_queries
+
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    all_queries()["st9_materialized_view"](spark, SF0001).collect()
+    added = {
+        os.path.join(tmp, n)
+        for n in set(os.listdir(tmp)) - before
+        if n.startswith("a3_")
+    }
+    assert added, "st9 made no scratch dir"
+    assert added <= set(data._RUN_SCRATCH_DIRS), added
