@@ -36,7 +36,12 @@ from pyspark.ml.feature import HashingTF, IDF
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch, table, table_path
+from a3_fp_bigdata_spark.data import (
+    fingerprint_where,
+    run_scratch,
+    table,
+    table_path,
+)
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark.operators.text_analysis import sample_predicate
@@ -123,10 +128,23 @@ def _fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, PipelineModel]:
 _ML4_SCORE_SCRATCH = run_scratch("ml4_scores")
 
 
-@query(
-    "ml4_quality_filter",
-    oracle=None,  # attached below (needs data.fingerprint_where)
-)
+def _ml4_oracle() -> str:
+    mean_sql = half_up_sql(
+        "CAST(sum(p_micro) AS DOUBLE) / CAST(1000000 AS DOUBLE)"
+        " / count(*)", 2
+    )
+    return f"""
+    SELECT in_fit, label, keep,
+           CAST(count(*) AS BIGINT) AS n,
+           {mean_sql} AS mean_p
+    FROM read_parquet('{_ML4_SCORE_SCRATCH}/*.parquet')
+    WHERE {fingerprint_where('documents', 'doc_id')}
+    GROUP BY in_fit, label, keep
+    ORDER BY in_fit, label, keep
+    """
+
+
+@query("ml4_quality_filter", oracle=_ml4_oracle())
 def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion report of the model-based quality filter against its
     weak-supervision label, split by fit/holdout membership: one row
@@ -170,36 +188,6 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("in_fit", "label", "keep")
     )
-
-
-def _attach_ml4_oracle() -> None:
-    """Deferred like st13's: renders data.py's fingerprint snippet."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.data import fingerprint_where
-
-    mean_sql = half_up_sql(
-        "CAST(sum(p_micro) AS DOUBLE) / CAST(1000000 AS DOUBLE)"
-        " / count(*)", 2
-    )
-    sql = f"""
-    SELECT in_fit, label, keep,
-           CAST(count(*) AS BIGINT) AS n,
-           {mean_sql} AS mean_p
-    FROM read_parquet('{_ML4_SCORE_SCRATCH}/*.parquet')
-    WHERE {fingerprint_where('documents', 'doc_id')}
-    GROUP BY in_fit, label, keep
-    ORDER BY in_fit, label, keep
-    """
-    rq = _R._REGISTRY["ml4_quality_filter"]
-    if rq.oracle is None:
-        _R._REGISTRY["ml4_quality_filter"] = dataclasses.replace(
-            rq, oracle=sql
-        )
-
-
-_attach_ml4_oracle()
 
 
 #: ml5 scratch — the audit-scratch protocol (mm7/mm9): Spark

@@ -355,7 +355,7 @@ def _mm11_oracle() -> str:
     """
 
 
-@query("mm11_media_split_leakage", oracle=None)  # attached below
+@query("mm11_media_split_leakage", oracle=_mm11_oracle())
 def mm11_media_split_leakage(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -406,18 +406,3 @@ def mm11_media_split_leakage(
         .alias("val_media"),
         "hamming",
     )
-
-
-def _attach_mm11_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["mm11_media_split_leakage"]
-    if rq.oracle is None:
-        _R._REGISTRY["mm11_media_split_leakage"] = dataclasses.replace(
-            rq, oracle=_mm11_oracle()
-        )
-
-
-_attach_mm11_oracle()

@@ -23,6 +23,7 @@ from a3_fp_bigdata_spark.data import (
     table,
 )
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
+from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
 from a3_fp_bigdata_spark.registry import pin, query
 
 
@@ -679,10 +680,58 @@ HH_K = 8
 HH_SHARDS = 32
 
 
-@query(
-    "a21_heavy_hitters_audit",
-    oracle=None,  # attached below (needs text_analysis' token CTE)
-)
+def _a21_oracle() -> str:
+    return f"""
+    WITH toks AS (
+      SELECT doc_id % {HH_SHARDS} AS shard, unnest({_SQL_TOKS}) AS tok
+      FROM documents
+    ), shard_counts AS (
+      SELECT shard, tok, CAST(count(*) AS BIGINT) AS c
+      FROM toks GROUP BY shard, tok
+    ), ranked AS (
+      SELECT shard, tok, c,
+             row_number() OVER (PARTITION BY shard
+                                ORDER BY c DESC, tok) AS rn
+      FROM shard_counts
+    ), d1 AS (
+      SELECT shard,
+             COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN c END), 0)
+               AS dec1
+      FROM ranked GROUP BY shard
+    ), summaries AS (
+      SELECT r.tok, r.c - d.dec1 AS est
+      FROM ranked r JOIN d1 d USING (shard)
+      WHERE r.rn <= {HH_K} AND r.c - d.dec1 > 0
+    ), merged AS (
+      SELECT tok, CAST(sum(est) AS BIGINT) AS s
+      FROM summaries GROUP BY tok
+    ), mranked AS (
+      SELECT tok, s, row_number() OVER (ORDER BY s DESC, tok) AS rn
+      FROM merged
+    ), d2 AS (
+      SELECT COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN s END), 0)
+        AS dec2
+      FROM mranked
+    ), final AS (
+      SELECT tok, s - (SELECT dec2 FROM d2) AS est
+      FROM mranked
+      WHERE rn <= {HH_K} AND s - (SELECT dec2 FROM d2) > 0
+    ), exact AS (
+      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
+      FROM toks GROUP BY tok
+    ), total AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
+    )
+    SELECT f.tok, CAST(f.est AS BIGINT) AS est, e.exact_cnt,
+           t.n_tokens,
+           CAST(f.est <= e.exact_cnt
+                AND (e.exact_cnt - f.est) * {HH_K + 1} <= 2 * t.n_tokens
+                AS BOOLEAN) AS within_bound
+    FROM final f JOIN exact e USING (tok) CROSS JOIN total t
+    """
+
+
+@query("a21_heavy_hitters_audit", oracle=_a21_oracle())
 def a21_heavy_hitters_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -771,72 +820,6 @@ def a21_heavy_hitters_audit(
             )
         ).alias("within_bound"),
     )
-
-
-def _attach_a21_oracle() -> None:
-    """a21's oracle renders text_analysis' shared token snippet; the
-    deferred attach keeps module import order irrelevant (the same
-    pattern as packing's pk7/pk9 oracles)."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
-
-    name = "a21_heavy_hitters_audit"
-    sql = f"""
-    WITH toks AS (
-      SELECT doc_id % {HH_SHARDS} AS shard, unnest({_SQL_TOKS}) AS tok
-      FROM documents
-    ), shard_counts AS (
-      SELECT shard, tok, CAST(count(*) AS BIGINT) AS c
-      FROM toks GROUP BY shard, tok
-    ), ranked AS (
-      SELECT shard, tok, c,
-             row_number() OVER (PARTITION BY shard
-                                ORDER BY c DESC, tok) AS rn
-      FROM shard_counts
-    ), d1 AS (
-      SELECT shard,
-             COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN c END), 0)
-               AS dec1
-      FROM ranked GROUP BY shard
-    ), summaries AS (
-      SELECT r.tok, r.c - d.dec1 AS est
-      FROM ranked r JOIN d1 d USING (shard)
-      WHERE r.rn <= {HH_K} AND r.c - d.dec1 > 0
-    ), merged AS (
-      SELECT tok, CAST(sum(est) AS BIGINT) AS s
-      FROM summaries GROUP BY tok
-    ), mranked AS (
-      SELECT tok, s, row_number() OVER (ORDER BY s DESC, tok) AS rn
-      FROM merged
-    ), d2 AS (
-      SELECT COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN s END), 0)
-        AS dec2
-      FROM mranked
-    ), final AS (
-      SELECT tok, s - (SELECT dec2 FROM d2) AS est
-      FROM mranked
-      WHERE rn <= {HH_K} AND s - (SELECT dec2 FROM d2) > 0
-    ), exact AS (
-      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
-      FROM toks GROUP BY tok
-    ), total AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
-    )
-    SELECT f.tok, CAST(f.est AS BIGINT) AS est, e.exact_cnt,
-           t.n_tokens,
-           CAST(f.est <= e.exact_cnt
-                AND (e.exact_cnt - f.est) * {HH_K + 1} <= 2 * t.n_tokens
-                AS BOOLEAN) AS within_bound
-    FROM final f JOIN exact e USING (tok) CROSS JOIN total t
-    """
-    rq = _R._REGISTRY[name]
-    if rq.oracle is None:
-        _R._REGISTRY[name] = dataclasses.replace(rq, oracle=sql)
-
-
-_attach_a21_oracle()
 
 
 # ---------------------------------------------------------------------------

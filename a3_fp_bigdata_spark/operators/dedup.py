@@ -33,11 +33,15 @@ from a3_fp_bigdata_spark.data import (
 )
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
-from a3_fp_bigdata_spark.operators.text_analysis import _SQL_NORM, _SQL_TOKS
+from a3_fp_bigdata_spark.operators.text_analysis import (
+    _SQL_NORM,
+    _SQL_QUALITY_CTES,
+    _SQL_TOKS,
+)
 from pyspark import StorageLevel
 
 from a3_fp_bigdata_spark import stages
-from a3_fp_bigdata_spark.registry import _PINNED, pin, query
+from a3_fp_bigdata_spark.registry import pin, query
 
 from a3_fp_bigdata_spark.pickling import ship_by_value
 
@@ -1675,7 +1679,7 @@ def _build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         d3_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     )
     labels, _rounds = connected_components(spark, pairs)
-    # NOT added to _PINNED: the stage outlives per-query
+    # NOT pin()ned: the stage outlives per-query
     # release_pinned(); the frame is tiny — cluster members only — and
     # localCheckpoint-backed.
     return labels.select("doc_id", F.col("lab").alias("cluster_id"))
@@ -1726,10 +1730,36 @@ def d13_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "source")
 
 
-@query(
-    "d14_quality_keeper",
-    oracle=None,  # assembled below: needs text_analysis's quality CTEs
-)
+def _d14_oracle() -> str:
+    return f"""
+    WITH RECURSIVE {_D3_CTES}, pairs AS (
+      {_D3_SELECT}
+    ), edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ), reach(doc, lab) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
+    ), clusters AS (
+      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
+    ), {_SQL_QUALITY_CTES}, ranked AS (
+      SELECT c.doc,
+             row_number() OVER (PARTITION BY c.cluster_id
+                                ORDER BY {half_up_sql('q.quality')} DESC, c.doc)
+               AS rn
+      FROM clusters c JOIN quality q ON q.doc_id = c.doc
+    ), dropped AS (
+      SELECT doc FROM ranked WHERE rn > 1
+    )
+    SELECT d.doc_id, d.lang, d.source, {half_up_sql('q.quality')} AS quality
+    FROM documents d JOIN quality q ON q.doc_id = d.doc_id
+    WHERE d.doc_id NOT IN (SELECT doc FROM dropped)
+    """
+
+
+@query("d14_quality_keeper", oracle=_d14_oracle())
 def d14_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d13's keeper policy upgraded from 'smallest id' to 'highest
     quality': within each near-dup cluster (d12) keep the member with
@@ -1778,55 +1808,6 @@ def d14_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(q, "doc_id")
         .select("doc_id", "lang", "source", F.col("q").alias("quality"))
     )
-
-
-def _d14_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_QUALITY_CTES
-
-    return f"""
-    WITH RECURSIVE {_D3_CTES}, pairs AS (
-      {_D3_SELECT}
-    ), edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), reach(doc, lab) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
-    ), clusters AS (
-      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
-    ), {_SQL_QUALITY_CTES}, ranked AS (
-      SELECT c.doc,
-             row_number() OVER (PARTITION BY c.cluster_id
-                                ORDER BY {half_up_sql('q.quality')} DESC, c.doc)
-               AS rn
-      FROM clusters c JOIN quality q ON q.doc_id = c.doc
-    ), dropped AS (
-      SELECT doc FROM ranked WHERE rn > 1
-    )
-    SELECT d.doc_id, d.lang, d.source, {half_up_sql('q.quality')} AS quality
-    FROM documents d JOIN quality q ON q.doc_id = d.doc_id
-    WHERE d.doc_id NOT IN (SELECT doc FROM dropped)
-    """
-
-
-# Attach the oracle post-hoc: it needs text_analysis._SQL_QUALITY_CTES,
-# and importing that at module top would be fine today but couples the
-# modules' import order; doing it after registration keeps both lazy.
-def _attach_d14_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["d14_quality_keeper"]
-    if rq.oracle is None:
-        _R._REGISTRY["d14_quality_keeper"] = dataclasses.replace(
-            rq, oracle=_d14_oracle()
-        )
-
-
-_attach_d14_oracle()
 
 
 #: d15 window length in TOKENS. Any duplicated run of >= DUPSPAN_K

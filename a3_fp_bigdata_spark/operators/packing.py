@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from a3_fp_bigdata_spark.data import (
+    fingerprint_where,
     read_stamped_scratch,
     run_scratch,
     stamp,
@@ -45,10 +46,28 @@ from a3_fp_bigdata_spark.data import (
 )
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
+from a3_fp_bigdata_spark.operators.dedup import (
+    _D3_CTES,
+    _D3_SELECT,
+    _D15_SPAN_CTES,
+    D18_CONTAIN_TAU,
+    D18_NGRAM,
+)
+from a3_fp_bigdata_spark.operators.similarity import (
+    _D17_SCRATCH,
+    _SQL_D,
+    _sql_cos,
+    SEMDEDUP_EPS,
+)
 from a3_fp_bigdata_spark.operators.text_analysis import (
+    DECON_BENCH_PCT,
+    DECON_NGRAM,
+    LM_VOCAB_K,
     SAMPLE_MULT,
     SAMPLE_PREMOD,
+    _SQL_QUALITY_CTES,
     _SQL_TOKS as _SQL_TOKS_REF,  # DuckDB twin of TX.tokens — keep in sync
+    _sql_ngrams,
     sample_predicate,
     sample_predicate_sql,
 )
@@ -622,7 +641,22 @@ def sliding_chunk_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-@query("pk9_weighted_sample", oracle=None)  # attached below (quality CTEs)
+def _pk9_oracle() -> str:
+    return f"""
+    WITH {_SQL_QUALITY_CTES}, rated AS (
+      SELECT doc_id,
+             greatest(1, CAST(floor({half_up_sql('quality')} * 100 + 0.5)
+                              AS INT)) AS keep_rate
+      FROM quality
+    )
+    SELECT doc_id, keep_rate,
+           {half_up_sql('100.0 / keep_rate')} AS inv_weight
+    FROM rated
+    WHERE ((doc_id % {SAMPLE_PREMOD}) * {SAMPLE_MULT}) % 100 < keep_rate
+    """
+
+
+@query("pk9_weighted_sample", oracle=_pk9_oracle())
 def pk9_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-weighted importance sampling: keep each document with
     probability proportional to its tx2 quality score (keep_rate =
@@ -665,25 +699,6 @@ def pk9_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "keep_rate",
         half_up(F.lit(100.0) / F.col("keep_rate")).alias("inv_weight"),
     )
-
-
-def _pk9_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.text_analysis import (
-        _SQL_QUALITY_CTES,
-    )
-
-    return f"""
-    WITH {_SQL_QUALITY_CTES}, rated AS (
-      SELECT doc_id,
-             greatest(1, CAST(floor({half_up_sql('quality')} * 100 + 0.5)
-                              AS INT)) AS keep_rate
-      FROM quality
-    )
-    SELECT doc_id, keep_rate,
-           {half_up_sql('100.0 / keep_rate')} AS inv_weight
-    FROM rated
-    WHERE ((doc_id % {SAMPLE_PREMOD}) * {SAMPLE_MULT}) % 100 < keep_rate
-    """
 
 
 #: pl2's portable chunk featurization: dim d counts the chunk tokens
@@ -741,7 +756,7 @@ def _pl2_oracle() -> str:
     """
 
 
-@query("pl2_chunk_index_stats", oracle=None)  # attached below (pk8 CTEs)
+@query("pl2_chunk_index_stats", oracle=_pl2_oracle())
 def pl2_chunk_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG ingest pipeline composed end-to-end: pk8's sliding chunks ->
     per-chunk feature vector (bag-of-prefix counts — the portable
@@ -817,8 +832,6 @@ def chunk_bucket_frame(chunks: DataFrame) -> DataFrame:
 
 
 def _pk7_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.dedup import _D3_CTES, _D3_SELECT
-
     is_val_a = f"(({sample_predicate_sql('doc_a', VAL_PCT)}))"
     is_val_b = f"(({sample_predicate_sql('doc_b', VAL_PCT)}))"
     return f"""
@@ -832,7 +845,7 @@ def _pk7_oracle() -> str:
     """
 
 
-@query("pk7_split_leakage", oracle=None)  # oracle attached below (d3 CTEs)
+@query("pk7_split_leakage", oracle=_pk7_oracle())
 def pk7_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-split contamination audit: near-duplicate document pairs
     (d3's exact n-gram Jaccard ground truth) that land on OPPOSITE
@@ -872,10 +885,59 @@ def pk7_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 MANIFEST_MIN_QUALITY = 0.5
 
 
-@query(
-    "pl1_training_manifest",
-    oracle=None,  # assembled below from dedup + text_analysis CTEs
-)
+def _pl1_oracle() -> str:
+    return f"""
+    WITH RECURSIVE {_D3_CTES}, pairs AS (
+      {_D3_SELECT}
+    ), edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ), reach(doc, lab) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
+    ), clusters AS (
+      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
+    ), {_SQL_QUALITY_CTES}, ranked AS (
+      SELECT c.doc,
+             row_number() OVER (PARTITION BY c.cluster_id
+                                -- division-free: ordering by the
+                                -- floor numerator equals ordering by
+                                -- half_up (positive constant divisor)
+                                ORDER BY floor(q.quality * 10000 + 0.5)
+                                         DESC, c.doc)
+               AS rn
+      FROM clusters c JOIN quality q ON q.doc_id = c.doc
+    ), dropped AS (
+      SELECT doc FROM ranked WHERE rn > 1
+    ), kept AS (
+      SELECT d.doc_id, d.doc_id % {NSHARDS} AS shard,
+             CAST({_SQL_COST} AS BIGINT) AS cost,
+             row_number() OVER (PARTITION BY d.doc_id % {NSHARDS}
+                                ORDER BY d.doc_id) AS rn
+      FROM documents d JOIN quality q ON q.doc_id = d.doc_id
+      WHERE {half_up_sql('q.quality')} >= {MANIFEST_MIN_QUALITY}
+        AND d.doc_id NOT IN (SELECT doc FROM dropped)
+    ), step AS (
+      SELECT shard, rn, doc_id, cost,
+             CAST(0 AS BIGINT) AS seq_id, cost AS fill
+      FROM kept WHERE rn = 1
+      UNION ALL
+      SELECT k.shard, k.rn, k.doc_id, k.cost,
+             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
+                  THEN s.seq_id + 1 ELSE s.seq_id END,
+             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
+                  THEN k.cost ELSE s.fill + k.cost END
+      FROM step s JOIN kept k ON k.shard = s.shard AND k.rn = s.rn + 1
+    )
+    SELECT CAST(shard AS BIGINT) AS shard, seq_id,
+           count(*) AS n_docs, CAST(sum(cost) AS BIGINT) AS seq_tokens
+    FROM step GROUP BY shard, seq_id
+    """
+
+
+@query("pl1_training_manifest", oracle=_pl1_oracle())
 def pl1_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE curation pipeline as one declarative query — the
     engine's end-to-end flagship for training-data assembly:
@@ -930,61 +992,6 @@ def pl1_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "shard", "cost")
     )
     return _pack_manifest(kept)
-
-
-def _pl1_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.dedup import _D3_CTES, _D3_SELECT
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_QUALITY_CTES
-
-    return f"""
-    WITH RECURSIVE {_D3_CTES}, pairs AS (
-      {_D3_SELECT}
-    ), edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), reach(doc, lab) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
-    ), clusters AS (
-      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
-    ), {_SQL_QUALITY_CTES}, ranked AS (
-      SELECT c.doc,
-             row_number() OVER (PARTITION BY c.cluster_id
-                                -- division-free: ordering by the
-                                -- floor numerator equals ordering by
-                                -- half_up (positive constant divisor)
-                                ORDER BY floor(q.quality * 10000 + 0.5)
-                                         DESC, c.doc)
-               AS rn
-      FROM clusters c JOIN quality q ON q.doc_id = c.doc
-    ), dropped AS (
-      SELECT doc FROM ranked WHERE rn > 1
-    ), kept AS (
-      SELECT d.doc_id, d.doc_id % {NSHARDS} AS shard,
-             CAST({_SQL_COST} AS BIGINT) AS cost,
-             row_number() OVER (PARTITION BY d.doc_id % {NSHARDS}
-                                ORDER BY d.doc_id) AS rn
-      FROM documents d JOIN quality q ON q.doc_id = d.doc_id
-      WHERE {half_up_sql('q.quality')} >= {MANIFEST_MIN_QUALITY}
-        AND d.doc_id NOT IN (SELECT doc FROM dropped)
-    ), step AS (
-      SELECT shard, rn, doc_id, cost,
-             CAST(0 AS BIGINT) AS seq_id, cost AS fill
-      FROM kept WHERE rn = 1
-      UNION ALL
-      SELECT k.shard, k.rn, k.doc_id, k.cost,
-             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
-                  THEN s.seq_id + 1 ELSE s.seq_id END,
-             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
-                  THEN k.cost ELSE s.fill + k.cost END
-      FROM step s JOIN kept k ON k.shard = s.shard AND k.rn = s.rn + 1
-    )
-    SELECT CAST(shard AS BIGINT) AS shard, seq_id,
-           count(*) AS n_docs, CAST(sum(cost) AS BIGINT) AS seq_tokens
-    FROM step GROUP BY shard, seq_id
-    """
 
 
 @query(
@@ -1133,9 +1140,109 @@ def pl3_corpus_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _manifest_oracle(decontaminate: bool) -> str:
+    # CTE roster check (names must stay disjoint across the composed
+    # fragments): d3 = words/sh/ex/common/cnt; quality = qbase/qcomps/
+    # quality; d15 = toks/grams/dup/hits/brk/isl/spans; local additions
+    # renamed where pl1/d16 would collide (keptoks, survivors);
+    # decontamination fragment (pl5 only) = dge/dbench_e/dexact/dgf/
+    # dbench_f/dbcnt/dfuzzy, all reading d3's `words`.
+    decon_ctes, decon_where = "", ""
+    if decontaminate:
+        bench_pred = sample_predicate_sql("doc_id", DECON_BENCH_PCT)
+        bench_pred_k = sample_predicate_sql("k.doc_id", DECON_BENCH_PCT)
+        decon_ctes = f""", dge AS (
+      SELECT DISTINCT doc_id, unnest({_sql_ngrams(DECON_NGRAM)}) AS g
+      FROM words WHERE len(w) >= {DECON_NGRAM}
+    ), dbench_e AS (
+      SELECT DISTINCT g FROM dge WHERE {bench_pred}
+    ), dexact AS (
+      SELECT DISTINCT doc_id FROM dge
+      WHERE NOT ({bench_pred}) AND g IN (SELECT g FROM dbench_e)
+    ), dgf AS (
+      SELECT DISTINCT doc_id, unnest({_sql_ngrams(D18_NGRAM)}) AS g
+      FROM words WHERE len(w) >= {D18_NGRAM}
+    ), dbench_f AS (
+      SELECT doc_id AS bench_id, g FROM dgf WHERE {bench_pred}
+    ), dbcnt AS (
+      SELECT bench_id, count(*) AS nb FROM dbench_f GROUP BY 1
+    ), dfuzzy AS (
+      SELECT DISTINCT doc_id FROM (
+        SELECT t.doc_id, b.bench_id, count(*) AS c
+        FROM dgf t JOIN dbench_f b USING (g)
+        WHERE NOT ({bench_pred})
+        GROUP BY 1, 2
+      ) p JOIN dbcnt USING (bench_id)
+      WHERE CAST(p.c AS DOUBLE) / dbcnt.nb >= {D18_CONTAIN_TAU}
+    )"""
+        decon_where = f"""
+        AND NOT ({bench_pred_k})
+        AND k.doc_id NOT IN (SELECT doc_id FROM dexact)
+        AND k.doc_id NOT IN (SELECT doc_id FROM dfuzzy)"""
+    return f"""
+    WITH RECURSIVE {_D3_CTES}, pairs AS (
+      {_D3_SELECT}
+    ), edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ), reach(doc, lab) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
+    ), clusters AS (
+      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
+    ), {_SQL_QUALITY_CTES}, ranked AS (
+      SELECT c.doc,
+             row_number() OVER (PARTITION BY c.cluster_id
+                                -- division-free: ordering by the
+                                -- floor numerator equals ordering by
+                                -- half_up (positive constant divisor)
+                                ORDER BY floor(q.quality * 10000 + 0.5)
+                                         DESC, c.doc)
+               AS rn
+      FROM clusters c JOIN quality q ON q.doc_id = c.doc
+    ), dropped AS (
+      SELECT doc FROM ranked WHERE rn > 1
+    ), {_D15_SPAN_CTES}, tokrows AS (
+      SELECT doc_id, unnest(t) AS tok, unnest(range(0, len(t))) AS pos
+      FROM toks
+    ), keptoks AS (
+      SELECT g.doc_id, g.pos, g.tok FROM tokrows g
+      WHERE NOT EXISTS (SELECT 1 FROM spans s
+                        WHERE s.doc_id = g.doc_id
+                          AND g.pos >= s.span_start AND g.pos < s.span_end)
+    ), kagg AS (
+      SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text
+      FROM keptoks GROUP BY doc_id
+    ){decon_ctes}, survivors AS (
+      SELECT k.doc_id, k.doc_id % {NSHARDS} AS shard,
+             CAST({_sql_cost('k.clean_text')} AS BIGINT) AS cost,
+             row_number() OVER (PARTITION BY k.doc_id % {NSHARDS}
+                                ORDER BY k.doc_id) AS rn
+      FROM kagg k JOIN quality q ON q.doc_id = k.doc_id
+      WHERE {half_up_sql('q.quality')} >= {MANIFEST_MIN_QUALITY}
+        AND k.doc_id NOT IN (SELECT doc FROM dropped){decon_where}
+    ), step AS (
+      SELECT shard, rn, doc_id, cost,
+             CAST(0 AS BIGINT) AS seq_id, cost AS fill
+      FROM survivors WHERE rn = 1
+      UNION ALL
+      SELECT k.shard, k.rn, k.doc_id, k.cost,
+             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
+                  THEN s.seq_id + 1 ELSE s.seq_id END,
+             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
+                  THEN k.cost ELSE s.fill + k.cost END
+      FROM step s JOIN survivors k ON k.shard = s.shard AND k.rn = s.rn + 1
+    )
+    SELECT CAST(shard AS BIGINT) AS shard, seq_id,
+           count(*) AS n_docs, CAST(sum(cost) AS BIGINT) AS seq_tokens
+    FROM step GROUP BY shard, seq_id
+    """
+
+
 @query(
-    "pl4_span_clean_manifest",
-    oracle=None,  # assembled below: composes dedup + text_analysis CTEs
+    "pl4_span_clean_manifest", oracle=_manifest_oracle(decontaminate=False)
 )
 def pl4_span_clean_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SPAN-level curation pipeline end-to-end — pl1's doc-level
@@ -1239,132 +1346,9 @@ def _pack_manifest(kept: DataFrame) -> DataFrame:
     )
 
 
-def _pl4_oracle() -> str:
-    return _manifest_oracle(decontaminate=False)
-
-
-def _manifest_oracle(decontaminate: bool) -> str:
-    from a3_fp_bigdata_spark.operators.dedup import (
-        _D3_CTES,
-        _D3_SELECT,
-        _D15_SPAN_CTES,
-    )
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_QUALITY_CTES
-
-    # CTE roster check (names must stay disjoint across the composed
-    # fragments): d3 = words/sh/ex/common/cnt; quality = qbase/qcomps/
-    # quality; d15 = toks/grams/dup/hits/brk/isl/spans; local additions
-    # renamed where pl1/d16 would collide (keptoks, survivors);
-    # decontamination fragment (pl5 only) = dge/dbench_e/dexact/dgf/
-    # dbench_f/dbcnt/dfuzzy, all reading d3's `words`.
-    decon_ctes, decon_where = "", ""
-    if decontaminate:
-        from a3_fp_bigdata_spark.operators.dedup import (
-            D18_CONTAIN_TAU,
-            D18_NGRAM,
-        )
-        from a3_fp_bigdata_spark.operators.text_analysis import (
-            DECON_BENCH_PCT,
-            DECON_NGRAM,
-            _sql_ngrams,
-            sample_predicate_sql,
-        )
-
-        bench_pred = sample_predicate_sql("doc_id", DECON_BENCH_PCT)
-        bench_pred_k = sample_predicate_sql("k.doc_id", DECON_BENCH_PCT)
-        decon_ctes = f""", dge AS (
-      SELECT DISTINCT doc_id, unnest({_sql_ngrams(DECON_NGRAM)}) AS g
-      FROM words WHERE len(w) >= {DECON_NGRAM}
-    ), dbench_e AS (
-      SELECT DISTINCT g FROM dge WHERE {bench_pred}
-    ), dexact AS (
-      SELECT DISTINCT doc_id FROM dge
-      WHERE NOT ({bench_pred}) AND g IN (SELECT g FROM dbench_e)
-    ), dgf AS (
-      SELECT DISTINCT doc_id, unnest({_sql_ngrams(D18_NGRAM)}) AS g
-      FROM words WHERE len(w) >= {D18_NGRAM}
-    ), dbench_f AS (
-      SELECT doc_id AS bench_id, g FROM dgf WHERE {bench_pred}
-    ), dbcnt AS (
-      SELECT bench_id, count(*) AS nb FROM dbench_f GROUP BY 1
-    ), dfuzzy AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT t.doc_id, b.bench_id, count(*) AS c
-        FROM dgf t JOIN dbench_f b USING (g)
-        WHERE NOT ({bench_pred})
-        GROUP BY 1, 2
-      ) p JOIN dbcnt USING (bench_id)
-      WHERE CAST(p.c AS DOUBLE) / dbcnt.nb >= {D18_CONTAIN_TAU}
-    )"""
-        decon_where = f"""
-        AND NOT ({bench_pred_k})
-        AND k.doc_id NOT IN (SELECT doc_id FROM dexact)
-        AND k.doc_id NOT IN (SELECT doc_id FROM dfuzzy)"""
-    return f"""
-    WITH RECURSIVE {_D3_CTES}, pairs AS (
-      {_D3_SELECT}
-    ), edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), reach(doc, lab) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
-    ), clusters AS (
-      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
-    ), {_SQL_QUALITY_CTES}, ranked AS (
-      SELECT c.doc,
-             row_number() OVER (PARTITION BY c.cluster_id
-                                -- division-free: ordering by the
-                                -- floor numerator equals ordering by
-                                -- half_up (positive constant divisor)
-                                ORDER BY floor(q.quality * 10000 + 0.5)
-                                         DESC, c.doc)
-               AS rn
-      FROM clusters c JOIN quality q ON q.doc_id = c.doc
-    ), dropped AS (
-      SELECT doc FROM ranked WHERE rn > 1
-    ), {_D15_SPAN_CTES}, tokrows AS (
-      SELECT doc_id, unnest(t) AS tok, unnest(range(0, len(t))) AS pos
-      FROM toks
-    ), keptoks AS (
-      SELECT g.doc_id, g.pos, g.tok FROM tokrows g
-      WHERE NOT EXISTS (SELECT 1 FROM spans s
-                        WHERE s.doc_id = g.doc_id
-                          AND g.pos >= s.span_start AND g.pos < s.span_end)
-    ), kagg AS (
-      SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text
-      FROM keptoks GROUP BY doc_id
-    ){decon_ctes}, survivors AS (
-      SELECT k.doc_id, k.doc_id % {NSHARDS} AS shard,
-             CAST({_sql_cost('k.clean_text')} AS BIGINT) AS cost,
-             row_number() OVER (PARTITION BY k.doc_id % {NSHARDS}
-                                ORDER BY k.doc_id) AS rn
-      FROM kagg k JOIN quality q ON q.doc_id = k.doc_id
-      WHERE {half_up_sql('q.quality')} >= {MANIFEST_MIN_QUALITY}
-        AND k.doc_id NOT IN (SELECT doc FROM dropped){decon_where}
-    ), step AS (
-      SELECT shard, rn, doc_id, cost,
-             CAST(0 AS BIGINT) AS seq_id, cost AS fill
-      FROM survivors WHERE rn = 1
-      UNION ALL
-      SELECT k.shard, k.rn, k.doc_id, k.cost,
-             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
-                  THEN s.seq_id + 1 ELSE s.seq_id END,
-             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
-                  THEN k.cost ELSE s.fill + k.cost END
-      FROM step s JOIN survivors k ON k.shard = s.shard AND k.rn = s.rn + 1
-    )
-    SELECT CAST(shard AS BIGINT) AS shard, seq_id,
-           count(*) AS n_docs, CAST(sum(cost) AS BIGINT) AS seq_tokens
-    FROM step GROUP BY shard, seq_id
-    """
-
-
 @query(
     "pl5_decontaminated_manifest",
-    oracle=None,  # assembled below: pl4's chain + the decon fragment
+    oracle=_manifest_oracle(decontaminate=True),
 )
 def pl5_decontaminated_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation pipeline a production pretraining run actually
@@ -1385,11 +1369,7 @@ def pl5_decontaminated_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a3_fp_bigdata_spark.operators.dedup import (
         d18_fuzzy_decontaminate,
     )
-    from a3_fp_bigdata_spark.operators.text_analysis import (
-        DECON_BENCH_PCT,
-        sample_predicate,
-        tx9_decontaminate,
-    )
+    from a3_fp_bigdata_spark.operators.text_analysis import tx9_decontaminate
 
     kept = _span_clean_costs(spark, sf_dir)
     flagged = (
@@ -1402,34 +1382,6 @@ def pl5_decontaminated_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ~sample_predicate(F.col("doc_id"), DECON_BENCH_PCT)
     ).join(flagged, "doc_id", "left_anti")
     return _pack_manifest(clean)
-
-
-def _pl5_oracle() -> str:
-    return _manifest_oracle(decontaminate=True)
-
-
-def _attach_deferred_oracles() -> None:
-    """Oracles composed from other modules' CTE fragments are attached
-    post-registration (the fragments import cleanly only after the
-    whole operator package is loadable)."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    for name, build in (
-        ("pl1_training_manifest", _pl1_oracle),
-        ("pl4_span_clean_manifest", _pl4_oracle),
-        ("pl5_decontaminated_manifest", _pl5_oracle),
-        ("pk7_split_leakage", _pk7_oracle),
-        ("pk9_weighted_sample", _pk9_oracle),
-        ("pl2_chunk_index_stats", _pl2_oracle),
-    ):
-        rq = _R._REGISTRY[name]
-        if rq.oracle is None:
-            _R._REGISTRY[name] = dataclasses.replace(rq, oracle=build())
-
-
-_attach_deferred_oracles()
 
 
 #: pk11 length-bucketed batching: docs per training batch, and the
@@ -1547,10 +1499,61 @@ _FORGET_SQL = (
 )
 
 
-@query(
-    "pl6_forget_ledger",
-    oracle=None,  # assembled below: needs dedup's recursive-CTE clusters
-)
+_FORGET_CLUSTER_CTES = """edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ), reach(doc_id, lab) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc_id = e.dst
+    ), clusters AS (
+      SELECT doc_id, min(lab) AS cluster_id FROM reach GROUP BY doc_id
+    ), req AS (
+      SELECT doc_id FROM documents WHERE {forget}
+    ), reqc AS (
+      SELECT DISTINCT c.cluster_id
+      FROM clusters c JOIN req r ON r.doc_id = c.doc_id
+    ), ledger AS (
+      SELECT r.doc_id, 'requested' AS reason,
+             CAST(COALESCE(c.cluster_id, -1) AS BIGINT) AS cluster_id
+      FROM req r LEFT JOIN clusters c ON c.doc_id = r.doc_id
+      UNION ALL
+      SELECT c.doc_id, 'cluster_expansion' AS reason,
+             CAST(c.cluster_id AS BIGINT) AS cluster_id
+      FROM clusters c JOIN reqc ON reqc.cluster_id = c.cluster_id
+      WHERE c.doc_id NOT IN (SELECT doc_id FROM req)
+    )"""
+
+
+def _forget_ctes() -> str:
+    return (
+        f"WITH RECURSIVE {_D3_CTES}, pairs AS (\n      {_D3_SELECT}\n"
+        f"    ), {_FORGET_CLUSTER_CTES.format(forget=_FORGET_SQL)}"
+    )
+
+
+def _pl6_oracle() -> str:
+    return f"""
+    {_forget_ctes()}
+    SELECT doc_id, reason, cluster_id FROM ledger
+    """
+
+
+def _pl7_oracle() -> str:
+    return f"""
+    {_forget_ctes()}
+    SELECT CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's1')}), 0)
+                AS BIGINT) AS xor1,
+           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's2')}), 0)
+                AS BIGINT) AS xor2
+    FROM documents
+    WHERE doc_id NOT IN (SELECT doc_id FROM ledger)
+    """
+
+
+@query("pl6_forget_ledger", oracle=_pl6_oracle())
 def pl6_forget_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten purge ledger WITH near-dup cluster
     expansion — the deletion artifact a GDPR/CCPA-compliant corpus
@@ -1603,10 +1606,7 @@ def pl6_forget_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "pl7_forget_attestation",
-    oracle=None,  # assembled below: pl3's digest over the purged corpus
-)
+@query("pl7_forget_attestation", oracle=_pl7_oracle())
 def pl7_forget_attestation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-purge attestation: pl3's order-invariant corpus checksum
     recomputed over the corpus MINUS pl6's purge set — (n_rows, xor1,
@@ -1637,79 +1637,6 @@ def pl7_forget_attestation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FORGET_CLUSTER_CTES = """edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), reach(doc_id, lab) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc_id = e.dst
-    ), clusters AS (
-      SELECT doc_id, min(lab) AS cluster_id FROM reach GROUP BY doc_id
-    ), req AS (
-      SELECT doc_id FROM documents WHERE {forget}
-    ), reqc AS (
-      SELECT DISTINCT c.cluster_id
-      FROM clusters c JOIN req r ON r.doc_id = c.doc_id
-    ), ledger AS (
-      SELECT r.doc_id, 'requested' AS reason,
-             CAST(COALESCE(c.cluster_id, -1) AS BIGINT) AS cluster_id
-      FROM req r LEFT JOIN clusters c ON c.doc_id = r.doc_id
-      UNION ALL
-      SELECT c.doc_id, 'cluster_expansion' AS reason,
-             CAST(c.cluster_id AS BIGINT) AS cluster_id
-      FROM clusters c JOIN reqc ON reqc.cluster_id = c.cluster_id
-      WHERE c.doc_id NOT IN (SELECT doc_id FROM req)
-    )"""
-
-
-def _forget_ctes() -> str:
-    from a3_fp_bigdata_spark.operators.dedup import _D3_CTES, _D3_SELECT
-
-    return (
-        f"WITH RECURSIVE {_D3_CTES}, pairs AS (\n      {_D3_SELECT}\n"
-        f"    ), {_FORGET_CLUSTER_CTES.format(forget=_FORGET_SQL)}"
-    )
-
-
-def _pl6_oracle() -> str:
-    return f"""
-    {_forget_ctes()}
-    SELECT doc_id, reason, cluster_id FROM ledger
-    """
-
-
-def _pl7_oracle() -> str:
-    return f"""
-    {_forget_ctes()}
-    SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's1')}), 0)
-                AS BIGINT) AS xor1,
-           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's2')}), 0)
-                AS BIGINT) AS xor2
-    FROM documents
-    WHERE doc_id NOT IN (SELECT doc_id FROM ledger)
-    """
-
-
-def _attach_forget_oracles() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    for name, build in (
-        ("pl6_forget_ledger", _pl6_oracle),
-        ("pl7_forget_attestation", _pl7_oracle),
-    ):
-        rq = _R._REGISTRY[name]
-        if rq.oracle is None:
-            _R._REGISTRY[name] = dataclasses.replace(rq, oracle=build())
-
-
-_attach_forget_oracles()
-
-
 # ---------------------------------------------------------------------------
 # pk12: quality-stratified mixture (CCNet head/middle/tail)
 # ---------------------------------------------------------------------------
@@ -1722,8 +1649,6 @@ QMIX_BANDS = len(QMIX_PCT)
 
 
 def _pk12_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.text_analysis import LM_VOCAB_K
-
     band_case = (
         "CASE band WHEN 0 THEN 60 WHEN 1 THEN 30 ELSE 10 END"
     )
@@ -1820,7 +1745,7 @@ def _quality_bands(spark: SparkSession, sf_dir: str):
     return scored, banded
 
 
-@query("pk12_quality_mixture", oracle=None)  # attached below (tx13 CTEs)
+@query("pk12_quality_mixture", oracle=_pk12_oracle())
 def pk12_quality_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-stratified mixture — pk5's data-derived downsampling
     keyed on LM-quality BANDS instead of language: CCNet buckets the
@@ -1879,49 +1804,12 @@ def pk12_quality_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _attach_pk12_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["pk12_quality_mixture"]
-    if rq.oracle is None:
-        _R._REGISTRY["pk12_quality_mixture"] = dataclasses.replace(
-            rq, oracle=_pk12_oracle()
-        )
-
-
-_attach_pk12_oracle()
-
-
 # ---------------------------------------------------------------------------
 # pl8: corpus-release flagship — the full production chain in one artifact
 # ---------------------------------------------------------------------------
 
 
 def _pl8_oracle() -> str:
-    from a3_fp_bigdata_spark.data import fingerprint_where
-    from a3_fp_bigdata_spark.operators.dedup import (
-        _D3_CTES,
-        _D3_SELECT,
-        _D15_SPAN_CTES,
-        D18_CONTAIN_TAU,
-        D18_NGRAM,
-    )
-    from a3_fp_bigdata_spark.operators.similarity import (
-        _D17_SCRATCH,
-        _SQL_D,
-        _sql_cos,
-        SEMDEDUP_EPS,
-    )
-    from a3_fp_bigdata_spark.operators.text_analysis import (
-        _SQL_QUALITY_CTES,
-        DECON_BENCH_PCT,
-        DECON_NGRAM,
-        _sql_ngrams,
-        sample_predicate_sql,
-    )
-
     bench_pred = sample_predicate_sql("doc_id", DECON_BENCH_PCT)
     bench_pred_k = sample_predicate_sql("k.doc_id", DECON_BENCH_PCT)
     return f"""
@@ -2075,7 +1963,7 @@ def _pl8_oracle() -> str:
     """
 
 
-@query("pl8_release_manifest", oracle=None)  # attached below (composed CTEs)
+@query("pl8_release_manifest", oracle=_pl8_oracle())
 def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE corpus-release artifact — the full production sequence a
     real pretraining run ships, composed end to end and attested in
@@ -2151,11 +2039,7 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a3_fp_bigdata_spark.operators.similarity import (
         materialize_d17_verdict,
     )
-    from a3_fp_bigdata_spark.operators.text_analysis import (
-        DECON_BENCH_PCT,
-        sample_predicate,
-        tx9_decontaminate,
-    )
+    from a3_fp_bigdata_spark.operators.text_analysis import tx9_decontaminate
     from a3_fp_bigdata_spark.registry import pin
 
     # leaving the block waits for the d17 branch, on a failure too
@@ -2259,29 +2143,12 @@ def _greedy_pack_count(doc_id: Column, cost: Column) -> Column:
     return F.aggregate(pairs, start, step, lambda acc: acc["seq"] + 1)
 
 
-def _attach_pl8_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["pl8_release_manifest"]
-    if rq.oracle is None:
-        _R._REGISTRY["pl8_release_manifest"] = dataclasses.replace(
-            rq, oracle=_pl8_oracle()
-        )
-
-
-_attach_pl8_oracle()
-
-
 # ---------------------------------------------------------------------------
 # pk13: quality-curriculum schedule (global order without a global sort)
 # ---------------------------------------------------------------------------
 
 
 def _pk13_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.text_analysis import LM_VOCAB_K
-
     return f"""
     WITH costs AS (
       SELECT doc_id, doc_id % {NSHARDS} AS shard,
@@ -2342,7 +2209,7 @@ def _pk13_oracle() -> str:
     """
 
 
-@query("pk13_curriculum_schedule", oracle=None)  # attached below
+@query("pk13_curriculum_schedule", oracle=_pk13_oracle())
 def pk13_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-curriculum training order — consume pk11's length-
     bucketed batches band by band (cleanest LM-quality tercile first,
@@ -2402,21 +2269,6 @@ def pk13_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("offset") + F.col("within") - 1).alias("curriculum_pos"),
         )
     )
-
-
-def _attach_pk13_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["pk13_curriculum_schedule"]
-    if rq.oracle is None:
-        _R._REGISTRY["pk13_curriculum_schedule"] = dataclasses.replace(
-            rq, oracle=_pk13_oracle()
-        )
-
-
-_attach_pk13_oracle()
 
 
 #: pk15 — temperature (alpha) smoothing exponent, expressed as the
@@ -2549,10 +2401,49 @@ def _bfd_assign(pdf):
     return pdf[["doc_id", "shard", "bin_id", "cost"]]
 
 
-@query(
-    "pk16_bestfit_pack_audit",
-    oracle=None,  # attached below (needs the cost SQL + fingerprint)
-)
+def _pk16_oracle() -> str:
+    return f"""
+    WITH scratch AS (
+      SELECT doc_id, shard, bin_id, cost
+      FROM read_parquet('{_PK16_SCRATCH}/*.parquet')
+      WHERE {fingerprint_where('documents', 'doc_id')}
+    ), costs AS (
+      SELECT doc_id, CAST({_SQL_COST} AS BIGINT) AS want_cost
+      FROM documents
+    ), bins AS (
+      SELECT s.shard, s.bin_id,
+             CAST(sum(s.cost) AS BIGINT) AS fill,
+             CAST(count(*) AS BIGINT) AS n_docs_bin,
+             CAST(sum(CASE WHEN s.cost <> c.want_cost THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_cost_mismatch
+      FROM scratch s JOIN costs c USING (doc_id)
+      GROUP BY 1, 2
+    )
+    SELECT shard,
+           CAST(sum(n_docs_bin) AS BIGINT) AS n_docs,
+           CAST(count(*) AS BIGINT) AS n_bins,
+           CAST(sum(CASE WHEN fill > {PACK_BUDGET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_oversize,
+           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
+                                  THEN fill END), 0)
+                AS BIGINT) AS max_regular_fill,
+           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_light_bins,
+           CAST(min(CASE WHEN fill > {PACK_BUDGET}
+                         THEN CAST(n_docs_bin = 1 AS INT)
+                         ELSE 1 END) AS INT) AS oversize_singletons_ok,
+           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
+                                  THEN fill END), 0) <= {PACK_BUDGET}
+                AS INT) AS budget_ok,
+           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
+                <= 1 AS INT) AS cert_ok
+    FROM bins
+    WHERE (SELECT sum(n_cost_mismatch) FROM bins) = 0
+    GROUP BY shard
+    """
+
+
+@query("pk16_bestfit_pack_audit", oracle=_pk16_oracle())
 def pk16_bestfit_pack_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2623,58 +2514,3 @@ def pk16_bestfit_pack_audit(
             (F.col("n_light_bins") <= 1).cast("int").alias("cert_ok"),
         )
     )
-
-
-def _attach_pk16_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.data import fingerprint_where
-
-    sql = f"""
-    WITH scratch AS (
-      SELECT doc_id, shard, bin_id, cost
-      FROM read_parquet('{_PK16_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
-    ), costs AS (
-      SELECT doc_id, CAST({_SQL_COST} AS BIGINT) AS want_cost
-      FROM documents
-    ), bins AS (
-      SELECT s.shard, s.bin_id,
-             CAST(sum(s.cost) AS BIGINT) AS fill,
-             CAST(count(*) AS BIGINT) AS n_docs_bin,
-             CAST(sum(CASE WHEN s.cost <> c.want_cost THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_cost_mismatch
-      FROM scratch s JOIN costs c USING (doc_id)
-      GROUP BY 1, 2
-    )
-    SELECT shard,
-           CAST(sum(n_docs_bin) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_bins,
-           CAST(sum(CASE WHEN fill > {PACK_BUDGET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_oversize,
-           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
-                                  THEN fill END), 0)
-                AS BIGINT) AS max_regular_fill,
-           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_light_bins,
-           CAST(min(CASE WHEN fill > {PACK_BUDGET}
-                         THEN CAST(n_docs_bin = 1 AS INT)
-                         ELSE 1 END) AS INT) AS oversize_singletons_ok,
-           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
-                                  THEN fill END), 0) <= {PACK_BUDGET}
-                AS INT) AS budget_ok,
-           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
-                <= 1 AS INT) AS cert_ok
-    FROM bins
-    WHERE (SELECT sum(n_cost_mismatch) FROM bins) = 0
-    GROUP BY shard
-    """
-    rq = _R._REGISTRY["pk16_bestfit_pack_audit"]
-    if rq.oracle is None:
-        _R._REGISTRY["pk16_bestfit_pack_audit"] = dataclasses.replace(
-            rq, oracle=sql
-        )
-
-
-_attach_pk16_oracle()

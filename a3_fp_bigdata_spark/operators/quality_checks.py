@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import table
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
+from a3_fp_bigdata_spark.operators.similarity import _SQL_BUCKETED_CTE
+from a3_fp_bigdata_spark.operators.text_analysis import sample_predicate_sql
 from a3_fp_bigdata_spark.registry import query
 
 #: Value-range expectation for lineitem quantities (TPC-H generates
@@ -444,10 +446,42 @@ def _drift_cell_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dq4_embedding_drift",
-    oracle=None,  # attached below (needs similarity's bucketed CTE)
-)
+def _sql_drift_hist() -> str:
+    """The oracle-side twin of _drift_cell_hist: bucketed CTE + the
+    per-cell snapshot histogram, shared by dq4's and dq5's oracles."""
+    old = sample_predicate_sql("vec_id", EMB_SNAPSHOT_PCT)
+    return f"""
+    {_SQL_BUCKETED_CTE}, hist AS (
+      SELECT bucket % {EMB_DRIFT_CELLS} AS cell,
+             CAST(sum(CASE WHEN {old} THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_old,
+             CAST(sum(CASE WHEN NOT ({old}) THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_new
+      FROM bucketed
+      GROUP BY 1
+    )"""
+
+
+def _dq4_oracle() -> str:
+    """dq4's oracle, shared verbatim by st14 (streaming/drift.py):
+    the streaming view must converge to this batch histogram."""
+    return f"""
+    {_sql_drift_hist()}, tot AS (
+      SELECT CAST(sum(n_old) AS BIGINT) AS t_old,
+             CAST(sum(n_new) AS BIGINT) AS t_new
+      FROM hist
+    )
+    SELECT cell, n_old, n_new,
+           CAST(n_old * 10000 // NULLIF(t_old, 0) AS BIGINT) AS share_old_bp,
+           CAST(n_new * 10000 // NULLIF(t_new, 0) AS BIGINT) AS share_new_bp,
+           CAST(abs(n_old * 10000 // NULLIF(t_old, 0)
+                    - n_new * 10000 // NULLIF(t_new, 0))
+                > {EMB_DRIFT_BP} AS INT) AS drifted
+    FROM hist CROSS JOIN tot
+    """
+
+
+@query("dq4_embedding_drift", oracle=_dq4_oracle())
 def dq4_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space ingestion drift: bucket every vector with
     sim2's random-hyperplane LSH (one definition per engine), split
@@ -488,56 +522,6 @@ def dq4_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("int").alias("drifted"),
         )
     )
-
-
-def _sql_drift_hist() -> str:
-    """The oracle-side twin of _drift_cell_hist: bucketed CTE + the
-    per-cell snapshot histogram, shared by dq4's and dq5's oracles."""
-    from a3_fp_bigdata_spark.operators.similarity import _SQL_BUCKETED_CTE
-    from a3_fp_bigdata_spark.operators.text_analysis import (
-        sample_predicate_sql,
-    )
-
-    old = sample_predicate_sql("vec_id", EMB_SNAPSHOT_PCT)
-    return f"""
-    {_SQL_BUCKETED_CTE}, hist AS (
-      SELECT bucket % {EMB_DRIFT_CELLS} AS cell,
-             CAST(sum(CASE WHEN {old} THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_old,
-             CAST(sum(CASE WHEN NOT ({old}) THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_new
-      FROM bucketed
-      GROUP BY 1
-    )"""
-
-
-def _attach_dq4_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    sql = f"""
-    {_sql_drift_hist()}, tot AS (
-      SELECT CAST(sum(n_old) AS BIGINT) AS t_old,
-             CAST(sum(n_new) AS BIGINT) AS t_new
-      FROM hist
-    )
-    SELECT cell, n_old, n_new,
-           CAST(n_old * 10000 // NULLIF(t_old, 0) AS BIGINT) AS share_old_bp,
-           CAST(n_new * 10000 // NULLIF(t_new, 0) AS BIGINT) AS share_new_bp,
-           CAST(abs(n_old * 10000 // NULLIF(t_old, 0)
-                    - n_new * 10000 // NULLIF(t_new, 0))
-                > {EMB_DRIFT_BP} AS INT) AS drifted
-    FROM hist CROSS JOIN tot
-    """
-    rq = _R._REGISTRY["dq4_embedding_drift"]
-    if rq.oracle is None:
-        _R._REGISTRY["dq4_embedding_drift"] = dataclasses.replace(
-            rq, oracle=sql
-        )
-
-
-_attach_dq4_oracle()
 
 
 #: dq5 decision rule: smoothed Pearson chi-square over the
@@ -630,35 +614,10 @@ def chi2_drift_decision(
     )
 
 
-@query(
-    "dq5_drift_decision",
-    oracle=None,  # attached below (shares dq4's hist CTE)
-)
-def dq5_drift_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The decision rule a production drift monitor actually fires on
-    (VERDICT r11 ask #6): dq4 reports per-cell share deltas; dq5
-    collapses the same histogram to ONE smoothed Pearson chi-square
-    verdict against a pinned critical value (χ²_0.999, df = 15) —
-    dq2's threshold-contract shape applied to the embedding space.
-    Output: (n_cells, df, chi2_micro, crit_micro, drifted).
-
-    Fully SQL-replayed: the statistic is a sum of int64 micro-unit
-    cell contributions built from exact cross-multiplications (see
-    chi2_drift_decision), so DuckDB reproduces it bit-for-bit from the
-    raw embeddings table. A planted-shift pytest pins the decision's
-    sensitivity (mass moved between cells -> drifted=1) and its
-    stability under the null (hash-split corpus -> drifted=0)."""
-    return chi2_drift_decision(spark, _drift_cell_hist(spark, sf_dir))
-
-
-def _attach_dq5_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
+def _dq5_oracle() -> str:
     c = EMB_DRIFT_CELLS
     s = CHI2_SMOOTH
-    sql = f"""
+    return f"""
     {_sql_drift_hist()}, grid AS (
       SELECT CAST(range AS BIGINT) AS cell FROM range({c})
     ), full_h AS (
@@ -686,11 +645,21 @@ def _attach_dq5_oracle() -> None:
            CAST(sum(micro) > {CHI2_CRIT_MICRO} AS INT) AS drifted
     FROM cells
     """
-    rq = _R._REGISTRY["dq5_drift_decision"]
-    if rq.oracle is None:
-        _R._REGISTRY["dq5_drift_decision"] = dataclasses.replace(
-            rq, oracle=sql
-        )
 
 
-_attach_dq5_oracle()
+@query("dq5_drift_decision", oracle=_dq5_oracle())
+def dq5_drift_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The decision rule a production drift monitor actually fires on
+    (VERDICT r11 ask #6): dq4 reports per-cell share deltas; dq5
+    collapses the same histogram to ONE smoothed Pearson chi-square
+    verdict against a pinned critical value (χ²_0.999, df = 15) —
+    dq2's threshold-contract shape applied to the embedding space.
+    Output: (n_cells, df, chi2_micro, crit_micro, drifted).
+
+    Fully SQL-replayed: the statistic is a sum of int64 micro-unit
+    cell contributions built from exact cross-multiplications (see
+    chi2_drift_decision), so DuckDB reproduces it bit-for-bit from the
+    raw embeddings table. A planted-shift pytest pins the decision's
+    sensitivity (mass moved between cells -> drifted=1) and its
+    stability under the null (hash-split corpus -> drifted=0)."""
+    return chi2_drift_decision(spark, _drift_cell_hist(spark, sf_dir))

@@ -185,9 +185,9 @@ def _buckets(emb: DataFrame, planes: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "sim2_lsh_ann",
-    oracle=f"""
+#: sim2's oracle, shared verbatim by sim10: the incremental index must
+#: answer exactly like the one-shot full-corpus derivation.
+_SIM2_ORACLE = f"""
     {_SQL_BUCKETED_CTE}, q AS (
       SELECT b.bucket AS qbucket, v.e AS qe
       FROM bucketed b JOIN vecs v USING (vec_id) WHERE b.vec_id = 0
@@ -199,8 +199,10 @@ def _buckets(emb: DataFrame, planes: DataFrame) -> DataFrame:
     WHERE b.bucket = q.qbucket AND b.vec_id <> 0
     ORDER BY {half_up_sql(_sql_cos('v.e', 'q.qe'))} DESC, b.vec_id
     LIMIT {ANN_TOPK}
-    """,
-)
+    """
+
+
+@query("sim2_lsh_ann", oracle=_SIM2_ORACLE)
 def sim2_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH: bucket every vector by the sign
     pattern of {N_PLANES} hyperplane dots, then rank only the query's
@@ -261,7 +263,8 @@ def _index_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     spark.read.parquet on a 2^{N_PLANES}-directory layout re-lists every
     partition dir, and a probe should pay that once, not per query. A
     rebuild or append rewrites the root _SUCCESS, so the stage's
-    snapshot changes and the stale listing is dropped."""
+    snapshot changes and the stale listing is dropped; the listing of
+    a stage-owned index dir (sim4, sim10) is dropped with that dir."""
     return stages.get(
         spark, "ann_index_frame", (),
         lambda: spark.read.parquet(index_dir), [index_dir],
@@ -1093,7 +1096,7 @@ def append_to_bucketed_index(
     )
 
 
-@query("sim10_incremental_index", oracle=None)  # sim2's SQL, attached below
+@query("sim10_incremental_index", oracle=_SIM2_ORACLE)
 def sim10_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance — the nightly-arrivals shape:
     the index is built WITHOUT tonight's batch (every
@@ -1118,24 +1121,6 @@ def sim10_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "sim10_index", fill, [table_path(sf_dir, "embeddings")]
     )
     return probe_bucketed_ann(spark, index_dir, sf_dir=sf_dir)
-
-
-def _attach_sim10_oracle() -> None:
-    """sim10 shares sim2's oracle verbatim — the incremental index must
-    answer exactly like the one-shot full-corpus derivation."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["sim10_incremental_index"]
-    sim2 = _R._REGISTRY.get("sim2_lsh_ann")
-    if rq.oracle is None and sim2 is not None and sim2.oracle:
-        _R._REGISTRY["sim10_incremental_index"] = dataclasses.replace(
-            rq, oracle=sim2.oracle
-        )
-
-
-_attach_sim10_oracle()
 
 
 #: sim11's scratch — same static-oracle protocol as the d4/a19 audits

@@ -47,7 +47,10 @@ from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import table
 from a3_fp_bigdata_spark.functions import text as TX
-from a3_fp_bigdata_spark.operators.text_analysis import sample_predicate
+from a3_fp_bigdata_spark.operators.text_analysis import (
+    _SQL_TOKS,
+    sample_predicate,
+)
 from a3_fp_bigdata_spark.registry import query
 
 #: Merge steps to learn. Real vocabularies run 30k-100k merges; the
@@ -274,11 +277,11 @@ def _tk2_seg_sql() -> str:
     "tk2_bpe_token_stats",
     oracle=f"""
     WITH words AS (
-      SELECT doc_id, unnest({{toks}}) AS word FROM documents
+      SELECT doc_id, unnest({_SQL_TOKS}) AS word FROM documents
     ), vocab AS (
       SELECT DISTINCT word FROM words
     ), seg AS (
-      SELECT word, {{seg}} AS n_sub FROM vocab
+      SELECT word, {_tk2_seg_sql()} AS n_sub FROM vocab
     )
     SELECT w.doc_id,
            CAST(count(*) AS BIGINT) AS n_words,
@@ -322,25 +325,3 @@ def tk2_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_sub").cast("long").alias("n_bpe_tokens"),
         )
     )
-
-
-def _attach_tk2_oracle() -> None:
-    """tk2's oracle needs _SQL_TOKS and the generated replace chain
-    interpolated after definition (the decorator literal keeps
-    placeholders so the f-string stays readable)."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
-
-    rq = _R._REGISTRY["tk2_bpe_token_stats"]
-    if "{toks}" in (rq.oracle or ""):
-        _R._REGISTRY["tk2_bpe_token_stats"] = dataclasses.replace(
-            rq,
-            oracle=rq.oracle.replace("{toks}", _SQL_TOKS).replace(
-                "{seg}", _tk2_seg_sql()
-            ),
-        )
-
-
-_attach_tk2_oracle()

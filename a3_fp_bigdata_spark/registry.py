@@ -7,9 +7,14 @@ Operator modules register named queries with::
         return ...
 
 - The Spark callable takes ``(spark, sf_dir)`` and returns a DataFrame.
-- ``oracle`` is ANSI SQL DuckDB runs over the same parquet tables; omit it
-  (``oracle=None``) for non-SQL-expressible ops — the driver then records a
-  weaker rows-only check.
+- ``oracle`` is ANSI SQL DuckDB runs over the same parquet tables, complete
+  text when the query registers: a module builds it before the decorator
+  runs (a ``_x_oracle()`` helper above the query, or fragments imported at
+  module top), and a query that shares another's oracle (st11 = pl2,
+  st12 = st3, st14 = dq4, sim10 = sim2) imports that one text from the
+  module that owns it. Nothing writes an entry after registration.
+- ``oracle=None`` means rows-only: the op has no SQL twin, and the driver
+  records a weaker rows-only check.
 - Column names/aliases MUST match between the two sides (the driver's
   compare sorts columns by name before hashing values).
 

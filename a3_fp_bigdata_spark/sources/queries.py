@@ -367,10 +367,65 @@ def src8_zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "src9_versioned_snapshot_read",
-    oracle=None,  # attached below (composes u5's changelog CTEs)
-)
+def _src9_oracle() -> str:
+    return f"""
+    WITH log1 AS (
+      SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
+             {half_up_sql('c_acctbal + 500', 2)} AS c_acctbal,
+             c_mktsegment
+      FROM customer WHERE c_custkey % 10 = 0
+      UNION ALL
+      SELECT 'D', 2, c_custkey, c_name, c_acctbal, c_mktsegment
+      FROM customer WHERE c_custkey % 7 = 0
+      UNION ALL
+      SELECT 'I', 1, 8000000 + c_custkey,
+             'cdc#' || CAST(c_custkey AS VARCHAR), 0.0, c_mktsegment
+      FROM customer WHERE c_custkey % 100 = 0
+    ), latest1 AS (
+      SELECT * FROM (
+        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
+               row_number() OVER (PARTITION BY c_custkey
+                                  ORDER BY seq DESC, op DESC) AS rn
+        FROM log1
+      ) WHERE rn = 1
+    ), v1 AS (
+      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
+      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest1)
+      UNION ALL
+      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest1
+      WHERE op <> 'D'
+    ), log2 AS (
+      SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
+             {half_up_sql('c_acctbal - 250', 2)} AS c_acctbal,
+             c_mktsegment
+      FROM v1 WHERE c_custkey % 9 = 0
+      UNION ALL
+      SELECT 'D', 2, c_custkey, c_name, c_acctbal, c_mktsegment
+      FROM v1 WHERE c_custkey % 11 = 0
+    ), latest2 AS (
+      SELECT * FROM (
+        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
+               row_number() OVER (PARTITION BY c_custkey
+                                  ORDER BY seq DESC, op DESC) AS rn
+        FROM log2
+      ) WHERE rn = 1
+    ), v2 AS (
+      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM v1
+      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest2)
+      UNION ALL
+      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest2
+      WHERE op <> 'D'
+    )
+    SELECT c_mktsegment,
+           CAST(count(*) AS BIGINT) AS n_rows,
+           {half_up_sql('sum(c_acctbal)', 2)} AS total_bal,
+           CAST(min(c_custkey) AS BIGINT) AS min_key,
+           CAST(max(c_custkey) AS BIGINT) AS max_key
+    FROM v2 GROUP BY c_mktsegment
+    """
+
+
+@query("src9_versioned_snapshot_read", oracle=_src9_oracle())
 def src9_versioned_snapshot_read(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -466,73 +521,3 @@ def src9_versioned_snapshot_read(
         F.min("c_custkey").cast("long").alias("min_key"),
         F.max("c_custkey").cast("long").alias("max_key"),
     )
-
-
-def _attach_src9_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    sql = f"""
-    WITH log1 AS (
-      SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
-             {half_up_sql('c_acctbal + 500', 2)} AS c_acctbal,
-             c_mktsegment
-      FROM customer WHERE c_custkey % 10 = 0
-      UNION ALL
-      SELECT 'D', 2, c_custkey, c_name, c_acctbal, c_mktsegment
-      FROM customer WHERE c_custkey % 7 = 0
-      UNION ALL
-      SELECT 'I', 1, 8000000 + c_custkey,
-             'cdc#' || CAST(c_custkey AS VARCHAR), 0.0, c_mktsegment
-      FROM customer WHERE c_custkey % 100 = 0
-    ), latest1 AS (
-      SELECT * FROM (
-        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
-               row_number() OVER (PARTITION BY c_custkey
-                                  ORDER BY seq DESC, op DESC) AS rn
-        FROM log1
-      ) WHERE rn = 1
-    ), v1 AS (
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
-      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest1)
-      UNION ALL
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest1
-      WHERE op <> 'D'
-    ), log2 AS (
-      SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
-             {half_up_sql('c_acctbal - 250', 2)} AS c_acctbal,
-             c_mktsegment
-      FROM v1 WHERE c_custkey % 9 = 0
-      UNION ALL
-      SELECT 'D', 2, c_custkey, c_name, c_acctbal, c_mktsegment
-      FROM v1 WHERE c_custkey % 11 = 0
-    ), latest2 AS (
-      SELECT * FROM (
-        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
-               row_number() OVER (PARTITION BY c_custkey
-                                  ORDER BY seq DESC, op DESC) AS rn
-        FROM log2
-      ) WHERE rn = 1
-    ), v2 AS (
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM v1
-      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest2)
-      UNION ALL
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest2
-      WHERE op <> 'D'
-    )
-    SELECT c_mktsegment,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           {half_up_sql('sum(c_acctbal)', 2)} AS total_bal,
-           CAST(min(c_custkey) AS BIGINT) AS min_key,
-           CAST(max(c_custkey) AS BIGINT) AS max_key
-    FROM v2 GROUP BY c_mktsegment
-    """
-    rq = _R._REGISTRY["src9_versioned_snapshot_read"]
-    if rq.oracle is None:
-        _R._REGISTRY["src9_versioned_snapshot_read"] = dataclasses.replace(
-            rq, oracle=sql
-        )
-
-
-_attach_src9_oracle()

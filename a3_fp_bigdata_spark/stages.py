@@ -14,8 +14,11 @@ table) and src8's z-ordered lineitem layout (keyed on lineitem). Each
 is written into a new ``data.fresh_scratch`` dir and stored as an
 ``OwnedDir``; dropping the entry (a changed input snapshot, a stopped
 session, ``release_all``) removes the dir, so disk holds one copy per
-live entry. Each process owns its dirs: nothing is shared across
-processes, and nothing another process writes is ever read.
+live entry, and drops every entry that has the dir among its inputs
+(the ANN probe's listing of an index dir), so a rebuilt index leaves
+no listing of the removed dir behind. Each process owns its dirs:
+nothing is shared across processes, and nothing another process
+writes is ever read.
 
 An entry is keyed by (session token, stage name, the caller's extra
 key parts, the input paths) and remembers a snapshot of those paths
@@ -115,6 +118,13 @@ def _unpersist(value: object) -> None:
     for v in value if isinstance(value, tuple) else (value,):
         if isinstance(v, OwnedDir):
             shutil.rmtree(v, ignore_errors=True)
+            # the entries that read this dir (a listing of it) go with it
+            with _LOCK:
+                readers = [
+                    _ENTRIES.pop(k)[1] for k in list(_ENTRIES) if v in k[3]
+                ]
+            for r in readers:
+                _unpersist(r)
         elif isinstance(v, DataFrame):
             try:
                 v.unpersist()

@@ -89,9 +89,9 @@ def st2_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_counts(table(spark, sf_dir, "events"))
 
 
-@query(
-    "st3_session_window",
-    oracle="""
+#: st3's oracle, shared verbatim by st12 (streaming/ingest.py): one SQL
+#: definition of the session table for the batch and the streaming path.
+_ST3_ORACLE = """
     WITH gaps AS (
       SELECT user_id, ts,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -107,8 +107,10 @@ def st2_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id, min(ts) AS session_start, count(*) AS n_events
     FROM sess GROUP BY user_id, sid
-    """,
-)
+    """
+
+
+@query("st3_session_window", oracle=_ST3_ORACLE)
 def st3_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min gap) via Spark's native session_window —
     the streaming-capable form of w5_sessionize. Oracle derives the same

@@ -31,15 +31,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from a3_fp_bigdata_spark.data import fresh_scratch, table
+from a3_fp_bigdata_spark.data import fresh_scratch
 from a3_fp_bigdata_spark.operators.packing import (
+    _pl2_oracle,
     chunk_bucket_frame,
     sliding_chunk_frame,
 )
 from a3_fp_bigdata_spark.registry import query
-from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
-from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
+from a3_fp_bigdata_spark.streaming.incremental_dedup import (
+    stream_staged_table,
+)
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
 
@@ -176,44 +177,18 @@ def occupancy_from_membership(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-@query("st11_chunk_index_stream", oracle=None)  # attached below (pl2's SQL)
+@query("st11_chunk_index_stream", oracle=_pl2_oracle())
 def st11_chunk_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run: stage documents as {STAGE_FILES} parquet
     files, stream them one file per micro-batch through
     chunk_index_sink, then read the drained occupancy table. The
     oracle is pl2's one-shot SQL over the full corpus — streaming
     accumulation must converge to exactly the batch answer."""
-    stage = fresh_scratch("a3_chunkidx_stage_")
-    out = fresh_scratch("a3_chunkidx_out_")
-    docs = table(spark, sf_dir, "documents")
-    docs.repartition(STAGE_FILES, "doc_id").write.mode("overwrite").parquet(
-        stage
+    drained = stream_staged_table(
+        spark,
+        sf_dir,
+        "documents",
+        "doc_id",
+        lambda stream, out: chunk_index_sink(stream, spark, out),
     )
-    stream = (
-        spark.readStream.schema(TESTDATA["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    with streaming_shuffle(spark, 8):
-        q = chunk_index_sink(stream, spark, out)
-        q.awaitTermination()
-    return spark.read.parquet(out).select("bucket", "n_chunks", "n_docs")
-
-
-def _attach_oracle() -> None:
-    """st11 shares pl2's oracle verbatim — ONE SQL definition of the
-    occupancy table, checked against both the batch and the streaming
-    path."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.operators.packing import _pl2_oracle
-
-    rq = _R._REGISTRY["st11_chunk_index_stream"]
-    if rq.oracle is None:
-        _R._REGISTRY["st11_chunk_index_stream"] = dataclasses.replace(
-            rq, oracle=_pl2_oracle()
-        )
-
-
-_attach_oracle()
+    return drained.select("bucket", "n_chunks", "n_docs")

@@ -26,10 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import fresh_scratch, table
+from a3_fp_bigdata_spark.operators.quality_checks import _dq4_oracle
 from a3_fp_bigdata_spark.registry import query
-from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
-from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
+from a3_fp_bigdata_spark.streaming.incremental_dedup import (
+    stream_staged_table,
+)
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
 
@@ -96,10 +97,7 @@ def drift_histogram_sink(
     )
 
 
-@query(
-    "st14_stream_embedding_drift",
-    oracle=None,  # attached below: dq4's SQL verbatim — full replay
-)
+@query("st14_stream_embedding_drift", oracle=_dq4_oracle())
 def st14_stream_embedding_drift(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -119,25 +117,17 @@ def st14_stream_embedding_drift(
     from a3_fp_bigdata_spark.operators.similarity import _planes
     from a3_fp_bigdata_spark.registry import pin
 
-    stage = fresh_scratch("a3_drift_stage_")
-    out = fresh_scratch("a3_drift_out_")
-    emb = table(spark, sf_dir, "embeddings")
-    emb.repartition(STAGE_FILES, "vec_id").write.mode(
-        "overwrite"
-    ).parquet(stage)
     # planes pinned from the STATIC table: every micro-batch buckets
     # against the same hyperplanes regardless of which file delivered
     # vec_id 1..N_PLANES
-    planes = pin(_planes(emb))
-    stream = (
-        spark.readStream.schema(TESTDATA["embeddings"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    with streaming_shuffle(spark, 8):
-        q = drift_histogram_sink(stream, spark, planes, out)
-        q.awaitTermination()
-    hist = spark.read.parquet(out).select("cell", "n_old", "n_new")
+    planes = pin(_planes(table(spark, sf_dir, "embeddings")))
+    hist = stream_staged_table(
+        spark,
+        sf_dir,
+        "embeddings",
+        "vec_id",
+        lambda stream, out: drift_histogram_sink(stream, spark, planes, out),
+    ).select("cell", "n_old", "n_new")
     totals = hist.agg(
         F.sum("n_old").cast("long").alias("t_old"),
         F.sum("n_new").cast("long").alias("t_new"),
@@ -159,21 +149,3 @@ def st14_stream_embedding_drift(
             .alias("drifted"),
         )
     )
-
-
-def _attach_st14_oracle() -> None:
-    """The oracle IS dq4's: the streaming view must converge to the
-    batch histogram, so the batch SQL replays the streaming run."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    dq4 = _R._REGISTRY["dq4_embedding_drift"]
-    rq = _R._REGISTRY["st14_stream_embedding_drift"]
-    if rq.oracle is None and dq4.oracle is not None:
-        _R._REGISTRY["st14_stream_embedding_drift"] = dataclasses.replace(
-            rq, oracle=dq4.oracle
-        )
-
-
-_attach_st14_oracle()

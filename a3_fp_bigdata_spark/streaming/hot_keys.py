@@ -35,10 +35,11 @@ from pyspark.sql import functions as F
 from a3_fp_bigdata_spark.data import fresh_scratch, run_scratch, table
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.operators.aggregates import HH_K, HH_SHARDS
+from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
 from a3_fp_bigdata_spark.registry import query
-from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
-from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
+from a3_fp_bigdata_spark.streaming.incremental_dedup import (
+    stream_staged_table,
+)
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
 
@@ -109,10 +110,31 @@ def hot_key_sink(
 _ST13_SCRATCH = run_scratch("st13_hot_keys")
 
 
-@query(
-    "st13_stream_hot_keys",
-    oracle=None,  # attached below (needs text_analysis' token CTE)
-)
+def _st13_oracle() -> str:
+    return f"""
+    WITH s AS (
+      SELECT tok, est
+      FROM read_parquet('{_ST13_SCRATCH}/*.parquet')
+      WHERE n_src = (SELECT count(*)
+                     FROM read_parquet('{_ST13_SCRATCH}/*.parquet'))
+    ), toks AS (
+      SELECT unnest({_SQL_TOKS}) AS tok FROM documents
+    ), exact AS (
+      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
+      FROM toks GROUP BY tok
+    ), total AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
+    )
+    SELECT s.tok, CAST(s.est AS BIGINT) AS est, e.exact_cnt,
+           t.n_tokens,
+           CAST(s.est <= e.exact_cnt
+                AND (e.exact_cnt - s.est) * {HH_K + 1} <= 2 * t.n_tokens
+                AS BOOLEAN) AS within_bound
+    FROM s JOIN exact e USING (tok) CROSS JOIN total t
+    """
+
+
+@query("st13_stream_hot_keys", oracle=_st13_oracle())
 def st13_stream_hot_keys(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -130,21 +152,13 @@ def st13_stream_hot_keys(
     count over the BATCH plus a merge against a <= HH_SHARDS*HH_K-row
     view; the view never grows. The exact-count join here is the
     AUDIT rung only."""
-    stage = fresh_scratch("a3_hotkey_stage_")
-    out = fresh_scratch("a3_hotkey_out_")
-    docs = table(spark, sf_dir, "documents")
-    docs.repartition(STAGE_FILES, "doc_id").write.mode(
-        "overwrite"
-    ).parquet(stage)
-    stream = (
-        spark.readStream.schema(TESTDATA["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    with streaming_shuffle(spark, 8):
-        q = hot_key_sink(stream, spark, out)
-        q.awaitTermination()
-    state = spark.read.parquet(out).select("shard", "tok", "c")
+    state = stream_staged_table(
+        spark,
+        sf_dir,
+        "documents",
+        "doc_id",
+        lambda stream, out: hot_key_sink(stream, spark, out),
+    ).select("shard", "tok", "c")
     # level-2 merge across shards — a21's global truncation
     merged = state.groupBy("tok").agg(F.sum("c").cast("long").alias("s"))
     w_all = Window.orderBy(F.desc("s"), F.asc("tok"))
@@ -167,6 +181,7 @@ def st13_stream_hot_keys(
         "overwrite"
     ).parquet(_ST13_SCRATCH)
     back = spark.read.parquet(_ST13_SCRATCH).drop("n_src")
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(TX.tokens(F.col("text"))).alias("tok"))
     exact = toks.groupBy("tok").agg(
         F.count("*").cast("long").alias("exact_cnt")
@@ -189,40 +204,3 @@ def st13_stream_hot_keys(
             ).alias("within_bound"),
         )
     )
-
-
-def _attach_st13_oracle() -> None:
-    """Deferred like a21's: renders text_analysis' token snippet."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
-
-    name = "st13_stream_hot_keys"
-    sql = f"""
-    WITH s AS (
-      SELECT tok, est
-      FROM read_parquet('{_ST13_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_ST13_SCRATCH}/*.parquet'))
-    ), toks AS (
-      SELECT unnest({_SQL_TOKS}) AS tok FROM documents
-    ), exact AS (
-      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
-      FROM toks GROUP BY tok
-    ), total AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
-    )
-    SELECT s.tok, CAST(s.est AS BIGINT) AS est, e.exact_cnt,
-           t.n_tokens,
-           CAST(s.est <= e.exact_cnt
-                AND (e.exact_cnt - s.est) * {HH_K + 1} <= 2 * t.n_tokens
-                AS BOOLEAN) AS within_bound
-    FROM s JOIN exact e USING (tok) CROSS JOIN total t
-    """
-    rq = _R._REGISTRY[name]
-    if rq.oracle is None:
-        _R._REGISTRY[name] = dataclasses.replace(rq, oracle=sql)
-
-
-_attach_st13_oracle()

@@ -21,6 +21,8 @@ pipeline actually runs.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -35,6 +37,34 @@ from a3_fp_bigdata_spark.streaming.materialized import (
 
 #: micro-batch granularity for the staged stream (files per trigger = 1)
 STAGE_FILES = 4
+
+
+def stream_staged_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    key: str,
+    sink: Callable[[DataFrame, str], StreamingQuery],
+) -> DataFrame:
+    """Stage table ``name`` as STAGE_FILES parquet files (partitioned
+    on ``key``) in a fresh scratch dir, stream them one file per
+    trigger through ``sink(stream, out)`` under 8 shuffle partitions,
+    wait for the stream to drain, and read ``out`` back — the shared
+    REAL-stream harness of st10, st11, st13 and st14."""
+    stage = fresh_scratch(f"a3_{name}_stage_")
+    out = fresh_scratch(f"a3_{name}_out_")
+    table(spark, sf_dir, name).repartition(STAGE_FILES, key).write.mode(
+        "overwrite"
+    ).parquet(stage)
+    stream = (
+        spark.readStream.schema(TESTDATA[name])
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage)
+    )
+    with streaming_shuffle(spark, 8):
+        sink(stream, out).awaitTermination()
+    return spark.read.parquet(out)
+
 
 def fingerprint_frame(docs: DataFrame) -> DataFrame:
     """(fp, keeper_id, n_copies) — d1's aggregate, reusable per batch."""
@@ -93,18 +123,11 @@ def st10_incremental_dedup_stream(
     incremental_dedup_sink, then read the drained fingerprint table.
     The oracle is d1's one-shot SQL over the full corpus — streaming
     accumulation must converge to exactly the batch answer."""
-    stage = fresh_scratch("a3_incdedup_stage_")
-    out = fresh_scratch("a3_incdedup_out_")
-    docs = table(spark, sf_dir, "documents")
-    docs.repartition(STAGE_FILES, "doc_id").write.mode("overwrite").parquet(
-        stage
+    drained = stream_staged_table(
+        spark,
+        sf_dir,
+        "documents",
+        "doc_id",
+        lambda stream, out: incremental_dedup_sink(stream, spark, out),
     )
-    stream = (
-        spark.readStream.schema(TESTDATA["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    with streaming_shuffle(spark, 8):
-        q = incremental_dedup_sink(stream, spark, out)
-        q.awaitTermination()
-    return spark.read.parquet(out).select("fp", "keeper_id", "n_copies")
+    return drained.select("fp", "keeper_id", "n_copies")

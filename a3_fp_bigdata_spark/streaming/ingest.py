@@ -42,6 +42,7 @@ from a3_fp_bigdata_spark.data import widen_legacy_long_ts
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.sources.csv_io import append_csv_batch
+from a3_fp_bigdata_spark.streaming.batch_windows import _ST3_ORACLE
 
 _qname_counter = itertools.count()
 
@@ -407,7 +408,7 @@ def st9_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MV.read_view(spark, out)
 
 
-@query("st12_stream_session_window", oracle=None)  # st3's SQL, attached below
+@query("st12_stream_session_window", oracle=_ST3_ORACLE)
 def st12_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming session windows: file source -> native
     session_window aggregation (30-min gap, the streaming-capable
@@ -435,26 +436,3 @@ def st12_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_available_now(sess, output_mode="complete")
-
-
-def _attach_st12_oracle() -> None:
-    """st12 shares st3's oracle — ONE SQL definition of the session
-    table, checked against both the batch and the real streaming
-    path (same single-source pattern as st11/pl2)."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.streaming import batch_windows  # noqa: F401
-    # ^ importing guarantees st3 is registered even when ingest is
-    #   imported standalone (registry loads modules alphabetically,
-    #   but direct importers need the twin pulled in explicitly)
-
-    rq = _R._REGISTRY["st12_stream_session_window"]
-    st3 = _R._REGISTRY.get("st3_session_window")
-    if rq.oracle is None and st3 is not None and st3.oracle:
-        _R._REGISTRY["st12_stream_session_window"] = dataclasses.replace(
-            rq, oracle=st3.oracle
-        )
-
-
-_attach_st12_oracle()

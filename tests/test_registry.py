@@ -3,7 +3,12 @@ on full SURVEY §2 family coverage (see registry.CANONICAL)."""
 
 from __future__ import annotations
 
+import pathlib
 import re
+import subprocess
+import sys
+
+import pytest
 
 from a3_fp_bigdata_spark import registry
 
@@ -167,3 +172,40 @@ def test_doc_counts_rendered_from_registry():
             assert int(m.group(1)) == n_q, (fname, m.group(0))
         for m in re.finditer(r"(\d+) oracle-backed as of round", joined):
             assert int(m.group(1)) == n_o, (fname, m.group(0))
+
+
+_ROOT = pathlib.Path(__file__).resolve().parents[1]
+#: Every package module that registers a query (a top-level ``@query``).
+_REGISTERING_MODULES = sorted(
+    ".".join(p.relative_to(_ROOT).with_suffix("").parts)
+    for p in (_ROOT / "a3_fp_bigdata_spark").rglob("*.py")
+    if re.search(r"^@query\(", p.read_text(), re.M)
+)
+
+
+@pytest.mark.parametrize("module", _REGISTERING_MODULES)
+def test_registering_module_imports_alone(module):
+    """Each oracle is complete text when its query registers, so a module
+    imports in a fresh interpreter with nothing else loaded first; an
+    oracle that reached for another module's registry entry would fail
+    here, naming the module."""
+    proc = subprocess.run(
+        [sys.executable, "-c", f"import {module}"],
+        cwd=_ROOT,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_rows_only_queries_are_exactly_the_known_five():
+    """``oracle=None`` means rows-only, and only these five queries have
+    no SQL twin: a dropped oracle shows up here by name."""
+    assert set(registry.all_queries()) - set(registry.all_oracles()) == {
+        "a12_approx_distinct",
+        "d7_ml_minhash_lsh",
+        "d11_incremental_lsh",
+        "mm2_image_features",
+        "tk1_bpe_merges",
+    }

@@ -135,6 +135,31 @@ def test_session_token_read_only_by_stages():
     }
 
 
+def test_registry_privates_are_named_only_in_registry():
+    """Only the ``query`` decorator writes the query registry: nothing
+    else names ``_REGISTRY`` or ``_PINNED``, and no function patches an
+    oracle in after registration."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [
+        *(root / "a3_fp_bigdata_spark").rglob("*.py"),
+        *(root / "tools").glob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    namers = {
+        str(f.relative_to(root))
+        for f in files
+        if re.search(r"\b(_REGISTRY|_PINNED)\b", f.read_text())
+    }
+    assert namers == {"a3_fp_bigdata_spark/registry.py"}
+    patchers = [
+        f"{f.relative_to(root)}: {m.group(0)}"
+        for f in files
+        for m in re.finditer(r"def _attach_\w*oracle\w*", f.read_text())
+    ]
+    assert patchers == []
+
+
 def test_one_key_builds_once_under_concurrent_callers(spark):
     """Eight threads asking for one cold key: one build, one value."""
     stages.release_all()
@@ -316,6 +341,25 @@ def test_in_place_rewrite_rebuilds_each_dir_and_removes_the_old(
     assert len(new) == 3 and all(os.path.isdir(d) for d in new)
     assert not set(old) & set(new)
     assert not any(os.path.exists(d) for d in old)
+    stages.release_all()
+
+
+def test_a_rebuilt_index_leaves_no_listing_of_the_old_dir(spark, tmp_path):
+    """The probe's listing of an index dir is dropped with the dir: each
+    rebuild of sim4's index (a new embeddings file) leaves one index
+    entry and one listing entry, and the probe equals DuckDB each time."""
+    sf_dir = str(tmp_path)
+    sf01 = os.path.join(os.path.dirname(SF001), "sf0.1")
+    stages.release_all()
+    for src in (SF0001, SF001, sf01):
+        time.sleep(0.01)  # a new mtime_ns even on a coarse clock
+        shutil.copyfile(
+            f"{src}/embeddings.parquet", f"{sf_dir}/embeddings.parquet"
+        )
+        got = _ann(spark, "sim4_bucketed_ann", sf_dir)
+        assert got == _duck(sf_dir, "embeddings", _ANN_SQL) and got
+        assert len(_dirs("sim4_index")) == 1
+        assert len(_dirs("ann_index_frame")) == 1
     stages.release_all()
 
 

@@ -826,7 +826,6 @@ def main() -> None:
     print("| stage | rows out | wall s | shuffle write | shuffle read | peak JVM mem |")
     print("|---|---|---|---|---|---|")
     timed_row.w0, timed_row.r0 = _shuffle_totals(spark)
-    import a3_fp_bigdata_spark.streaming.hot_keys as _hk
     import a3_fp_bigdata_spark.streaming.incremental_dedup as _incd
 
     def _view_stats(df) -> tuple[int, int]:
@@ -843,10 +842,10 @@ def main() -> None:
     mb: dict[str, tuple[float, int, int, int]] = {}
     try:
         for factor, d, nfiles in ((1, sf_dir, 4), (10, big_dir, 40)):
-            # batch size constant: corpus/nfiles. Both modules bind
-            # STAGE_FILES by value at import; set both, restore after.
+            # batch size constant: corpus/nfiles. st10 and st13 stage
+            # through incremental_dedup.stream_staged_table, which reads
+            # STAGE_FILES at call time; restore after.
             _incd.STAGE_FILES = nfiles
-            _hk.STAGE_FILES = nfiles
             for name in (
                 "st10_incremental_dedup_stream",
                 "st13_stream_hot_keys",
@@ -877,7 +876,6 @@ def main() -> None:
                 )
     finally:
         _incd.STAGE_FILES = 4
-        _hk.STAGE_FILES = 4
     print()
     for name in ("st10_incremental_dedup_stream", "st13_stream_hot_keys"):
         w1, b1, r1, s1 = mb[f"{name}@1"]
