@@ -1,8 +1,24 @@
-"""Loaders for the driver test tables.
+"""Loaders for the driver test tables, and the audit-scratch protocol.
 
 One parquet file per table under ``{sf_dir}/{name}.parquet`` (TESTDATA.md).
 Loaded lazily; Catalyst prunes columns/pushes filters into the scan, so a
 query touching 2 of 11 lineitem columns reads only those column chunks.
+
+Audit scratch: where a query has a step no SQL can replay (a seeded
+hash, a model fit, a sketch, a decoder), Spark writes that step's rows
+to a ``run_scratch`` path and reads them back, and the query's DuckDB
+oracle replays the rest from the same bytes. The format is decided
+here and nowhere else:
+
+- ``write_scratch(df, path, fp)`` overwrites ``path`` with ``df`` as
+  one parquet file, every row stamped by ``stamp``: ``n_src``/``src_ck``
+  from a ``table_fingerprint`` tuple, or, with ``fp=None`` (sources
+  DuckDB cannot read), ``n_src`` alone as the frame's own row count.
+- ``read_scratch`` reads the rows back without the stamp;
+  ``read_stamped_scratch`` first keeps them only when they are one
+  whole generation, the Spark twin of the oracles' guard.
+- Oracles filter table stamps with ``fingerprint_where`` and
+  self-count stamps with ``n_src = (SELECT count(*) ...)``.
 """
 
 from __future__ import annotations
@@ -161,11 +177,12 @@ def _pid_alive(pid: int) -> bool:
 
 
 def run_scratch(name: str) -> str:
-    """Per-process scratch dir for the audit-scratch protocol:
-    ``$TMPDIR/a3_fp_{name}_uid{uid}_pid{pid}``. Same path for the
-    Spark writer and the DuckDB oracle inside one process; distinct
-    across processes. Registered for atexit removal; stale siblings
-    whose owning pid is dead are pruned on first use."""
+    """Per-process scratch dir ``$TMPDIR/a3_fp_{name}_uid{uid}_pid{pid}``:
+    the path an audit scratch is written to (``write_scratch``), read
+    back from, and named by its oracle's SQL, so it is fixed when the
+    module imports. Same path for Spark and DuckDB inside one process;
+    distinct across processes. Registered for atexit removal; stale
+    siblings whose owning pid is dead are pruned on first use."""
     base = tempfile.gettempdir()
     if name not in _PRUNED_NAMES:
         _PRUNED_NAMES.add(name)
@@ -183,38 +200,6 @@ def run_scratch(name: str) -> str:
     if path not in _RUN_SCRATCH_DIRS:
         _RUN_SCRATCH_DIRS.append(path)
     return path
-
-
-def read_stamped_scratch(spark: SparkSession, path: str) -> DataFrame:
-    """Spark-side twin of the audit oracles' staleness guard
-    (``WHERE n_src = (SELECT count(*) ...)``) over a stamped scratch:
-    keep rows only when every row's ``n_src`` stamp equals the actual
-    row count, then drop the stamp. A torn read mixing rows from two
-    fixture generations fails the equality on at least one side and
-    disagrees loudly (row-count mismatch) instead of silently passing
-    mixed-generation bytes. The guard is one broadcast of a 1-row
-    count frame — no extra shuffle.
-
-    The count-equality alone is not strictly loud: a surviving subset
-    whose row total coincidentally equals one generation's stamp (4
-    rows stamped 5 plus 1 row stamped 4 totals 5) would pass the
-    filter. The broadcast frame therefore also carries
-    countDistinct(n_src); ANY mixed-generation read (>1 distinct
-    stamp) yields zero rows unconditionally, no coincidence possible
-    (ADVICE r11)."""
-    raw = spark.read.parquet(path)
-    total = raw.agg(
-        F.count("*").cast("long").alias("n_total_rows"),
-        F.countDistinct("n_src").cast("long").alias("n_generations"),
-    )
-    return (
-        raw.crossJoin(F.broadcast(total))
-        .filter(
-            (F.col("n_src") == F.col("n_total_rows"))
-            & (F.col("n_generations") == F.lit(1))
-        )
-        .drop("n_src", "n_total_rows", "n_generations")
-    )
 
 
 def fresh_scratch(prefix: str) -> str:
@@ -324,18 +309,73 @@ def table_fingerprint(
     )
 
 
-def stamp(df: DataFrame, fp: tuple[int, int]) -> DataFrame:
-    """``df`` with the ``table_fingerprint`` stamp appended as literal
-    bigint columns ``n_src`` and ``src_ck`` — the rows and column order
-    of a crossJoin with the 1-row fingerprint frame, planned as a
-    projection: no local relation, no broadcast job, no Python worker
-    to serialize the relation. A null ``src_ck`` (empty table) stays a
-    typed null."""
+#: The stamp columns a scratch row may carry, in the order written.
+_STAMP_COLS = ("n_src", "src_ck")
+
+
+def stamp(df: DataFrame, fp: tuple[int, int] | None) -> DataFrame:
+    """``df`` with the audit stamp appended as literal bigint columns,
+    planned as a projection: no join, no broadcast job, no Python
+    worker. ``fp``, a ``table_fingerprint`` tuple, gives ``n_src`` and
+    ``src_ck`` (a null ``src_ck``, from an empty table, stays a typed
+    null). ``None`` gives ``n_src`` alone, the literal of
+    ``df.count()`` (a job run here): the rows and column order of the
+    old crossJoin with ``df``'s 1-row count."""
+    if fp is None:
+        return df.select(
+            "*", F.lit(df.count()).cast("long").alias("n_src")
+        )
     n, ck = fp
     return df.select(
         "*",
         F.lit(n).cast("long").alias("n_src"),
         F.lit(ck).cast("long").alias("src_ck"),
+    )
+
+
+def write_scratch(
+    df: DataFrame, path: str, fp: tuple[int, int] | None = None
+) -> None:
+    """Overwrite the audit scratch at ``path`` with ``df``, stamped
+    (``stamp``), as one parquet file. With ``fp=None`` the count and
+    the write each run ``df``: pin a frame that is costly to rerun."""
+    stamp(df, fp).repartition(1).write.mode("overwrite").parquet(path)
+
+
+def read_scratch(spark: SparkSession, path: str) -> DataFrame:
+    """The rows of the audit scratch at ``path``, without the stamp."""
+    return spark.read.parquet(path).drop(*_STAMP_COLS)
+
+
+def read_stamped_scratch(spark: SparkSession, path: str) -> DataFrame:
+    """Spark-side twin of the audit oracles' staleness guard
+    (``WHERE n_src = (SELECT count(*) ...)``) over a stamped scratch:
+    keep rows only when every row's ``n_src`` stamp equals the actual
+    row count, then drop every stamp column present. A torn read
+    mixing rows from two fixture generations fails the equality on at
+    least one side and disagrees loudly (row-count mismatch) instead
+    of silently passing mixed-generation bytes. The guard is one
+    broadcast of a 1-row count frame — no extra shuffle.
+
+    The count-equality alone is not strictly loud: a surviving subset
+    whose row total coincidentally equals one generation's stamp (4
+    rows stamped 5 plus 1 row stamped 4 totals 5) would pass the
+    filter. The broadcast frame therefore also carries
+    countDistinct(n_src); ANY mixed-generation read (>1 distinct
+    stamp) yields zero rows unconditionally, no coincidence possible
+    (ADVICE r11)."""
+    raw = spark.read.parquet(path)
+    total = raw.agg(
+        F.count("*").cast("long").alias("n_total_rows"),
+        F.countDistinct("n_src").cast("long").alias("n_generations"),
+    )
+    return (
+        raw.crossJoin(F.broadcast(total))
+        .filter(
+            (F.col("n_src") == F.col("n_total_rows"))
+            & (F.col("n_generations") == F.lit(1))
+        )
+        .drop(*_STAMP_COLS, "n_total_rows", "n_generations")
     )
 
 

@@ -41,11 +41,12 @@ from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
+    read_scratch,
     run_scratch,
-    stamp,
     table_fingerprint,
     table,
     table_path,
+    write_scratch,
 )
 from a3_fp_bigdata_spark import stages
 from a3_fp_bigdata_spark.registry import query
@@ -239,10 +240,10 @@ def ml1_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-cluster/coverage invariants (no SQL oracle can exist for the
     fit)."""
     final, _, _, _ = fit_transform(spark, sf_dir)
-    back = _write_fingerprinted(
-        final.select("c_custkey", "cluster"), spark, sf_dir,
-        _ML1_ASSIGN_SCRATCH,
-    )
+    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
+    assign = final.select("c_custkey", "cluster")
+    write_scratch(assign, _ML1_ASSIGN_SCRATCH, fp)
+    back = read_scratch(spark, _ML1_ASSIGN_SCRATCH)
     return (
         back.groupBy("cluster")
         .agg(F.count("*").alias("n"))
@@ -257,7 +258,10 @@ def ml1_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: both engines from the same materialized predictions, so the
 #: aggregation surface is value-attested even though the fit itself
 #: admits no SQL oracle. Same division of labor as ml5's calibration
-#: audit, promoted onto the queries themselves.
+#: audit, promoted onto the queries themselves. Rows carry the CUSTOMER
+#: table's fingerprint. No pin: each frame feeds exactly ONE write (the
+#: read-back is a fresh scan of the scratch) — persisting a
+#: single-consumer frame just burns executor memory (ADVICE r13).
 _ML2_SCORED_SCRATCH = run_scratch("ml2_scored")
 _ML3_PRED_SCRATCH = run_scratch("ml3_preds")
 
@@ -265,21 +269,6 @@ _ML2_COLS = (
     "c_custkey", "c_acctbal", CATEGORICAL, "order_cnt",
     "total_spent", "avg_order", "cluster", "PredictedRating",
 )
-
-
-def _write_fingerprinted(df: DataFrame, spark, sf_dir: str, scratch: str):
-    """Stamp rows with the CUSTOMER table's (count, key-checksum)
-    fingerprint and overwrite the scratch — stale/foreign scratch
-    yields an empty oracle side and a red mismatch, never a false
-    PASS. Returns the read-back with the stamp dropped."""
-    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
-    # no pin: the frame feeds exactly ONE write (the read-back is a
-    # fresh scan of the scratch) — persisting a single-consumer frame
-    # just burns executor memory (ADVICE r13)
-    stamp(df, fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(scratch)
-    return spark.read.parquet(scratch).drop("n_src", "src_ck")
 
 
 @query(
@@ -303,7 +292,9 @@ def ml2_rf_score_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the same total order and LIMIT independently, so the
     selection surface (sort keys, tie-break, cut) is value-attested."""
     final, _, _, _ = fit_transform(spark, sf_dir)
-    back = _write_fingerprinted(final, spark, sf_dir, _ML2_SCORED_SCRATCH)
+    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
+    write_scratch(final, _ML2_SCORED_SCRATCH, fp)
+    back = read_scratch(spark, _ML2_SCORED_SCRATCH)
     # desc_nulls_last EXPLICITLY: Spark's desc already sorts nulls
     # last, but DuckDB's DESC puts them FIRST — both sides pin the
     # same null placement so the total order can't diverge if the
@@ -372,7 +363,9 @@ def ml3_training_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("pred_micro"),
     )
-    back = _write_fingerprinted(pairs, spark, sf_dir, _ML3_PRED_SCRATCH)
+    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
+    write_scratch(pairs, _ML3_PRED_SCRATCH, fp)
+    back = read_scratch(spark, _ML3_PRED_SCRATCH)
     e_d = (
         (F.col("label_micro") - F.col("pred_micro")).cast("double")
         / _ML3_MICRO

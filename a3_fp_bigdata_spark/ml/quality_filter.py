@@ -38,9 +38,13 @@ from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
+    read_scratch,
+    read_stamped_scratch,
     run_scratch,
     table,
+    table_fingerprint,
     table_path,
+    write_scratch,
 )
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
@@ -160,8 +164,6 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derive the confusion cells (exact int64 counts + micro-sum, one
     shared division construction, half_up to 2 decimals). The fit
     itself stays pinned by pytest's holdout-accuracy floor."""
-    from a3_fp_bigdata_spark.data import stamp, table, table_fingerprint
-
     scored, _ = fit_score(spark, sf_dir)
     rows = scored.select(
         "doc_id",
@@ -173,10 +175,8 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("p_micro"),
     )
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    stamp(rows, fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_ML4_SCORE_SCRATCH)
-    back = spark.read.parquet(_ML4_SCORE_SCRATCH).drop("n_src", "src_ck")
+    write_scratch(rows, _ML4_SCORE_SCRATCH, fp)
+    back = read_scratch(spark, _ML4_SCORE_SCRATCH)
     return (
         back.groupBy("in_fit", "label", "keep")
         .agg(
@@ -194,8 +194,10 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: materializes the model's scores in EXACT integer micro-units, and
 #: DuckDB re-derives the calibration table from the same bytes. The
 #: per-process run_scratch path removes the concurrent-writer hazard;
-#: n_src is still stamped so a torn read across generations within one
-#: process disagrees loudly.
+#: n_src is still stamped, and both engines check it (the oracle's
+#: WHERE n_src = count(*), the Spark read-back's read_stamped_scratch),
+#: so a torn read across generations within one process disagrees
+#: loudly.
 _ML5_SCRATCH = run_scratch("ml5_calib")
 
 #: Reliability binning: micro-unit scores 0..1_000_000 into 10 equal
@@ -263,12 +265,9 @@ def ml5_calibration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("p_u"),
     )
-    stamp = holdout.agg(F.count("*").cast("long").alias("n_src"))
-    holdout.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_ML5_SCRATCH)
+    write_scratch(holdout, _ML5_SCRATCH)
     s = (
-        spark.read.parquet(_ML5_SCRATCH)
+        read_stamped_scratch(spark, _ML5_SCRATCH)
         .filter(F.col("in_fit") == 0)
         .select("label_i", "p_u")
     )

@@ -27,7 +27,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch
+from a3_fp_bigdata_spark.data import (
+    read_stamped_scratch,
+    run_scratch,
+    write_scratch,
+)
 from a3_fp_bigdata_spark.pickling import ship_by_value
 from a3_fp_bigdata_spark.registry import query
 
@@ -213,19 +217,15 @@ def mm5_audio_dir_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregation is bit-identical. The waveform VALUES stay pinned
     by pytest against the generator's analytic signals
     (tools/make_wav_fixtures.py: sine RMS = A/sqrt(2), square = A)."""
-    from a3_fp_bigdata_spark.data import read_stamped_scratch
     from a3_fp_bigdata_spark.functions.rounding import half_up
-    from a3_fp_bigdata_spark.multimodal.binary_files import (
-        _write_stamped,
-        image_dir_source,
-    )
+    from a3_fp_bigdata_spark.multimodal.binary_files import image_dir_source
     from a3_fp_bigdata_spark.registry import pin
 
     media = image_dir_source(spark, FIXTURE_DIR, glob="*.wav").withColumn(
         "media_type", F.lit("audio/wav")  # source labels by extension
     )
     samples = pin(sample_rows(media))  # decode once: stamp + scratch
-    _write_stamped(samples, _MM5_SAMPLE_SCRATCH)
+    write_scratch(samples, _MM5_SAMPLE_SCRATCH)
     back = read_stamped_scratch(spark, _MM5_SAMPLE_SCRATCH)
     per = back.groupBy("media_id").agg(
         (F.max("idx") + 1).alias("nf"),

@@ -40,7 +40,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import read_stamped_scratch, run_scratch
+from a3_fp_bigdata_spark.data import (
+    read_stamped_scratch,
+    run_scratch,
+    write_scratch,
+)
 from a3_fp_bigdata_spark.multimodal.audio import decode_wav
 from a3_fp_bigdata_spark.pickling import ship_by_value
 from a3_fp_bigdata_spark.registry import pin, query
@@ -177,10 +181,7 @@ def mm9_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin: the decode+hash frame feeds both the count stamp and the
     # scratch rows (without it the mapInPandas decode runs twice)
     hashes = pin(audio_fp_features(media).select("media_id", "afp"))
-    stamp = hashes.agg(F.count("*").cast("long").alias("n_src"))
-    hashes.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_MM9_AFP_SCRATCH)
+    write_scratch(hashes, _MM9_AFP_SCRATCH)
     fps = pin(
         read_stamped_scratch(spark, _MM9_AFP_SCRATCH)
         .select(

@@ -23,8 +23,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import read_stamped_scratch, run_scratch
-from a3_fp_bigdata_spark.multimodal.images import extract_features
+from a3_fp_bigdata_spark.data import (
+    read_stamped_scratch,
+    run_scratch,
+    write_scratch,
+)
+from a3_fp_bigdata_spark.multimodal.images import (  # noqa: F401
+    extract_features,  # re-exported: callers reach it from here
+)
 from a3_fp_bigdata_spark.registry import pin, query
 
 #: Committed icon fixture set (6 deterministic PNGs — incl. one
@@ -105,15 +111,6 @@ def _image_features_oracle(scratch: str) -> str:
     )
 
 
-def _write_stamped(df: DataFrame, scratch: str) -> None:
-    """Stamp every row with the frame's total count and overwrite the
-    scratch (the mm7 protocol: a torn/stale read disagrees loudly)."""
-    stamp = df.agg(F.count("*").cast("long").alias("n_src"))
-    df.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(scratch)
-
-
 def _attested_image_features(
     spark: SparkSession, fixture_dir: str, glob: str, scratch: str
 ) -> DataFrame:
@@ -121,7 +118,7 @@ def _attested_image_features(
 
     media = image_dir_source(spark, fixture_dir, glob=glob)
     px = pin(pixel_rows(media))  # decode once: feeds stamp + scratch
-    _write_stamped(px, scratch)
+    write_scratch(px, scratch)
     back = read_stamped_scratch(spark, scratch)
     return (
         back.groupBy("media_id")
@@ -147,7 +144,7 @@ def _attested_frame_features(
 
     media = image_dir_source(spark, fixture_dir, glob=glob)
     px = pin(frame_pixel_rows(media, decode_frames))
-    _write_stamped(px, scratch)
+    write_scratch(px, scratch)
     back = read_stamped_scratch(spark, scratch)
     return (
         back.groupBy("media_id", "frame_idx")
@@ -415,7 +412,7 @@ def mm17_alpha_webp_features(
             schema="media_id long, y int, x int, r int, g int, b int, a int",
         )
     )
-    _write_stamped(px, _MM17_PX_SCRATCH)
+    write_scratch(px, _MM17_PX_SCRATCH)
     back = read_stamped_scratch(spark, _MM17_PX_SCRATCH)
     return (
         back.groupBy("media_id")
@@ -484,7 +481,7 @@ def mm19_resize_attested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = image_dir_source(spark, FIXTURE_DIR, glob="*.png")
     px = pin(pixel_rows(media))
-    _write_stamped(px, _MM19_PX_SCRATCH)
+    write_scratch(px, _MM19_PX_SCRATCH)
     # the read-back feeds BOTH the dims aggregate and the sample join:
     # pin it, or the scan + stamp-guard run twice (d9's measured
     # multi-reference rule)

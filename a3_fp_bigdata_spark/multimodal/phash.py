@@ -38,7 +38,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import read_stamped_scratch, run_scratch
+from a3_fp_bigdata_spark.data import (
+    read_stamped_scratch,
+    run_scratch,
+    write_scratch,
+)
 from a3_fp_bigdata_spark.multimodal.images import decode_image, resize_nn
 from a3_fp_bigdata_spark.pickling import ship_by_value
 from a3_fp_bigdata_spark.registry import query
@@ -194,10 +198,7 @@ def mm7_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin: the decode+hash frame feeds both the count stamp and the
     # scratch rows (without it the mapInPandas decode runs twice)
     hashes = pin(phash_features(media).select("media_id", "dhash"))
-    stamp = hashes.agg(F.count("*").cast("long").alias("n_src"))
-    hashes.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_MM7_PHASH_SCRATCH)
+    write_scratch(hashes, _MM7_PHASH_SCRATCH)
     fps = pin(
         read_stamped_scratch(spark, _MM7_PHASH_SCRATCH)
         .select(

@@ -17,10 +17,11 @@ from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
+    read_scratch,
     run_scratch,
-    stamp,
     table_fingerprint,
     table,
+    write_scratch,
 )
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
@@ -271,8 +272,6 @@ def a11_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: write time and the oracle filters on both against its live events
 #: view, so scratch from a different sf — or a regenerated corpus at
 #: the same cardinality — red-flags as a row/hash mismatch).
-import os as _os
-
 _A19_SCRATCH = run_scratch("a19_approx_audit")
 
 
@@ -315,9 +314,8 @@ def a19_approx_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp = table_fingerprint(spark, sf_dir, "events", "event_id", table_fn=table)
-    approx = stamp(approx, fp)
-    approx.repartition(1).write.mode("overwrite").parquet(_A19_SCRATCH)
-    back = spark.read.parquet(_A19_SCRATCH).drop("n_src", "src_ck")
+    write_scratch(approx, _A19_SCRATCH, fp)
+    back = read_scratch(spark, _A19_SCRATCH)
     exact = (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -403,10 +401,8 @@ def a20_quantile_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp = table_fingerprint(spark, sf_dir, "events", "event_id", table_fn=table)
-    stamp(ap, fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_A20_SCRATCH)
-    back = spark.read.parquet(_A20_SCRATCH).drop("n_src", "src_ck")
+    write_scratch(ap, _A20_SCRATCH, fp)
+    back = read_scratch(spark, _A20_SCRATCH)
     vals = ev.filter(F.col("value").isNotNull()).select(
         "event_type", "value"
     )

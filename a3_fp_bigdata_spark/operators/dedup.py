@@ -25,11 +25,12 @@ from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
     fingerprint_where,
+    read_scratch,
     run_scratch,
-    stamp,
     table_fingerprint,
     table,
     table_path,
+    write_scratch,
 )
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
@@ -413,10 +414,8 @@ def d4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # snapshot, SHARED with d11's nightly probe — computing
     # the 32-hash agg once per corpus snapshot is the production shape.
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    stamp(staged_raw_buckets(spark, sf_dir), fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D4_SIG_SCRATCH)
-    back = spark.read.parquet(_D4_SIG_SCRATCH).drop("n_src", "src_ck")
+    write_scratch(staged_raw_buckets(spark, sf_dir), _D4_SIG_SCRATCH, fp)
+    back = read_scratch(spark, _D4_SIG_SCRATCH)
     # Candidate pairs WITHOUT a bucket self-join: collect each bucket's
     # doc list and explode its pairs in place. The super-bucket cap is
     # applied at GROUP level (size(ds) <= MAX_BUCKET_DOCS) instead of
@@ -564,9 +563,9 @@ def d4_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny write + two counting joins on top of the shared staged
     shingle/bucket tables."""
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    pairs = stamp(d4_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"), fp)
-    pairs.repartition(1).write.mode("overwrite").parquet(_D4_AUDIT_SCRATCH)
-    back = spark.read.parquet(_D4_AUDIT_SCRATCH).drop("n_src", "src_ck")
+    pairs = d4_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    write_scratch(pairs, _D4_AUDIT_SCRATCH, fp)
+    back = read_scratch(spark, _D4_AUDIT_SCRATCH)
     exact = d3_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     outside = back.join(exact, ["doc_a", "doc_b"], "left_anti")
     return back.agg(
@@ -676,10 +675,8 @@ def d5_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no pin: th feeds exactly one write; the aggregation reads the
     # scratch back, not th (d9 pins its READ-BACK because it feeds
     # both self-join sides — different shape)
-    stamp(th, fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D5_TOK_SCRATCH)
-    back = spark.read.parquet(_D5_TOK_SCRATCH).drop("n_src", "src_ck")
+    write_scratch(th, _D5_TOK_SCRATCH, fp)
+    back = read_scratch(spark, _D5_TOK_SCRATCH)
     return _simhash_from_token_hashes(back, _D5_NBITS)
 
 
@@ -977,12 +974,10 @@ def d9_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = simhash_frame(spark, sf_dir, SIMHASH_PAIR_BITS).select(
         "doc_id", "simhash"
     )
-    stamp(sh, fp).repartition(1).write.mode("overwrite").parquet(_D9_FP_SCRATCH)
+    write_scratch(sh, _D9_FP_SCRATCH, fp)
     # the read-back feeds BOTH self-join sides: pin it, or the scan
     # runs twice (dedup.py's measured multi-reference rule)
-    fps = pin(
-        spark.read.parquet(_D9_FP_SCRATCH).drop("n_src", "src_ck")
-    )
+    fps = pin(read_scratch(spark, _D9_FP_SCRATCH))
     return _pairs_from_simhash(fps)
 
 
@@ -1179,24 +1174,14 @@ def d9_pigeonhole_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = simhash_frame(spark, sf_dir, SIMHASH_PAIR_BITS).select(
         "doc_id", "simhash"
     )
-    stamp(sh, fp).repartition(1).write.mode("overwrite").parquet(
-        _D9_AUDIT_FP_SCRATCH
-    )
+    write_scratch(sh, _D9_AUDIT_FP_SCRATCH, fp)
     # the pairs under audit derive from the MATERIALIZED fingerprints
     # (same shared derivation d9 runs; simhash_frame is deterministic,
     # so these are exactly d9's pairs — without paying the 48-column
     # token-vote aggregation a second time)
-    fps = pin(
-        spark.read.parquet(_D9_AUDIT_FP_SCRATCH).drop(
-            "n_src", "src_ck"
-        )
-    )
-    stamp(_pairs_from_simhash(fps), fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D9_AUDIT_PAIRS_SCRATCH)
-    prs = spark.read.parquet(_D9_AUDIT_PAIRS_SCRATCH).drop(
-        "n_src", "src_ck"
-    )
+    fps = pin(read_scratch(spark, _D9_AUDIT_FP_SCRATCH))
+    write_scratch(_pairs_from_simhash(fps), _D9_AUDIT_PAIRS_SCRATCH, fp)
+    prs = read_scratch(spark, _D9_AUDIT_PAIRS_SCRATCH)
 
     # Spark's own re-derivation: ALL-PAIRS hamming, restricted to
     # pairs sharing >= 1 uncapped band (semi-join against the banded
@@ -1463,12 +1448,8 @@ def d11_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    stamp(d11_incremental_lsh(spark, sf_dir), fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D11_AUDIT_SCRATCH)
-    back = pin(
-        spark.read.parquet(_D11_AUDIT_SCRATCH).drop("n_src", "src_ck")
-    )
+    write_scratch(d11_incremental_lsh(spark, sf_dir), _D11_AUDIT_SCRATCH, fp)
+    back = pin(read_scratch(spark, _D11_AUDIT_SCRATCH))
     exact = pin(
         d3_ngram_jaccard(spark, sf_dir).withColumnRenamed(
             "jaccard", "jaccard_exact"

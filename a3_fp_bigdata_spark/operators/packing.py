@@ -40,9 +40,9 @@ from a3_fp_bigdata_spark.data import (
     fingerprint_where,
     read_stamped_scratch,
     run_scratch,
-    stamp,
     table_fingerprint,
     table,
+    write_scratch,
 )
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
@@ -2472,10 +2472,8 @@ def pk16_bestfit_pack_audit(
         )
     )
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    stamp(assignment, fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_PK16_SCRATCH)
-    back = read_stamped_scratch(spark, _PK16_SCRATCH).drop("src_ck")
+    write_scratch(assignment, _PK16_SCRATCH, fp)
+    back = read_stamped_scratch(spark, _PK16_SCRATCH)
     bins = back.groupBy("shard", "bin_id").agg(
         F.sum("cost").cast("long").alias("fill"),
         F.count("*").cast("long").alias("n_docs_bin"),

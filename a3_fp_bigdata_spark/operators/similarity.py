@@ -25,11 +25,12 @@ from pyspark.sql import functions as F
 from a3_fp_bigdata_spark.data import (
     dir_stage,
     fingerprint_where,
+    read_scratch,
     run_scratch,
-    stamp,
     table_fingerprint,
     table,
     table_path,
+    write_scratch,
 )
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark import stages
@@ -479,10 +480,8 @@ def sim3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
         F.col("cell").isin(probe_cells).alias("probed"),
     )
-    stamp(scr, fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_SIM3_SCRATCH)
-    back = spark.read.parquet(_SIM3_SCRATCH).drop("n_src", "src_ck")
+    write_scratch(scr, _SIM3_SCRATCH, fp)
+    back = read_scratch(spark, _SIM3_SCRATCH)
 
     q = table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") == 0
@@ -697,15 +696,11 @@ def d6_gemm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tasks, each one BLAS matmul)."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    stamp(_d6_gemm_candidates(emb), fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D6_AUDIT_SCRATCH)
+    write_scratch(_d6_gemm_candidates(emb), _D6_AUDIT_SCRATCH, fp)
     # pin: cand feeds five aggregates and exact feeds two (the d9/d11
     # audits' measured multi-reference rule — without it each count
     # re-scans the scratch parquet / re-runs the quadratic join)
-    cand = pin(
-        spark.read.parquet(_D6_AUDIT_SCRATCH).drop("n_src", "src_ck")
-    )
+    cand = pin(read_scratch(spark, _D6_AUDIT_SCRATCH))
 
     # independent exact set: ALL pairs via the JVM fold expression — a
     # broadcast-nested-loop join on vec_a < vec_b (quadratic: the
@@ -1166,9 +1161,9 @@ def sim11_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seed-specific path via the d4-audit scratch protocol).
     tests/test_similarity.py separately pins recall >= 0.8."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    hits = stamp(sim3_ivf_ann(spark, sf_dir).select("vec_id"), fp)
-    hits.repartition(1).write.mode("overwrite").parquet(_SIM11_SCRATCH)
-    back = spark.read.parquet(_SIM11_SCRATCH).drop("n_src", "src_ck")
+    hits = sim3_ivf_ann(spark, sf_dir).select("vec_id")
+    write_scratch(hits, _SIM11_SCRATCH, fp)
+    back = read_scratch(spark, _SIM11_SCRATCH)
     exact = sim1_cosine_topk(spark, sf_dir).limit(ANN_TOPK).select("vec_id")
     n_hit = exact.join(back, "vec_id", "left_semi").agg(
         F.count("*").cast("long").alias("n_hit")
@@ -1407,10 +1402,8 @@ def sim12_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below (and the oracle) read it back, so the attested selection
     # is exactly the bytes the quantizer produced
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    stamp(shortlist, fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_SIM12_SL_SCRATCH)
-    back = spark.read.parquet(_SIM12_SL_SCRATCH).drop("n_src", "src_ck")
+    write_scratch(shortlist, _SIM12_SL_SCRATCH, fp)
+    back = read_scratch(spark, _SIM12_SL_SCRATCH)
     qrow = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb")
     )
@@ -1464,9 +1457,9 @@ def sim12_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly; any quantization loss shows up identically on both
     engines. tests/test_similarity.py separately pins recall >= 0.8."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    hits = stamp(sim12_pq_ann(spark, sf_dir).select("vec_id"), fp)
-    hits.repartition(1).write.mode("overwrite").parquet(_SIM12_SCRATCH)
-    back = spark.read.parquet(_SIM12_SCRATCH).drop("n_src", "src_ck")
+    hits = sim12_pq_ann(spark, sf_dir).select("vec_id")
+    write_scratch(hits, _SIM12_SCRATCH, fp)
+    back = read_scratch(spark, _SIM12_SCRATCH)
     exact = sim1_cosine_topk(spark, sf_dir).limit(ANN_TOPK).select("vec_id")
     n_hit = exact.join(back, "vec_id", "left_semi").agg(
         F.count("*").cast("long").alias("n_hit")
@@ -1613,12 +1606,9 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment as the IVF index's own materialized artifact."""
     assigned = _semdedup_cells(spark, sf_dir)
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    stamp(assigned.select("vec_id", "cell"), fp).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D17_CELLS_SCRATCH)
+    write_scratch(assigned.select("vec_id", "cell"), _D17_CELLS_SCRATCH, fp)
     back = pin(
-        spark.read.parquet(_D17_CELLS_SCRATCH)
-        .drop("n_src", "src_ck")
+        read_scratch(spark, _D17_CELLS_SCRATCH)
         .join(
             table(spark, sf_dir, "embeddings").select(
                 "vec_id", "embedding"
@@ -1675,10 +1665,8 @@ def materialize_d17_verdict(
     the embeddings back."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
     verdict = _semdedup_verdict(_semdedup_cells(spark, sf_dir))
-    stamp(verdict, fp).repartition(1).write.mode("overwrite").parquet(
-        _D17_SCRATCH
-    )
-    return pin(spark.read.parquet(_D17_SCRATCH).drop("n_src", "src_ck"))
+    write_scratch(verdict, _D17_SCRATCH, fp)
+    return pin(read_scratch(spark, _D17_SCRATCH))
 
 
 @query(

@@ -372,11 +372,9 @@ def apply_changelog(
     return untouched.unionByName(survivors)
 
 
-@query(
-    "u5_cdc_apply_changelog",
-    oracle=f"""
-    WITH changelog AS (
-      SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
+#: u5's changelog over ``customer`` as DuckDB rows (op, seq, c_custkey,
+#: c_name, c_acctbal, c_mktsegment); src9 applies it as its version 1.
+U5_CHANGELOG_SQL = f"""SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
              {half_up_sql('c_acctbal + 500', 2)} AS c_acctbal,
              c_mktsegment
       FROM customer WHERE c_custkey % 10 = 0
@@ -386,44 +384,14 @@ def apply_changelog(
       UNION ALL
       SELECT 'I', 1, 8000000 + c_custkey,
              'cdc#' || CAST(c_custkey AS VARCHAR), 0.0, c_mktsegment
-      FROM customer WHERE c_custkey % 100 = 0
-    ), latest AS (
-      SELECT * FROM (
-        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
-               row_number() OVER (PARTITION BY c_custkey
-                                  ORDER BY seq DESC, op DESC) AS rn
-        FROM changelog
-      ) WHERE rn = 1
-    )
-    SELECT c_custkey, c_name, {half_up_sql('c_acctbal', 2)} AS c_acctbal,
-           c_mktsegment
-    FROM (
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
-      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest)
-      UNION ALL
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest
-      WHERE op <> 'D'
-    )
-    """,
-)
-def u5_cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full CDC apply — the op u1's upsert cannot express: a changelog
-    with INSERTS, UPDATES and DELETES, where one key may carry several
-    entries and the LATEST (by seq) wins. Derivation is deterministic:
-    10% of customers get a balance update (seq 1), every 7th key a
-    delete (seq 2 — so keys divisible by 70 exercise update-then-
-    delete compaction: the delete wins), 1% insert as fresh keys. The
-    oracle re-derives the same changelog and replays the compaction
-    with a plain ROW_NUMBER.
+      FROM customer WHERE c_custkey % 100 = 0"""
 
-    Scale: the window runs over the changelog (a CDC batch, not the
-    corpus); the base pays one key-equality anti-join, co-located
-    under bucketing — MERGE INTO's engine-portable twin with delete
-    semantics."""
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
-    )
-    src = table(spark, sf_dir, "customer")
+
+def u5_changelog(src: DataFrame) -> DataFrame:
+    """u5's changelog over the customer frame ``src``, the Spark side
+    of ``U5_CHANGELOG_SQL``: a +500 balance update for every 10th key
+    (seq 1), a delete for every 7th (seq 2), and a fresh key for every
+    100th (seq 1)."""
     updates = src.filter(F.col("c_custkey") % 10 == 0).select(
         F.lit("U").alias("op"),
         F.lit(1).alias("seq"),
@@ -450,8 +418,68 @@ def u5_cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).alias("c_acctbal"),
         "c_mktsegment",
     )
-    changelog = updates.unionByName(deletes).unionByName(inserts)
-    merged = apply_changelog(cust, changelog, "c_custkey")
+    return updates.unionByName(deletes).unionByName(inserts)
+
+
+def changelog_apply_sql(
+    base: str, log_sql: str, suffix: str = ""
+) -> tuple[str, str]:
+    """DuckDB twin of ``apply_changelog`` over customer-shaped rows:
+    ``(ctes, applied)``. ``ctes`` defines ``changelog{suffix}`` (the
+    ``log_sql`` rows) and ``latest{suffix}`` (the latest op per key,
+    by seq then op); ``applied`` selects ``base``'s untouched rows
+    plus the latest non-delete rows."""
+    ctes = f"""changelog{suffix} AS (
+      {log_sql}
+    ), latest{suffix} AS (
+      SELECT * FROM (
+        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
+               row_number() OVER (PARTITION BY c_custkey
+                                  ORDER BY seq DESC, op DESC) AS rn
+        FROM changelog{suffix}
+      ) WHERE rn = 1
+    )"""
+    applied = f"""SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM {base}
+      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest{suffix})
+      UNION ALL
+      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest{suffix}
+      WHERE op <> 'D'"""
+    return ctes, applied
+
+
+def _u5_oracle() -> str:
+    ctes, applied = changelog_apply_sql("customer", U5_CHANGELOG_SQL)
+    return f"""
+    WITH {ctes}
+    SELECT c_custkey, c_name, {half_up_sql('c_acctbal', 2)} AS c_acctbal,
+           c_mktsegment
+    FROM (
+      {applied}
+    )
+    """
+
+
+@query("u5_cdc_apply_changelog", oracle=_u5_oracle())
+def u5_cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full CDC apply — the op u1's upsert cannot express: a changelog
+    with INSERTS, UPDATES and DELETES, where one key may carry several
+    entries and the LATEST (by seq) wins. Derivation is deterministic:
+    10% of customers get a balance update (seq 1), every 7th key a
+    delete (seq 2 — so keys divisible by 70 exercise update-then-
+    delete compaction: the delete wins), 1% insert as fresh keys. The
+    oracle re-derives the same changelog and replays the compaction
+    with a plain ROW_NUMBER.
+
+    Scale: the window runs over the changelog (a CDC batch, not the
+    corpus); the base pays one key-equality anti-join, co-located
+    under bucketing — MERGE INTO's engine-portable twin with delete
+    semantics."""
+    cust = table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
+    )
+    merged = apply_changelog(
+        cust, u5_changelog(table(spark, sf_dir, "customer")), "c_custkey"
+    )
     return merged.select(
         "c_custkey",
         "c_name",

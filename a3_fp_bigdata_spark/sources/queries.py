@@ -13,6 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from a3_fp_bigdata_spark.data import dir_stage, run_scratch, table, table_path
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
+from a3_fp_bigdata_spark.operators.upsert import (
+    U5_CHANGELOG_SQL,
+    apply_changelog,
+    changelog_apply_sql,
+    u5_changelog,
+)
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
 from a3_fp_bigdata_spark.sources import csv_io, kafka_io, parquet_io
@@ -368,53 +374,22 @@ def src8_zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _src9_oracle() -> str:
-    return f"""
-    WITH log1 AS (
-      SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
-             {half_up_sql('c_acctbal + 500', 2)} AS c_acctbal,
-             c_mktsegment
-      FROM customer WHERE c_custkey % 10 = 0
-      UNION ALL
-      SELECT 'D', 2, c_custkey, c_name, c_acctbal, c_mktsegment
-      FROM customer WHERE c_custkey % 7 = 0
-      UNION ALL
-      SELECT 'I', 1, 8000000 + c_custkey,
-             'cdc#' || CAST(c_custkey AS VARCHAR), 0.0, c_mktsegment
-      FROM customer WHERE c_custkey % 100 = 0
-    ), latest1 AS (
-      SELECT * FROM (
-        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
-               row_number() OVER (PARTITION BY c_custkey
-                                  ORDER BY seq DESC, op DESC) AS rn
-        FROM log1
-      ) WHERE rn = 1
-    ), v1 AS (
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
-      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest1)
-      UNION ALL
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest1
-      WHERE op <> 'D'
-    ), log2 AS (
-      SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
+    # version 1 applies u5's changelog to customer; version 2 applies
+    # this second changelog, derived from version 1
+    log2 = f"""SELECT 'U' AS op, 1 AS seq, c_custkey, c_name,
              {half_up_sql('c_acctbal - 250', 2)} AS c_acctbal,
              c_mktsegment
       FROM v1 WHERE c_custkey % 9 = 0
       UNION ALL
       SELECT 'D', 2, c_custkey, c_name, c_acctbal, c_mktsegment
-      FROM v1 WHERE c_custkey % 11 = 0
-    ), latest2 AS (
-      SELECT * FROM (
-        SELECT op, c_custkey, c_name, c_acctbal, c_mktsegment,
-               row_number() OVER (PARTITION BY c_custkey
-                                  ORDER BY seq DESC, op DESC) AS rn
-        FROM log2
-      ) WHERE rn = 1
-    ), v2 AS (
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM v1
-      WHERE c_custkey NOT IN (SELECT c_custkey FROM latest2)
-      UNION ALL
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM latest2
-      WHERE op <> 'D'
+      FROM v1 WHERE c_custkey % 11 = 0"""
+    ctes1, v1 = changelog_apply_sql("customer", U5_CHANGELOG_SQL, "1")
+    ctes2, v2 = changelog_apply_sql("v1", log2, "2")
+    return f"""
+    WITH {ctes1}, v1 AS (
+      {v1}
+    ), {ctes2}, v2 AS (
+      {v2}
     )
     SELECT c_mktsegment,
            CAST(count(*) AS BIGINT) AS n_rows,
@@ -446,7 +421,6 @@ def src9_versioned_snapshot_read(
     log) with the same read surface."""
     import pyspark.sql.functions as F
 
-    from a3_fp_bigdata_spark.operators.upsert import apply_changelog
     from a3_fp_bigdata_spark.sources.parquet_io import (
         find_latest_data_path,
         write_parquet_overwrite,
@@ -456,34 +430,9 @@ def src9_versioned_snapshot_read(
     cols = ["c_custkey", "c_name", "c_acctbal", "c_mktsegment"]
     v0 = table(spark, sf_dir, "customer").select(*cols)
 
-    # changelog 1: u5's derivation (update %10 +500 seq1, delete %7
-    # seq2, insert %100 as fresh keys)
-    src = table(spark, sf_dir, "customer")
-    log1 = (
-        src.filter(F.col("c_custkey") % 10 == 0)
-        .select(
-            F.lit("U").alias("op"), F.lit(1).alias("seq"),
-            "c_custkey", "c_name",
-            half_up(F.col("c_acctbal") + 500, 2).alias("c_acctbal"),
-            "c_mktsegment",
-        )
-        .unionByName(
-            src.filter(F.col("c_custkey") % 7 == 0).select(
-                F.lit("D").alias("op"), F.lit(2).alias("seq"), *cols
-            )
-        )
-        .unionByName(
-            src.filter(F.col("c_custkey") % 100 == 0).select(
-                F.lit("I").alias("op"), F.lit(1).alias("seq"),
-                (F.col("c_custkey") + 8000000).alias("c_custkey"),
-                F.concat(
-                    F.lit("cdc#"), F.col("c_custkey").cast("string")
-                ).alias("c_name"),
-                F.lit(0.0).alias("c_acctbal"),
-                "c_mktsegment",
-            )
-        )
-    )
+    # changelog 1 is u5's (update %10 +500 seq1, delete %7 seq2,
+    # insert %100 as fresh keys)
+    log1 = u5_changelog(table(spark, sf_dir, "customer"))
     v1 = apply_changelog(v0, log1, "c_custkey")
 
     # write + re-read version 1 so changelog 2 derives from the DISK

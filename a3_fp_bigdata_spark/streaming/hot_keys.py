@@ -32,7 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import fresh_scratch, run_scratch, table
+from a3_fp_bigdata_spark.data import (
+    fresh_scratch,
+    read_stamped_scratch,
+    run_scratch,
+    table,
+    write_scratch,
+)
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.operators.aggregates import HH_K, HH_SHARDS
 from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
@@ -176,11 +182,8 @@ def st13_stream_hot_keys(
         )
         .select("tok", (F.col("s") - F.col("dec2")).alias("est"))
     )
-    stamp = final.agg(F.count("*").cast("long").alias("n_src"))
-    final.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_ST13_SCRATCH)
-    back = spark.read.parquet(_ST13_SCRATCH).drop("n_src")
+    write_scratch(final, _ST13_SCRATCH)
+    back = read_stamped_scratch(spark, _ST13_SCRATCH)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(TX.tokens(F.col("text"))).alias("tok"))
     exact = toks.groupBy("tok").agg(

@@ -3,6 +3,7 @@ on full SURVEY §2 family coverage (see registry.CANONICAL)."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 import subprocess
@@ -209,3 +210,30 @@ def test_rows_only_queries_are_exactly_the_known_five():
         "mm2_image_features",
         "tk1_bpe_merges",
     }
+
+
+def test_package_module_imports_are_all_used():
+    """Every name a package module imports at module level is used in
+    that module; a deliberate re-export says so with ``# noqa: F401``
+    on its import statement."""
+    unused = []
+    for path in sorted((_ROOT / "a3_fp_bigdata_spark").rglob("*.py")):
+        src = path.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__":
+                continue
+            span = lines[node.lineno - 1 : node.end_lineno]
+            if any("noqa: F401" in line for line in span):
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name not in used:
+                    unused.append(
+                        f"{path.relative_to(_ROOT)}:{node.lineno}: {name}"
+                    )
+    assert unused == []
